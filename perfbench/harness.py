@@ -74,11 +74,12 @@ def start_session(root: str, scratch: str, n_cores: int, ui: bool):
 
 
 class RssMonitor:
-    """Samples the memory of this process and all its descendants (driver,
-    JVM, Python workers) while ``armed``. Each process counts its
-    proportional set size, so pages that forked Python workers share are
-    counted once. Children the JVM spawns to run shell commands share its
-    address space until they exec; only java and python processes count."""
+    """Samples the summed resident memory of this process and all its
+    descendants (driver, JVM, Python workers) while ``armed``. Only java
+    and python processes count: children the JVM spawns to run shell
+    commands share its address space until they exec, and would count it
+    twice. RSS comes from statm, which the kernel answers from counters;
+    smaps_rollup (for PSS) would walk the JVM's page tables every sample."""
 
     def __init__(self, interval_s: float = 0.25) -> None:
         self.interval_s = interval_s
@@ -90,7 +91,7 @@ class RssMonitor:
         self._thread.start()
 
     def tree_rss(self) -> tuple[int, dict[str, int]]:
-        """Summed PSS of the tree in bytes, and its split by command name."""
+        """Summed RSS of the tree in bytes, and its split by command name."""
         children: dict[int, list[int]] = {}
         for entry in os.listdir("/proc"):
             if not entry.isdigit():

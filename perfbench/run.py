@@ -1,6 +1,6 @@
 """Benchmark command for usls_doc_spark.
 
-    python3 perfbench/run.py --workload html_extract --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload html_extract --seed 1 --seconds 12 --trace 0
 
 Run from the root of a checkout. Generates the workload's inputs from
 ``--seed``, starts a local Spark session on at most four pinned cores,
@@ -102,15 +102,15 @@ def run(args, spec: dict, scratch: pathlib.Path) -> dict:
     t0 = time.perf_counter()
     spark = harness.start_session(str(ROOT), str(scratch), len(cores), ui=bool(args.trace))
     session_s = time.perf_counter() - t0
-    wl = cls(spark, data_dir, stats, tracer, str(scratch))
-    t0 = time.perf_counter()
-    wl.warm()
-    warm_s = time.perf_counter() - t0
-    record["setup"] = {"generate_s": gen_s, "session_s": session_s, "warm_s": warm_s}
-    setup_s = statistics.median(gen_s) + session_s + warm_s
-
     monitor = harness.RssMonitor()
     try:
+        wl = cls(spark, data_dir, stats, tracer, str(scratch))
+        t0 = time.perf_counter()
+        wl.warm()
+        warm_s = time.perf_counter() - t0
+        record["setup"] = {"generate_s": gen_s, "session_s": session_s, "warm_s": warm_s}
+        setup_s = statistics.median(gen_s) + session_s + warm_s
+
         passes = measure(wl, args.seconds / (2 if args.trace else 1), "pass", monitor)
         record["passes_s"] = [p[0] for p in passes]
         job_s = statistics.median(record["passes_s"])
@@ -219,7 +219,8 @@ def main(argv=None) -> int:
           f"docs={record['inputs']['docs']} passes={q['n']} "
           f"job_s q1/median/q3={q['q1']:.3f}/{q['median']:.3f}/{q['q3']:.3f} "
           f"loadavg {record['loadavg_before'][0]:.2f}->{record['loadavg_after'][0]:.2f}")
-    print(f"error_rate {record['error_rate']:.6f} ({record['failed']}/{record['attempted']})")
+    print(f"error_rate {record['error_rate']:.6g} share "
+          f"({record['failed']} failed of {record['attempted']} checked)")
     for name, value in record["metrics"].items():
         print(f"{name} {value:.6g} {units[name]}")
     print(json.dumps({
