@@ -51,6 +51,8 @@ def start_session(root: str, scratch: str, n_cores: int, ui: bool):
     )
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(scratch, "spark-local")
+    # no hsperfdata files in /tmp from the launcher JVM or the driver JVM
+    os.environ["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"
     mem = driver_memory_mb()
     spark = (
         SparkSession.builder.master(f"local[{n_cores}]")
@@ -63,7 +65,8 @@ def start_session(root: str, scratch: str, n_cores: int, ui: bool):
         .config("spark.executorEnv.PYTHONPATH", root)
         .config("spark.sql.warehouse.dir", os.path.join(scratch, "warehouse"))
         .config("spark.driver.extraJavaOptions",
-                f"-Xms{mem}m -XX:+AlwaysPreTouch -Djava.io.tmpdir={tmp} -Dderby.system.home={scratch}")
+                f"-Xms{mem}m -XX:+AlwaysPreTouch -XX:-UsePerfData "
+                f"-Djava.io.tmpdir={tmp} -Dderby.system.home={scratch}")
         .config("spark.ui.enabled", str(ui).lower())
         .config("spark.ui.port", "0")
         .config("spark.ui.showConsoleProgress", "false")
