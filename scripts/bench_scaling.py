@@ -246,10 +246,9 @@ Installing CPU onnxruntime was attempted and is IMPOSSIBLE in this
 sandbox: the container has no network route at all —
 `pip download onnxruntime --no-deps` fails with DNS resolution errors
 (`NewConnectionError ... [Errno -2] Name or service not known`) against
-the configured index. The OnnxLayoutModel path (pipeline/layout.py:
-broadcast-once session, dry-run warmup, intra-op=1) stays import-gated
-with the gate itself tested; every green query runs the deterministic
-stub model end-to-end through the full decode/postprocess kernels.
+the configured index. No ONNX model path is kept; every green query
+runs the deterministic stub model end-to-end through the full
+decode/postprocess kernels.
 """
     (REPO / "BENCH" / "BASELINE.md").write_text(md)
     print(md)

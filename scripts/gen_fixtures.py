@@ -22,7 +22,7 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from usls_doc_spark.io.synth import CHUNK_WORDS, SKEW_MOD, synth_page
 from usls_doc_spark.kernels.stub_layout import StubLayoutModel
-from usls_doc_spark.pipeline.extract import extract_page
+from usls_doc_spark.pipeline.extract import extract_rows
 
 OUT = pathlib.Path(__file__).resolve().parents[1] / "fixtures" / "golden_extractions_sf0.001.json"
 
@@ -41,7 +41,7 @@ def main() -> None:
     rows = []
     for doc_id, text, lang in docs:
         page = synth_page(doc_id, text, lang)
-        res = extract_page(page["html"], page["url"], model)
+        res = extract_rows([page["html"]], [page["url"]], model)[0]
         expect_text = f"Doc {doc_id} {text}"
         assert res["error"] is None, (doc_id, res["error"])
         assert res["extracted_text"] == expect_text, doc_id

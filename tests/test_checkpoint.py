@@ -32,6 +32,29 @@ def test_null_html_rows_become_error_rows(spark, tmp_path_factory):
     assert got["u-ok"]["error"] is None
 
 
+def test_corrupt_checkpoint_raises(spark, tmp_path_factory):
+    """A checkpoint that exists but cannot be read fails the job instead of
+    reading as 'no bucket done' (which would re-run every bucket and append
+    duplicate lineage); a fresh out dir still starts from nothing."""
+    import os
+
+    from usls_doc_spark.pipeline.checkpoint import completed_buckets, run_extraction_job
+
+    out = str(tmp_path_factory.mktemp("corrupt_ckpt"))
+    assert completed_buckets(spark, out) == set()
+    os.makedirs(f"{out}/_checkpoint/_temporary/0")  # killed mid-append
+    assert completed_buckets(spark, out) == set()
+    with open(f"{out}/_checkpoint/part-00000.parquet", "w") as f:
+        f.write("not a parquet file")
+    pages = spark.createDataFrame(
+        [("u-ok", b"<p>hello world text</p>")], schema="url string, html binary"
+    )
+    with pytest.raises(Exception, match="part-00000.parquet"):
+        run_extraction_job(spark, pages, out, run_id="c1", n_buckets=4)
+    assert not os.path.exists(f"{out}/extracted")
+    assert not os.path.exists(f"{out}/_lineage")
+
+
 def test_resume_from_partial_run(spark, pages, tmp_path_factory):
     from pyspark.sql import functions as F
 

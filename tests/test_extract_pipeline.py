@@ -79,24 +79,30 @@ def test_corrupt_rows_degrade_not_fail(spark):
     assert out["u-ok"]["extracted_text"] == "T hello world"
 
 
-def test_batched_rows_bitwise_equal_per_page_path():
-    """Round-6 kernel lever A/B: extract_rows (decode batched across the
-    whole Arrow batch) must be BITWISE identical to the per-page
-    extract_page path over the full corpus — including skew pages, table
-    pages, two-column pages, and interleaved corrupt rows."""
+def _corpus_pages():
+    """The synthetic page of every sf0.001 document, in doc_id order."""
     import duckdb
-    import numpy as np
 
     from usls_doc_spark.io.synth import synth_page
-    from usls_doc_spark.kernels.stub_layout import StubLayoutModel
-    from usls_doc_spark.pipeline.extract import extract_page, extract_rows
 
     docs = duckdb.sql(
-        f"SELECT doc_id, text, lang FROM '{SF_DIR}/documents.parquet'"
+        f"SELECT doc_id, text, lang FROM '{SF_DIR}/documents.parquet' ORDER BY doc_id"
     ).fetchall()
+    return [synth_page(d, t, l) for d, t, l in docs]
+
+
+def test_batched_rows_bitwise_equal_per_page_path():
+    """extract_rows over the whole corpus as ONE batch must be BITWISE
+    identical to one-element batches page by page — including skew
+    pages, table pages, two-column pages, and interleaved corrupt rows.
+    A page's row does not depend on the batch it arrives in."""
+    import numpy as np
+
+    from usls_doc_spark.kernels.stub_layout import StubLayoutModel
+    from usls_doc_spark.pipeline.extract import extract_rows
+
     htmls, urls = [], []
-    for i, (d, t, l) in enumerate(docs):
-        p = synth_page(d, t, l)
+    for i, p in enumerate(_corpus_pages()):
         htmls.append(p["html"])
         urls.append(p["url"])
         if i % 97 == 0:  # interleave corrupt rows among real pages
@@ -105,7 +111,7 @@ def test_batched_rows_bitwise_equal_per_page_path():
     model = StubLayoutModel()
     batched = extract_rows(htmls, urls, model)
     for h, u, got in zip(htmls, urls, batched):
-        want = extract_page(h, u, model)
+        want = extract_rows([h], [u], model)[0]
         # float32 conf compared by exact bits via np.float32 equality
         assert got["url"] == want["url"]
         assert got["extracted_text"] == want["extracted_text"]
@@ -121,73 +127,95 @@ def test_batched_rows_bitwise_equal_per_page_path():
             ), u
 
 
-def test_fallback_decode_isolates_pathological_page(monkeypatch):
-    """Round-6 ADVICE item 1: when the batched decode fails AND one page's
-    per-page decode also fails, that page alone degrades to an error row —
-    the rest of the Arrow batch still extracts (S3 skip-unreadable)."""
-    import usls_doc_spark.pipeline.extract as px
+def test_decode_preds_batched_bitwise_equal_per_page():
+    """decode_preds_batched == per-page decode_preds bit-for-bit over the
+    sf0.001 corpus, with empty pages (no anchors) interleaved."""
+    import numpy as np
+
+    from usls_doc_spark.kernels.boilerplate import parse_blocks
     from usls_doc_spark.kernels.stub_layout import StubLayoutModel
+    from usls_doc_spark.kernels.yolo_decode import decode_preds, decode_preds_batched
+    from usls_doc_spark.pipeline.extract import _TWO_COL_MARKER
 
-    def boom_batched(*a, **k):
-        raise RuntimeError("batched decode exploded")
+    model = StubLayoutModel()
+    preds, specs = [], []
+    for i, p in enumerate(_corpus_pages()):
+        html = p["html"].decode("utf-8")
+        pr, spec, _ = model.infer(parse_blocks(html), _TWO_COL_MARKER in html)
+        preds.append(pr)
+        specs.append(spec)
+        if i % 50 == 0:
+            pr, spec, _ = model.infer([], i % 100 == 0)
+            assert pr.size == 0
+            preds.append(pr)
+            specs.append(spec)
+    kw = dict(names=model.names, confs=(0.4,), apply_nms=True)
+    batched = decode_preds_batched(preds, specs, **kw)
+    assert len(batched) == len(preds)
+    for pr, spec, got in zip(preds, specs, batched):
+        want = decode_preds(pr, spec, **kw)
+        assert got.names == want.names
+        for field in ("boxes", "class_ids", "confs", "anchor_ids"):
+            g, w = getattr(got, field), getattr(want, field)
+            assert g.dtype == w.dtype and g.shape == w.shape, field
+            assert g.tobytes() == w.tobytes(), field
 
-    real_decode = px.decode_preds
-    calls = {"i": -1}
 
-    def boom_second_page(*a, **k):
-        calls["i"] += 1
-        if calls["i"] == 1:
-            raise ValueError("pathological page")
-        return real_decode(*a, **k)
+_PAGES_ABC = [
+    b"<html><body><h1>A</h1><p>alpha beta</p></body></html>",
+    # B alone has three blocks (six stub anchors), so a stage can spot it
+    b"<html><body><h1>B</h1><p>gamma delta</p><p>eta theta</p></body></html>",
+    b"<html><body><h1>C</h1><p>epsilon zeta</p></body></html>",
+]
 
-    monkeypatch.setattr(px, "decode_preds_batched", boom_batched)
-    monkeypatch.setattr(px, "decode_preds", boom_second_page)
 
-    htmls = [
-        b"<html><body><h1>A</h1><p>alpha beta</p></body></html>",
-        b"<html><body><h1>B</h1><p>gamma delta</p></body></html>",
-        b"<html><body><h1>C</h1><p>epsilon zeta</p></body></html>",
-    ]
-    rows = px.extract_rows(htmls, ["u0", "u1", "u2"], StubLayoutModel())
+def _assert_only_b_fails(rows):
     by = {r["url"]: r for r in rows}
-    assert len(rows) == 3
+    assert [r["url"] for r in rows] == ["u0", "u1", "u2"]
     assert by["u1"]["error"] is not None and "pathological" in by["u1"]["error"]
     assert by["u1"]["extracted_text"] is None
     assert by["u0"]["error"] is None and by["u0"]["extracted_text"] == "A alpha beta"
     assert by["u2"]["error"] is None and by["u2"]["extracted_text"] == "C epsilon zeta"
 
 
-def test_fallback_infer_isolates_pathological_page(monkeypatch):
-    """Round-7 infer batching keeps S3 semantics: when the batched infer
-    fails AND one page's per-page infer also fails, that page alone
-    degrades to an error row."""
+def test_fallback_decode_isolates_pathological_page(monkeypatch):
+    """A batched decode that raises whenever page B is in the batch: the
+    retry re-runs each page as a one-element batch, so B alone becomes an
+    error row and A and C still extract (S3 skip-unreadable)."""
     import usls_doc_spark.pipeline.extract as px
     from usls_doc_spark.kernels.stub_layout import StubLayoutModel
 
-    def boom_batched(*a, **k):
-        raise RuntimeError("batched infer exploded")
+    real = px.decode_preds_batched
+    sizes = []
 
-    monkeypatch.setattr(px, "infer_pages_batched", boom_batched)
+    def boom_with_b(preds_list, specs, **kw):
+        sizes.append(len(preds_list))
+        if any(len(p) == 6 for p in preds_list):
+            raise ValueError("pathological page")
+        return real(preds_list, specs, **kw)
 
-    class FlakyModel(StubLayoutModel):
-        calls = 0
+    monkeypatch.setattr(px, "decode_preds_batched", boom_with_b)
+    _assert_only_b_fails(px.extract_rows(_PAGES_ABC, ["u0", "u1", "u2"], StubLayoutModel()))
+    assert sizes == [3, 1, 1, 1]
 
-        def infer(self, blocks, two_col):
-            FlakyModel.calls += 1
-            if FlakyModel.calls == 2:
-                raise ValueError("pathological infer page")
-            return super().infer(blocks, two_col)
 
-    htmls = [
-        b"<html><body><h1>A</h1><p>alpha beta</p></body></html>",
-        b"<html><body><h1>B</h1><p>gamma delta</p></body></html>",
-        b"<html><body><h1>C</h1><p>epsilon zeta</p></body></html>",
-    ]
-    rows = px.extract_rows(htmls, ["u0", "u1", "u2"], FlakyModel())
-    by = {r["url"]: r for r in rows}
-    assert by["u1"]["error"] is not None and "pathological" in by["u1"]["error"]
-    assert by["u0"]["error"] is None and by["u0"]["extracted_text"] == "A alpha beta"
-    assert by["u2"]["error"] is None and by["u2"]["extracted_text"] == "C epsilon zeta"
+def test_fallback_infer_isolates_pathological_page(monkeypatch):
+    """Same isolation for the batched inference stage."""
+    import usls_doc_spark.pipeline.extract as px
+    from usls_doc_spark.kernels.stub_layout import StubLayoutModel
+
+    real = px.infer_pages_batched
+    sizes = []
+
+    def boom_with_b(model, page_blocks, two_cols):
+        sizes.append(len(page_blocks))
+        if any(b.text == "B" for blocks in page_blocks for b in blocks):
+            raise ValueError("pathological infer page")
+        return real(model, page_blocks, two_cols)
+
+    monkeypatch.setattr(px, "infer_pages_batched", boom_with_b)
+    _assert_only_b_fails(px.extract_rows(_PAGES_ABC, ["u0", "u1", "u2"], StubLayoutModel()))
+    assert sizes == [3, 1, 1, 1]
 
 
 def test_infer_pages_batched_bitwise_equal_edge_pages():

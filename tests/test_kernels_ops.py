@@ -1,7 +1,6 @@
 """Preprocessing ops kernel tests (SURVEY.md §2.2 P-ops, L11)."""
 
 import numpy as np
-import pytest
 
 from usls_doc_spark.kernels import ops
 
@@ -74,10 +73,3 @@ def test_prob_topk_reference_tie_order():
     top = ops.prob_topk(p, 3, names=["a", "b", "c", "d"])
     assert [(i, n) for i, _, n in top] == [(1, "b"), (2, "c"), (3, "d")]
 
-
-def test_onnx_gate():
-    from usls_doc_spark.pipeline import layout
-
-    if not layout.HAS_ORT:
-        with pytest.raises(ImportError):
-            layout.get_session(object())

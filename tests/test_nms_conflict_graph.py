@@ -152,7 +152,7 @@ def test_real_captured_pages_identical():
     import duckdb
 
     from usls_doc_spark.io.synth import synth_page
-    from usls_doc_spark.pipeline.extract import extract_page
+    from usls_doc_spark.pipeline.extract import extract_rows
     from usls_doc_spark.kernels.stub_layout import StubLayoutModel
     import usls_doc_spark.kernels.yolo_decode as yd
 
@@ -172,7 +172,7 @@ def test_real_captured_pages_identical():
         model = StubLayoutModel()
         for doc_id, text, lang in rows:
             page = synth_page(doc_id, text, lang)
-            extract_page(page["html"], page["url"], model)
+            extract_rows([page["html"]], [page["url"]], model)
     finally:
         yd.nms_indices = orig
     assert captured, "no NMS calls captured"

@@ -1,19 +1,16 @@
 """Deterministic layout "model": flow layout + raw YOLO-head emission.
 
 The reference's layout model is DocLayout-YOLO over rendered page rasters
-(/root/reference/src/models/yolo/impl.rs, preset yolo/config.rs:17-35). The
-image/ONNX libs are not in this container, so the model boundary is served by
-two implementations behind one interface (SURVEY.md §7 Stage 2):
-
-  * StubLayoutModel (here) — a pure function of the parsed DOM blocks: a
-    deterministic top-down flow layout (optionally 2-column) assigns each
-    block a page-coordinate bbox, then emits a raw detection head
-    ``[A, 4 + n_classes]`` (cxcywh in letterboxed-canvas coordinates + class
-    scores) exactly shaped like the YOLO output the decode kernels expect.
-    It also emits one duplicate anchor per block (identical box,
-    conf*0.9) so the NMS path (xy/y.rs:92-114) is exercised in production.
-  * OnnxLayoutModel (pipeline/layout.py) — real ONNXRuntime session from
-    broadcast bytes; gated behind an import-try (engine.rs:76-145 analogue).
+(reference src/models/yolo/impl.rs, preset yolo/config.rs:17-35). No
+ONNX runtime is available to this package, so StubLayoutModel stands in for
+it: a pure function of the parsed DOM blocks. A deterministic top-down flow
+layout (optionally 2-column) assigns each block a page-coordinate bbox, then
+emits a raw detection head ``[A, 4 + n_classes]`` (cxcywh in
+letterboxed-canvas coordinates + class scores) exactly shaped like the YOLO
+output the decode kernels expect. It also emits one duplicate anchor per
+block (identical box, conf*0.9) so the NMS path (xy/y.rs:92-114) is
+exercised in production. The extraction pipeline calls it through
+``infer_pages_batched``, once per Arrow batch.
 
 All geometry is integral and all float math float32, so the
 canvas->original un-letterbox roundtrip (error ~1e-3 px) recovers the exact

@@ -296,23 +296,28 @@ cands AS (
 )"""
 
 
+def _ds_mat(spark: SparkSession, view: str) -> None:
+    """Materialize the template's `ds` CTE (distinct word 3-shingles per
+    document, _lsh_jaccard_ctes' text) once and register it as ``view``."""
+    d = SPARK
+    sh = d.array_distinct(d.shingles("ws", 3))
+    spark.sql(
+        f"SELECT doc_id, {sh} AS sh "
+        f"FROM (SELECT doc_id, {_words(d)} AS ws FROM documents)"
+    ).localCheckpoint().createOrReplaceTempView(view)
+
+
 def dedup_ngram_jaccard_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_ngram_jaccard with the distinct-shingle table materialized
     ONCE (the template's ds CTE is referenced by sigs and both verify
     sides — 8 parquet scans via inlining,
     plans/r08/dedup_ngram_jaccard_before.txt)."""
     from ..queries import _register_views
-    from .text_queries import _jaccard_exprs, _words
+    from .text_queries import _jaccard_exprs
 
     _register_views(spark, sf_dir)
     d = SPARK
-    w = _words(d)
-    sh = d.array_distinct(d.shingles("ws", 3))
-    ds = spark.sql(
-        f"SELECT doc_id, {sh} AS sh "
-        f"FROM (SELECT doc_id, {w} AS ws FROM documents)"
-    ).localCheckpoint()
-    ds.createOrReplaceTempView("_lsh_ds_mat")
+    _ds_mat(spark, "_lsh_ds_mat")
     inter, alen, blen = _jaccard_exprs(d)
     return spark.sql(f"""
 WITH {_lsh_tail_sql("_lsh_ds_mat")},
@@ -343,16 +348,10 @@ def verified_pairs_mat(spark: SparkSession, threshold: float = 0.5) -> DataFrame
     the cache materializes. Value expressions are the template's text
     verbatim (same Jaccard filter, same threshold formatting), so the
     edge set is identical row-for-row."""
-    from .text_queries import _jaccard_exprs, _words
+    from .text_queries import _jaccard_exprs
 
     d = SPARK
-    w = _words(d)
-    sh = d.array_distinct(d.shingles("ws", 3))
-    ds = spark.sql(
-        f"SELECT doc_id, {sh} AS sh "
-        f"FROM (SELECT doc_id, {w} AS ws FROM documents)"
-    ).localCheckpoint()
-    ds.createOrReplaceTempView("_vp_ds_mat")
+    _ds_mat(spark, "_vp_ds_mat")
     inter, alen, blen = _jaccard_exprs(d)
     return spark.sql(f"""
 WITH {_lsh_tail_sql("_vp_ds_mat")}
@@ -379,17 +378,11 @@ def lsh_recall_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact side that makes this the measurement harness (docstring of the
     template); materialization removes only the re-execution."""
     from ..queries import _register_views
-    from .text_queries import _jaccard_exprs, _words
+    from .text_queries import _jaccard_exprs
 
     _register_views(spark, sf_dir)
     d = SPARK
-    w = _words(d)
-    sh = d.array_distinct(d.shingles("ws", 3))
-    ds = spark.sql(
-        f"SELECT doc_id, {sh} AS sh "
-        f"FROM (SELECT doc_id, {w} AS ws FROM documents)"
-    ).localCheckpoint()
-    ds.createOrReplaceTempView("_lshr_ds_mat")
+    _ds_mat(spark, "_lshr_ds_mat")
     cands = spark.sql(
         f"WITH {_lsh_tail_sql('_lshr_ds_mat')} SELECT doc_a, doc_b FROM cands"
     ).localCheckpoint()

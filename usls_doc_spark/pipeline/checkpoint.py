@@ -28,6 +28,7 @@ from __future__ import annotations
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,9 +43,19 @@ def _bucket(col, n_buckets: int):
 
 
 def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
+    """Buckets an earlier run recorded as done. Only a missing checkpoint
+    table (a fresh out dir) means none; any other read failure, such as a
+    corrupt checkpoint file, is raised, because re-running every bucket
+    would append duplicate lineage. The schema is given so a checkpoint
+    dir holding no committed file yet (a run killed mid-append) reads as
+    empty instead of failing schema inference."""
     try:
-        ck = spark.read.parquet(f"{out_dir}/_checkpoint")
-    except Exception:
+        ck = spark.read.schema("bucket int, status string").parquet(
+            f"{out_dir}/_checkpoint"
+        )
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return set()
     rows = ck.filter(F.col("status") == "done").select("bucket").distinct().collect()
     return {r["bucket"] for r in rows}

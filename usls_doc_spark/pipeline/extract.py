@@ -31,11 +31,7 @@ import pandas as pd
 from ..kernels.boilerplate import TEXTUAL_CLASSES, parse_blocks
 from ..kernels.stub_layout import StubLayoutModel, infer_pages_batched
 from ..kernels.xycut import xycut_order
-from ..kernels.yolo_decode import (
-    abandon_filter_and_round,
-    decode_preds,
-    decode_preds_batched,
-)
+from ..kernels.yolo_decode import abandon_filter_and_round, decode_preds_batched
 
 # Output schema of the extraction stage (DDL string for mapInPandas).
 # elapsed_us is this row's share of its Arrow batch's processing time — the
@@ -56,196 +52,127 @@ EXTRACT_SCHEMA = ", ".join(f"{c} {t}" for c, t in _FIELD_TYPES.items())
 SEP = " "  # span-assembly separator (STRING_AGG parity; SURVEY.md §2.8)
 
 
-def _assemble_page(url: str, blocks, decoded) -> dict:
-    """Abandon-filter + XY-cut + span assembly over a decoded page — the
-    back half of extract_page, shared with the batched path."""
-    try:
-        kept = abandon_filter_and_round(decoded)
-        if kept:
-            boxes = np.asarray([[b["x"], b["y"], b["width"], b["height"]] for b in kept])
-            order = xycut_order(boxes)
-        else:
-            order = np.empty(0, dtype=np.int64)
-        out_blocks = []
-        texts = []
-        for rank, bi in enumerate(order):
-            b = kept[int(bi)]
-            block_idx = b["id_born"] // 2  # stub emits 2 anchors per block
-            out_blocks.append(
-                {
-                    "x": b["x"],
-                    "y": b["y"],
-                    "width": b["width"],
-                    "height": b["height"],
-                    "cls": b["cls"],
-                    "conf": np.float32(b["conf"]),
-                    "order": rank,
-                }
-            )
-            if b["cls"] in TEXTUAL_CLASSES and block_idx < len(blocks):
-                texts.append(blocks[block_idx].text)
-        extracted = SEP.join(texts)
-        return {
-            "url": url,
-            "extracted_text": extracted,
-            "n_blocks": len(out_blocks),
-            "extracted_bytes": len(extracted.encode("utf-8")),
-            "blocks": out_blocks,
-            "error": None,
-        }
-    except Exception as e:  # corrupt row -> null + error, never fail (S3)
-        return {
-            "url": url,
-            "extracted_text": None,
-            "n_blocks": 0,
-            "extracted_bytes": 0,
-            "blocks": [],
-            "error": f"{type(e).__name__}: {e}"[:500],
-        }
-
-
-_TWO_COL_MARKER = '<meta name="layout" content="two-column"'
-
-
-def extract_page(html_bytes: bytes | None, url: str, model: StubLayoutModel) -> dict:
-    """Extract one page. Pure function of (html, url) — deterministic.
-    Single-page form; extract_rows runs the same stages with the decode
-    batched across the whole Arrow batch (bit-identical, A/B-asserted)."""
-    try:
-        if html_bytes is None:
-            raise ValueError("null html")
-        html = bytes(html_bytes).decode("utf-8", errors="replace")
-        blocks = parse_blocks(html)
-        # two-column rendering is a property of the page, not the pipeline:
-        # the stub model reads it from a meta marker the generator embeds;
-        # real pages rasterize however they rasterize.
-        preds, spec, _classes = model.infer(blocks, _TWO_COL_MARKER in html)
-        decoded = decode_preds(preds, spec, names=model.names, confs=(0.4,), apply_nms=True)
-    except Exception as e:  # corrupt row -> null + error, never fail (S3)
-        return {
-            "url": url,
-            "extracted_text": None,
-            "n_blocks": 0,
-            "extracted_bytes": 0,
-            "blocks": [],
-            "error": f"{type(e).__name__}: {e}"[:500],
-        }
-    return _assemble_page(url, blocks, decoded)
-
-
-class _DecodeError:
-    """Per-page decode-failure marker in the fallback path — unambiguous
-    vs DecodedBoxes (which is itself a tuple subclass)."""
-
-    __slots__ = ("msg",)
-
-    def __init__(self, msg: str) -> None:
-        self.msg = msg
-
-
-def _error_row(url: str, msg: str) -> dict:
+def _error_row(url: str, e: Exception) -> dict:
+    """The one error row: null extraction + message (S3 skip-unreadable)."""
     return {
         "url": url,
         "extracted_text": None,
         "n_blocks": 0,
         "extracted_bytes": 0,
         "blocks": [],
-        "error": msg,
+        "error": f"{type(e).__name__}: {e}"[:500],
     }
 
 
+def _assemble_page(url: str, blocks, decoded) -> dict:
+    """Abandon-filter + XY-cut + span assembly over one decoded page."""
+    kept = abandon_filter_and_round(decoded)
+    if kept:
+        boxes = np.asarray([[b["x"], b["y"], b["width"], b["height"]] for b in kept])
+        order = xycut_order(boxes)
+    else:
+        order = np.empty(0, dtype=np.int64)
+    out_blocks = []
+    texts = []
+    for rank, bi in enumerate(order):
+        b = kept[int(bi)]
+        block_idx = b["id_born"] // 2  # stub emits 2 anchors per block
+        out_blocks.append(
+            {
+                "x": b["x"],
+                "y": b["y"],
+                "width": b["width"],
+                "height": b["height"],
+                "cls": b["cls"],
+                "conf": np.float32(b["conf"]),
+                "order": rank,
+            }
+        )
+        if b["cls"] in TEXTUAL_CLASSES and block_idx < len(blocks):
+            texts.append(blocks[block_idx].text)
+    extracted = SEP.join(texts)
+    return {
+        "url": url,
+        "extracted_text": extracted,
+        "n_blocks": len(out_blocks),
+        "extracted_bytes": len(extracted.encode("utf-8")),
+        "blocks": out_blocks,
+        "error": None,
+    }
+
+
+_TWO_COL_MARKER = '<meta name="layout" content="two-column"'
+
+
+def _run_stage(stage, pages: list[int]) -> dict:
+    """Run ``stage`` (page indices -> one output per page) over ``pages``;
+    returns {page: output, or the exception that page raised}. A raise on
+    a batch of several pages re-runs each page as a one-element batch
+    through the same stage, so one pathological page errors alone instead
+    of failing the Arrow batch (S3 skip-unreadable semantics)."""
+    try:
+        return dict(zip(pages, stage(pages)))
+    except Exception as e:
+        if len(pages) == 1:
+            return {pages[0]: e}
+        return {p: out for q in pages for p, out in _run_stage(stage, [q]).items()}
+
+
 def extract_rows(htmls, urls, model: StubLayoutModel) -> list[dict]:
-    """One Arrow batch of pages -> extraction rows, with BOTH the stub
-    inference (round 7: kernels/stub_layout.infer_pages_batched — one
-    classify pass, one segmented flow prefix sum, one raw-head fill
-    across the whole batch) and the YOLO decode
-    (kernels/yolo_decode.decode_preds_batched) batched across all the
-    batch's pages in single numpy passes — each bit-identical to its
-    per-page form (corpus A/B tests), and each re-checked here by
-    falling back per page if the batched call ever fails. Parse stays
-    per page (its state machine is row-local); per-row error isolation
-    (S3 skip-unreadable semantics) is preserved because corrupt rows
-    error out in the per-page parse phase, and both batched stages
-    degrade to try-wrapped per-page calls on failure."""
-    parsed: list[tuple] = []  # (url, blocks, two_col) | (url, error_row)
-    for h, u in zip(htmls, urls):
+    """One Arrow batch of pages -> extraction rows. Pure function of each
+    (html, url) — deterministic, and the same row whatever batch the page
+    arrives in. Parse is per page (its state machine is row-local); the
+    stub inference (kernels/stub_layout.infer_pages_batched) and the YOLO
+    decode (kernels/yolo_decode.decode_preds_batched) each run once over
+    all the batch's live pages. A page that fails any stage becomes its
+    own error row (_run_stage); the rest of the batch still extracts."""
+    errors: dict[int, Exception] = {}
+    blocks, two_col = {}, {}
+    for i, h in enumerate(htmls):
         try:
             if h is None:
                 raise ValueError("null html")
             html = bytes(h).decode("utf-8", errors="replace")
-            blocks = parse_blocks(html)
-            parsed.append((u, blocks, _TWO_COL_MARKER in html))
+            blocks[i] = parse_blocks(html)
+            # two-column rendering is a property of the page, not the
+            # pipeline: the stub model reads it from a meta marker the
+            # generator embeds; real pages rasterize however they rasterize.
+            two_col[i] = _TWO_COL_MARKER in html
         except Exception as e:
-            parsed.append((u, _error_row(u, f"{type(e).__name__}: {e}"[:500])))
-    plive = [s for s in parsed if len(s) == 3]
-    try:
-        inferred = infer_pages_batched(
-            model, [s[1] for s in plive], [s[2] for s in plive]
-        )
-    except Exception:
-        # defensive: degrade to the per-page path so a pathological page
-        # errors alone instead of failing the batch (same discipline as
-        # the decode fallback below)
-        inferred = []
-        for s in plive:
-            try:
-                inferred.append(model.infer(s[1], s[2]))
-            except Exception as e:
-                inferred.append(_DecodeError(f"{type(e).__name__}: {e}"[:500]))
-    staged: list[tuple] = []  # (url, blocks, preds, spec) | (url, error_row)
-    ii = 0
-    for s in parsed:
-        if len(s) == 2:
-            staged.append(s)
-        else:
-            inf = inferred[ii]
-            ii += 1
-            if isinstance(inf, _DecodeError):
-                staged.append((s[0], _error_row(s[0], inf.msg)))
-            else:
-                preds, spec, _classes = inf
-                staged.append((s[0], s[1], preds, spec))
-    live = [s for s in staged if len(s) == 4]
-    try:
-        decoded = decode_preds_batched(
-            [s[2] for s in live], [s[3] for s in live],
+            errors[i] = e
+
+    def live(outs: dict) -> list[int]:
+        errors.update((p, o) for p, o in outs.items() if isinstance(o, Exception))
+        return [p for p in outs if p not in errors]
+
+    inferred = _run_stage(
+        lambda ps: infer_pages_batched(
+            model, [blocks[p] for p in ps], [two_col[p] for p in ps]
+        ),
+        list(blocks),
+    )
+    decoded = _run_stage(
+        lambda ps: decode_preds_batched(
+            [inferred[p][0] for p in ps], [inferred[p][1] for p in ps],
             names=model.names, confs=(0.4,), apply_nms=True,
-        )
-    except Exception:
-        # defensive: a decode failure degrades to the per-page path so a
-        # pathological page errors alone instead of failing the batch —
-        # each page's decode is try-wrapped so even the fallback keeps
-        # row-level error isolation (S3 skip-unreadable semantics; a None
-        # entry becomes that page's standard error row below)
-        decoded = []
-        for s in live:
-            try:
-                decoded.append(
-                    decode_preds(s[2], s[3], names=model.names, confs=(0.4,),
-                                 apply_nms=True)
-                )
-            except Exception as e:
-                decoded.append(_DecodeError(f"{type(e).__name__}: {e}"[:500]))
-    rows: list[dict] = []
-    di = 0
-    for s in staged:
-        if len(s) == 2:
-            rows.append(s[1])
-        else:
-            d = decoded[di]
-            di += 1
-            if isinstance(d, _DecodeError):
-                rows.append(_error_row(s[0], d.msg))
-            else:
-                rows.append(_assemble_page(s[0], s[1], d))
-    return rows
+        ),
+        live(inferred),
+    )
+    rows = _run_stage(
+        lambda ps: [_assemble_page(urls[p], blocks[p], decoded[p]) for p in ps],
+        live(decoded),
+    )
+    live(rows)
+    return [
+        _error_row(u, errors[i]) if i in errors else rows[i]
+        for i, u in enumerate(urls)
+    ]
 
 
 def _extract_batch_fn(cols: list[str]):
     """mapInPandas body emitting exactly ``cols``. The model is constructed
-    once per task (the broadcast-once / lazy-singleton pattern of
-    engine.rs:76-145; the stub has no weights, the ONNX variant caches its
-    session at module level)."""
+    once per task (the lazy-singleton pattern of engine.rs:76-145; the
+    stub has no weights)."""
     import time
 
     data_cols = [c for c in cols if c != "elapsed_us"]
@@ -266,9 +193,6 @@ def _extract_batch_fn(cols: list[str]):
             yield out
 
     return extract_batch
-
-
-extract_batch = _extract_batch_fn(list(_FIELD_TYPES))  # full-schema body
 
 
 def extract_pages(pages_df, columns: list[str] | None = None):

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from ..io.synth import PAGES_SCHEMA
-from ..pipeline.extract import extract_batch, EXTRACT_SCHEMA
+from ..pipeline.extract import EXTRACT_SCHEMA, extract_pages
 
 
 def streaming_extract_text(spark: SparkSession, sf_dir: str):
@@ -77,11 +77,8 @@ def start_streaming_extraction(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(pages_dir)
     )
-    extracted = stream.select("url", "html").mapInPandas(
-        extract_batch, schema=EXTRACT_SCHEMA
-    )
     return (
-        extracted.writeStream.outputMode("append")
+        extract_pages(stream).writeStream.outputMode("append")
         .format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
