@@ -1,5 +1,7 @@
 """OCR kernel tests: DB polygon pipeline (D1-D7) + decoders (R1, R3)."""
 
+from collections import deque
+
 import numpy as np
 
 from usls_doc_spark.kernels.ocr import (
@@ -203,21 +205,46 @@ def test_ocr_batch_width_buckets_preserve_order():
 # ---------------------------------------------------------------------------
 
 def _reference_contours(mask):
-    """The pre-optimization full-frame implementation, kept here as the
-    differential oracle."""
-    from usls_doc_spark.kernels.ocr import _label_components, _trace_boundary
+    """Differential oracle: plain BFS 4-connected flood fill (components
+    numbered by their first pixel in row-major order), each component
+    Moore-traced on the FULL frame — no labeling code under test."""
+    from usls_doc_spark.kernels.ocr import _trace_boundary
 
     fg = np.asarray(mask) > 0
-    if not fg.any():
-        return []
-    labels, n = _label_components(fg)
+    h, w = fg.shape
+    seen = np.zeros_like(fg)
     out = []
-    for comp_id in range(1, n + 1):
-        comp = labels == comp_id
-        ys, xs = np.nonzero(comp)
-        pts = _trace_boundary(comp, (int(ys[0]), int(xs[0])))
+    for y, x in np.argwhere(fg).tolist():
+        if seen[y, x]:
+            continue
+        seen[y, x] = True
+        comp = np.zeros_like(fg)
+        queue = deque([(y, x)])
+        while queue:
+            cy, cx = queue.popleft()
+            comp[cy, cx] = True
+            for ny, nx in ((cy - 1, cx), (cy + 1, cx), (cy, cx - 1), (cy, cx + 1)):
+                if 0 <= ny < h and 0 <= nx < w and fg[ny, nx] and not seen[ny, nx]:
+                    seen[ny, nx] = True
+                    queue.append((ny, nx))
+        pts = _trace_boundary(comp, (y, x))
         out.append(np.asarray(pts[::-1], dtype=np.float64))
     return out
+
+
+def _adversarial_masks(n=512):
+    """Serpentine (one snake through every other row), comb (teeth joined
+    only on the last row) and 60% noise — long Moore walks, deep run
+    merges and thousands of tiny components."""
+    serpentine = np.zeros((n, n), dtype=np.uint8)
+    serpentine[::2, 1:-1] = 1
+    for y in range(1, n - 1, 2):
+        serpentine[y, 1 if (y // 2) % 2 else n - 2] = 1
+    comb = np.zeros((n, n), dtype=np.uint8)
+    comb[:, ::2] = 1
+    comb[-1, :] = 1
+    noise = (np.random.default_rng(7).random((n, n)) < 0.6).astype(np.uint8)
+    return [serpentine, comb, noise]
 
 
 def test_rect_ring_fuzz_vs_moore():
@@ -262,6 +289,12 @@ def test_blob_fuzz_vs_full_frame_moore():
             assert np.array_equal(g, w_)
 
     check()
+    for fg in _adversarial_masks():
+        got = find_outer_contours(fg)
+        want = _reference_contours(fg)
+        assert len(got) == len(want) > 0
+        for g, w_ in zip(got, want):
+            assert np.array_equal(g, w_) and g.dtype == w_.dtype
 
 
 def test_simplify_runs_hull_identity_fuzz():
@@ -328,3 +361,72 @@ def test_single_rect_fast_path_condition_boundaries():
         assert len(got) == len(want)
         for g, w_ in zip(got, want):
             assert np.array_equal(g, w_) and g.dtype == w_.dtype
+
+
+# ---------------------------------------------------------------------------
+# pixel-native recognition (pipeline/raster_ocr.py)
+# ---------------------------------------------------------------------------
+
+def _reference_glyph_logits(crop):
+    """The per-glyph loop read_glyph_logits replaced, kept as its oracle."""
+    from usls_doc_spark.io.synth import GLYPH_BIAS, RASTER_CELL
+    from usls_doc_spark.pipeline.ocr import VOCAB
+
+    col = crop.max(axis=0)
+    nz = np.nonzero(col)[0]
+    logits = np.zeros((len(nz) // RASTER_CELL, len(VOCAB)), dtype=np.float32)
+    if len(nz) == 0:
+        return logits
+    span = col[nz[0] : nz[-1] + 1]
+    codes = span[::RASTER_CELL].astype(np.int32) - GLYPH_BIAS
+    for t, code in enumerate(codes[: len(logits)]):
+        idx = code - 0x20 + 1 if 0x20 <= code <= 0x7E else 0
+        logits[t, idx] = np.float32(0.95)
+    return logits
+
+
+def test_read_glyph_logits_matches_per_glyph_loop():
+    from usls_doc_spark.io.synth import GLYPH_BIAS
+    from usls_doc_spark.pipeline.raster_ocr import read_glyph_logits
+
+    def glyphs(codes, h=6, pad=3):
+        row = np.repeat(np.asarray(codes, dtype=np.int64), 4)
+        crop = np.zeros((h, len(row) + 2 * pad), dtype=np.uint8)
+        crop[1:-1, pad : pad + len(row)] = row
+        return crop
+
+    rng = np.random.default_rng(3)
+    crops = [
+        glyphs([ord(c) + GLYPH_BIAS for c in "Hello, World!~ "]),
+        glyphs(range(1, 256)),                       # codes outside 0x20-0x7E
+        np.zeros((8, 40), dtype=np.uint8),           # all-zero crop
+        glyphs([ord("a") + GLYPH_BIAS])[:, :6],      # narrower than one cell
+        np.zeros((4, 0), dtype=np.uint8),
+    ]
+    gap = glyphs([ord(c) + GLYPH_BIAS for c in "abcdef"])
+    gap[:, 7:13] = 0                                 # more cells than rows
+    crops.append(gap)
+    crops += [rng.integers(0, 256, (5, int(n))).astype(np.uint8) * (rng.random((5, int(n))) < 0.7)
+              for n in rng.integers(1, 90, 40)]
+    for crop in crops:
+        got, want = read_glyph_logits(crop), _reference_glyph_logits(crop)
+        assert got.shape == want.shape and got.dtype == want.dtype
+        assert got.tobytes() == want.tobytes()
+    assert len(read_glyph_logits(gap)) == 4  # 18 nonzero columns, 6 glyph cells
+
+
+def test_raster_ocr_rejects_region_longer_than_decode_cap():
+    """A chunk with more glyph cells than MAX_DECODE_LEN must raise, not
+    come back truncated by the CTC decode."""
+    import pytest
+
+    from usls_doc_spark.pipeline.ocr import MAX_DECODE_LEN
+    from usls_doc_spark.pipeline.raster_ocr import detect_raster_spans, extract_from_raster
+
+    text = "ab " + "x" * 5000 + " cd"
+    with pytest.raises(RuntimeError, match="5006 glyph cells > 4096"):
+        extract_from_raster(7, text)
+    with pytest.raises(RuntimeError, match="5006 glyph cells > 4096"):
+        detect_raster_spans(7, text)
+    at_cap = "x" * (MAX_DECODE_LEN - 6)
+    assert extract_from_raster(7, f"ab {at_cap} cd") == (1, f"ab {at_cap} cd")

@@ -6,8 +6,9 @@ semantics are fully legible and are part of the spec:
   D1 binarize:   x <= binary_thresh (0.2) -> 0 else x*255 u8
                  (/root/reference/src/models/db/impl.rs:95-106)
   D3 contours:   find_contours_with_threshold(mask, 1); drop holes <= 2 pts
-                 (db/impl.rs:121-131) — re-implemented as Moore-neighbor
-                 boundary tracing over 4-connected components (numpy only)
+                 (db/impl.rs:121-131) — re-implemented as 4-connected
+                 labeling of horizontal runs (vectorized edges + min-label
+                 hooking) and Moore-neighbor boundary tracing (numpy only)
   D4 unclip:     per-vertex normal offset, delta = area * round(ratio) *
                  unclip_ratio(1.5) / perimeter, clamped to the image
                  (db/impl.rs:136-144; kernel /root/reference/src/xy/polygon.rs:151-187)
@@ -89,73 +90,6 @@ def _trace_boundary(fg: np.ndarray, start: tuple[int, int]) -> list[tuple[int, i
             return boundary
 
 
-def _label_components(fg: np.ndarray) -> tuple[np.ndarray, int]:
-    """4-connected component labeling via per-row run extraction +
-    union-find over runs — O(rows x runs), not O(pixels) python (a BFS
-    flood fill costs ~1us/pixel in python and dominated the OCR stage)."""
-    h, w = fg.shape
-    labels = np.zeros((h, w), dtype=np.int32)
-    parent: list[int] = [0]  # parent[0] unused
-
-    def find(a: int) -> int:
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
-
-    prev_runs: list[tuple[int, int, int]] = []  # (start, end, label)
-    all_runs: list[int] = []  # labels in row-major run order
-    # iterate NONEMPTY rows only (one vectorized any(axis=1) instead of a
-    # per-row .any() — detect maps/page rasters are mostly background and
-    # the empty-row python iterations dominated the labeling cost)
-    nonempty = np.nonzero(fg.any(axis=1))[0]
-    last_y = -2
-    for y in nonempty:
-        if y != last_y + 1:
-            prev_runs = []  # a background row gap breaks 4-connectivity
-        last_y = y
-        row = fg[y]
-        # transition positions (identical to diff(int8)==+/-1): a change at
-        # index t means row flips at t; flips INTO fg start a run, flips
-        # OUT end one — single comparison + two masked selects
-        t = np.flatnonzero(row[1:] != row[:-1]) + 1
-        on = row[t]
-        starts = t[on].tolist()
-        ends = t[~on].tolist()
-        if row[0]:
-            starts.insert(0, 0)
-        if row[-1]:
-            ends.append(w)
-        runs = []
-        for s, e in zip(starts, ends):
-            lab = 0
-            for ps, pe, pl in prev_runs:
-                if ps < e and s < pe:  # 4-connected overlap
-                    if lab == 0:
-                        lab = find(pl)
-                    else:
-                        rb = find(pl)
-                        if rb != lab:
-                            parent[rb] = lab
-            if lab == 0:
-                parent.append(len(parent))
-                lab = len(parent) - 1
-            labels[y, s:e] = lab
-            runs.append((s, e, lab))
-            all_runs.append(lab)
-        prev_runs = runs
-    # compress to consecutive ids in first-appearance (row-major) order
-    remap: dict[int, int] = {}
-    for lab in all_runs:
-        r = find(lab)
-        if r not in remap:
-            remap[r] = len(remap) + 1
-    lut = np.zeros(len(parent), dtype=np.int32)
-    for lab in range(1, len(parent)):
-        lut[lab] = remap[find(lab)]
-    return lut[labels], len(remap)
-
-
 def _rect_ring(x0: int, y0: int, x1: int, y1: int) -> np.ndarray:
     """Clockwise boundary ring of a filled rectangle, POINT-IDENTICAL to
     _trace_boundary from the topmost-leftmost pixel (differential fuzz in
@@ -186,21 +120,24 @@ def find_outer_contours(mask: np.ndarray) -> list[np.ndarray]:
     """D3: outer boundaries of 4-connected foreground components, in
     row-major discovery order. Returns [K,2] float64 (x, y) arrays.
 
-    One nonzero pass groups pixels per label (no per-component full-frame
-    scans — O(fg pixels), not O(components x H x W)); solid rectangles
-    take the vectorized ring; everything else Moore-traces inside its own
-    bbox window (identical output, the trace never consults pixels outside
-    the component)."""
+    Labels horizontal foreground runs, not pixels: one flatnonzero over
+    the row-padded mask yields every run in row-major order, two
+    searchsorted calls find the runs each one overlaps in the row above,
+    and min-label hooking over those edges labels each run with its
+    component's first run. Bbox and pixel count come from the runs; solid
+    rectangles take the vectorized ring; everything else Moore-traces
+    inside its own bbox window (identical output, the trace never consults
+    pixels outside the component)."""
     fg = np.asarray(mask) > 0
     if not fg.any():
         return []
     # single-solid-rectangle fast path: if the foreground's bounding box is
     # fully set AND contains every fg pixel, there is exactly one
-    # 4-connected component and it is that solid rect — the labeling /
-    # nonzero / argsort machinery below would reach the same _rect_ring via
-    # its per-component rect test (bitwise-identical, A/B-asserted in
-    # tests/test_kernels_ocr.py). This is the DB-detect hot shape: every
-    # stub prob map is one solid text rectangle.
+    # 4-connected component and it is that solid rect — the run labeling
+    # below would reach the same _rect_ring via its per-component rect test
+    # (bitwise-identical, A/B-asserted in tests/test_kernels_ocr.py). This
+    # is the DB-detect hot shape: every stub prob map is one solid text
+    # rectangle.
     rows = fg.any(axis=1)
     cols = fg.any(axis=0)
     ry = np.flatnonzero(rows)
@@ -214,26 +151,56 @@ def find_outer_contours(mask: np.ndarray) -> list[np.ndarray]:
         and fg[y0r : y1r + 1, x0r : x1r + 1].all()
     ):
         return [_rect_ring(x0r, y0r, x1r, y1r)[::-1].astype(np.float64)]
-    labels, n = _label_components(fg)
-    ys, xs = np.nonzero(labels)
-    lab = labels[ys, xs]
-    order = np.argsort(lab, kind="stable")  # stable: row-major within label
-    ys, xs, lab = ys[order], xs[order], lab[order]
-    bounds = np.searchsorted(lab, np.arange(1, n + 2))
+    h, w = fg.shape
+    stride = w + 2  # a background column each side: no run crosses a row
+    padded = np.zeros((h, stride), dtype=bool)
+    padded[:, 1:-1] = fg
+    flat = padded.ravel()
+    flips = np.flatnonzero(flat[1:] != flat[:-1]) + 1
+    starts, ends = flips[0::2], flips[1::2]  # flat [start, end) per run
+    n = len(starts)
+    # runs j of the row above overlapping run i (4-connected): start_j <
+    # end_i - stride and end_j > start_i - stride; both arrays are sorted
+    lo = np.searchsorted(ends, starts - stride, side="right")
+    cnt = np.searchsorted(starts, ends - stride, side="left") - lo
+    a = np.repeat(np.arange(n), cnt)
+    b = np.repeat(lo - np.cumsum(cnt) + cnt, cnt) + np.arange(len(a))
+    # min-label hooking with full path compression: every run ends up
+    # labelled with the first run of its component (row-major order)
+    lab = np.arange(n)
+    while len(a):
+        ra, rb = lab[a], lab[b]
+        live = ra != rb
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        np.minimum.at(lab, np.maximum(ra, rb), np.minimum(ra, rb))
+        nxt = lab[lab]
+        while not np.array_equal(nxt, lab):
+            lab, nxt = nxt, nxt[nxt]
+    order = np.argsort(lab, kind="stable")  # by component, row-major within
+    bounds = np.flatnonzero(lab[order] == order)  # each component's first run
+    run_y = starts // stride
+    c0 = (starts - run_y * stride - 1)[order]  # run columns [c0, c1)
+    c1 = (ends - run_y * stride - 1)[order]
+    run_y = run_y[order]
+    y0s = run_y[bounds].tolist()
+    y1s = run_y[np.append(bounds[1:], n) - 1].tolist()  # row-major: last row
+    x0s = np.minimum.reduceat(c0, bounds).tolist()
+    x1s = (np.maximum.reduceat(c1, bounds) - 1).tolist()
+    areas = np.add.reduceat(c1 - c0, bounds).tolist()
+    bounds = bounds.tolist() + [n]
     contours = []
-    for comp_id in range(1, n + 1):
-        sl = slice(bounds[comp_id - 1], bounds[comp_id])
-        cys, cxs = ys[sl], xs[sl]
-        y0, y1 = int(cys[0]), int(cys[-1])  # row-major: first/last rows
-        x0, x1 = int(cxs.min()), int(cxs.max())
-        if y1 > y0 and x1 > x0 and len(cys) == (y1 - y0 + 1) * (x1 - x0 + 1):
+    for k, (x0, y0, x1, y1, area) in enumerate(zip(x0s, y0s, x1s, y1s, areas)):
+        if y1 > y0 and x1 > x0 and area == (y1 - y0 + 1) * (x1 - x0 + 1):
             pts_arr = _rect_ring(x0, y0, x1, y1)
             contours.append(pts_arr[::-1].astype(np.float64))
             continue
+        # paint the component's runs into its own bbox window
+        sl = slice(bounds[k], bounds[k + 1])
+        run_len = c1[sl] - c0[sl]
         comp = np.zeros((y1 - y0 + 1, x1 - x0 + 1), dtype=bool)
-        comp[cys - y0, cxs - x0] = True
-        start = (int(cys[0]) - y0, int(cxs[0]) - x0)
-        pts = _trace_boundary(comp, start)
+        xs = np.repeat(c0[sl] - x0 - np.cumsum(run_len) + run_len, run_len)
+        comp[np.repeat(run_y[sl] - y0, run_len), xs + np.arange(len(xs))] = True
+        pts = _trace_boundary(comp, (0, int(c0[sl][0]) - x0))
         arr = np.asarray(pts[::-1], dtype=np.float64)
         arr[:, 0] += x0
         arr[:, 1] += y0

@@ -77,6 +77,13 @@ def stub_recognizer_logits(text: str) -> np.ndarray:
 WIDTH_BUCKET = 320  # svtr/config.rs:14-17 bucket granularity
 
 
+def region_xywh(bbox: tuple[float, float, float, float]) -> tuple[int, int, int, int]:
+    """Detected (x1, y1, x2, y2) -> integer (x, y, w, h), each value
+    round-half-away of its float32 — the rounding the oracles restate."""
+    x1, y1, x2, y2 = bbox
+    return tuple(int(round_half_away(np.float32(v))) for v in (x1, y1, x2 - x1, y2 - y1))
+
+
 def detect_page_regions(html_bytes: bytes | None, url: str) -> list[dict]:
     """DB-detect stage only: one pending record per text region, carrying
     the crop geometry + source text for the deferred recognition stage."""
@@ -96,17 +103,16 @@ def detect_page_regions(html_bytes: bytes | None, url: str) -> list[dict]:
             region_id += 1
             continue
         r = regions[0]
-        x1, y1, x2, y2 = r["bbox"]
-        width = int(round_half_away(np.float32(x2 - x1)))
+        x, y, width, height = region_xywh(r["bbox"])
         out.append(
             {
                 "url": url,
                 "region_id": region_id,
                 "crop_text": blk.text,
-                "x": int(round_half_away(np.float32(x1))),
-                "y": int(round_half_away(np.float32(y1))),
+                "x": x,
+                "y": y,
                 "width": width,
-                "height": int(round_half_away(np.float32(y2 - y1))),
+                "height": height,
                 "conf": float(np.float32(r["conf"])),
                 "bucket": width // WIDTH_BUCKET,
             }

@@ -45,7 +45,7 @@ import pandas as pd
 
 from ..io.synth import GLYPH_BIAS, RASTER_CELL, chunk_text, raster_spec, render_page_raster
 from ..kernels.ocr import ctc_greedy_decode, db_postprocess
-from ..kernels.yolo_decode import round_half_away
+from .ocr import MAX_DECODE_LEN, VOCAB, WIDTH_BUCKET, region_xywh
 
 RASTER_OCR_SCHEMA = (
     "doc_id bigint, region_id int, x int, y int, width int, height int, conf float"
@@ -68,21 +68,10 @@ def detect_raster_regions(doc_id: int, text: str) -> list[tuple]:
         raise RuntimeError(
             f"doc {doc_id}: detected {len(regions)} regions for {len(rects)} rects"
         )
-    rows = []
-    for k, r in enumerate(regions):
-        x1, y1, x2, y2 = r["bbox"]
-        rows.append(
-            (
-                doc_id,
-                k,
-                int(round_half_away(np.float32(x1))),
-                int(round_half_away(np.float32(y1))),
-                int(round_half_away(np.float32(x2 - x1))),
-                int(round_half_away(np.float32(y2 - y1))),
-                float(np.float32(r["conf"])),
-            )
-        )
-    return rows
+    return [
+        (doc_id, k, *region_xywh(r["bbox"]), float(np.float32(r["conf"])))
+        for k, r in enumerate(regions)
+    ]
 
 
 def _raster_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -118,8 +107,6 @@ def raster_ocr_regions(spark, sf_dir: str):
 # GLYPH_BIAS (io/synth.render_page_raster).
 # ---------------------------------------------------------------------------
 
-from .ocr import MAX_DECODE_LEN, VOCAB, WIDTH_BUCKET
-
 
 def read_glyph_logits(crop: np.ndarray) -> np.ndarray:
     """Pixel-native SVTR head: column-max the crop, locate the glyph span
@@ -132,10 +119,9 @@ def read_glyph_logits(crop: np.ndarray) -> np.ndarray:
     if len(nz) == 0:
         return logits
     span = col[nz[0] : nz[-1] + 1]
-    codes = span[::RASTER_CELL].astype(np.int32) - GLYPH_BIAS
-    for t, code in enumerate(codes[: len(logits)]):
-        idx = code - 0x20 + 1 if 0x20 <= code <= 0x7E else 0  # blank outside
-        logits[t, idx] = np.float32(0.95)
+    codes = span[::RASTER_CELL][: len(logits)].astype(np.int32) - GLYPH_BIAS
+    idx = np.where((codes >= 0x20) & (codes <= 0x7E), codes - 0x20 + 1, 0)  # blank outside
+    logits[np.arange(len(idx)), idx] = np.float32(0.95)
     return logits
 
 
@@ -154,16 +140,18 @@ def detect_raster_spans(doc_id: int, text: str) -> list[dict]:
         )
     out = []
     for k, r in enumerate(regions):
-        x1, y1, x2, y2 = r["bbox"]
-        x = int(round_half_away(np.float32(x1)))
-        y = int(round_half_away(np.float32(y1)))
-        w = int(round_half_away(np.float32(x2 - x1)))
-        h = int(round_half_away(np.float32(y2 - y1)))
+        x, y, w, h = region_xywh(r["bbox"])
+        crop = raster[y : y + h, x : x + w]
+        cells = np.count_nonzero(crop.max(axis=0)) // RASTER_CELL  # read_glyph_logits rows
+        if cells > MAX_DECODE_LEN:  # loud, not truncated by the CTC decode
+            raise RuntimeError(
+                f"doc {doc_id}: region {k} has {cells} glyph cells > {MAX_DECODE_LEN}"
+            )
         out.append(
             {
                 "doc_id": doc_id,
                 "region_id": k,
-                "crop": raster[y : y + h, x : x + w],
+                "crop": crop,
                 "x": x, "y": y, "width": w, "height": h,
                 "conf": float(np.float32(r["conf"])),
                 "bucket": w // WIDTH_BUCKET,
@@ -282,21 +270,17 @@ def extract_from_raster(doc_id: int, text: str) -> tuple[int, str]:
         raise RuntimeError(
             f"doc {doc_id}: {len(regions)} regions for {len(chunks)} chunks"
         )
-    boxes = []
-    crops = []
-    for r in regions:
-        x1, y1, x2, y2 = r["bbox"]
-        x = int(round_half_away(np.float32(x1)))
-        y = int(round_half_away(np.float32(y1)))
-        w = int(round_half_away(np.float32(x2 - x1)))
-        h = int(round_half_away(np.float32(y2 - y1)))
-        boxes.append((x, y, w, h))
-        crops.append(raster[y : y + h, x : x + w])
+    boxes = [region_xywh(r["bbox"]) for r in regions]
     order = xycut_order(np.asarray(boxes, dtype=np.float64))
-    texts = [
-        ctc_greedy_decode(read_glyph_logits(crops[i]), VOCAB, max_length=MAX_DECODE_LEN)
-        for i in order
-    ]
+    logits = []
+    for i in order:
+        x, y, w, h = boxes[i]
+        logits.append(read_glyph_logits(raster[y : y + h, x : x + w]))
+        if len(logits[-1]) > MAX_DECODE_LEN:  # loud, not truncated by the CTC decode
+            raise RuntimeError(
+                f"doc {doc_id}: region {i} has {len(logits[-1])} glyph cells > {MAX_DECODE_LEN}"
+            )
+    texts = [ctc_greedy_decode(lg, VOCAB, max_length=MAX_DECODE_LEN) for lg in logits]
     return len(regions), " ".join(texts)
 
 
