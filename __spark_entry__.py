@@ -3,9 +3,8 @@
 ``entry(spark)`` runs the flagship extraction pipeline on sf0.001;
 ``queries()`` exposes every implemented operator (SURVEY.md §2 rebuild +
 training-data ops); ``oracle_sql()`` gives the DuckDB-equivalent SQL for
-every query — round 2: all 43 registry entries carry a full hash oracle
-(stub-model geometry via pinned tables, multimodal via SQL page-byte
-reconstruction).
+every query — every registry entry carries a full hash oracle (see
+usls_doc_spark/queries.py::build_registry).
 """
 
 from __future__ import annotations

@@ -1,8 +1,7 @@
 """Full driver-gate simulation: run EVERY registry query at sf0.01 on
 local[$SPARK_GRAFT_CPUS] and compare against its DuckDB oracle with the
 same row-count + schema + order-insensitive value comparison the driver's
-correctness harness applies (tests/oracle_utils.compare) — including the
-certified tail the driver's 50-row cap would truncate.
+correctness harness applies (tests/oracle_utils.compare).
 
 Usage:  python scripts/gate_sim.py [sf_dir]
 Prints one line per query and a final ALL GREEN / N FAILED summary;

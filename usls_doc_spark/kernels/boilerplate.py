@@ -19,15 +19,12 @@ float32; whitespace normalized with str.split()/join.
 
 from __future__ import annotations
 
-import os
 import re
 from dataclasses import dataclass, field
 from html import unescape
 from html.parser import HTMLParser
 
 import numpy as np
-
-_USE_SLOW_PARSER = os.environ.get("USLS_SLOW_PARSER", "") == "1"
 
 # tags whose text forms one extractable block
 BLOCK_TAGS = frozenset(
@@ -198,8 +195,7 @@ class _BlockParser(HTMLParser):
 # extraction time in its char-by-char goahead loop; the per-event method
 # dispatch was the next-largest share). Byte-identical block output is
 # enforced by tests/test_boilerplate_parser.py differential tests over all
-# fixture pages and an adversarial corpus; USLS_SLOW_PARSER=1 forces the
-# stdlib path.
+# fixture pages and an adversarial corpus.
 # ---------------------------------------------------------------------------
 
 # WELL-FORMED tag grammar only: simple name, whitespace-separated attrs with
@@ -503,8 +499,6 @@ def parse_blocks(html: str) -> list[Block]:
     """Parse HTML into ordered text blocks. Malformed HTML degrades to
     whatever blocks were recoverable (never raises). Markup outside the
     fast tokenizer's well-formed subset re-parses through stdlib."""
-    if _USE_SLOW_PARSER:
-        return parse_blocks_stdlib(html)
     try:
         return _fast_parse(html)
     except _FallbackToStdlib:

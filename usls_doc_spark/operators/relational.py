@@ -18,9 +18,11 @@ Q3_DATE = "1998-03-15 00:00:00"
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Round 8: cache the immutable DataFrame handle per (session, sf_dir)
-    # — spark.read.parquet is a driver-side schema read (~80 ms) paid per
-    # query construction otherwise; executions still scan the parquet.
+    # The package's one table-handle cache (queries._register_views builds
+    # its views from it): the immutable DataFrame handle is cached per
+    # (session, sf_dir) — spark.read.parquet is a driver-side schema read
+    # (~80 ms) paid per query construction otherwise; executions still
+    # scan the parquet.
     cache = getattr(spark, "_usls_rel_dfs", None)
     if cache is None or cache[0] != sf_dir:
         cache = (sf_dir, {})

@@ -1291,8 +1291,7 @@ GROUP BY lang
 
 
 TEXT_QUERIES = {
-    # web-curation family (operators/web_curation.py) — registered EARLY in
-    # queries.build_registry (never yet driver-checked; see its docstring)
+    # web-curation family (operators/web_curation.py)
     **WEB_QUERIES,
     # training-mix planning family (operators/training_mix.py, round 6)
     **TRAINING_QUERIES,

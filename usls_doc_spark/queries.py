@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .io.synth import CHUNK_WORDS, SKEW_MOD, TABLE_MOD, pages_from_documents
 from .operators import relational
-from .operators.dialect import DUCK, SPARK
+from .operators.dialect import DUCK, SPARK, Dialect
 from .operators.multimodal import MULTIMODAL_ORACLE, multimodal_features
 from .operators.similarity import SIMILARITY_QUERIES
 from .operators.text_queries import TEXT_QUERIES
@@ -38,22 +38,12 @@ def _register_views(spark: SparkSession, sf_dir: str) -> None:
     # oversized (e.g. the 200 default) — harmless if already enabled
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    # Round 8: spark.read.parquet is a driver-side schema/footer read per
-    # table (~0.9 s for the 10 tables, paid by EVERY templated query —
-    # ~50 s across the bench). The immutable DataFrame handles are cached
-    # per (session, sf_dir); the VIEWS are still re-registered on every
-    # call, so a caller (tests) that overrode a view with synthetic data
-    # gets it re-pointed at the parquet table exactly as before, and
+    # The views come from relational._t's cached parquet handles but are
+    # re-registered on every call, so a caller (tests) that overrode a view
+    # with synthetic data gets it re-pointed at the parquet table, and
     # every execution still reads the parquet inputs from disk.
-    cached = getattr(spark, "_usls_table_dfs", None)
-    if cached is None or cached[0] != sf_dir:
-        cached = (
-            sf_dir,
-            {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TABLES},
-        )
-        spark._usls_table_dfs = cached
-    for t, df in cached[1].items():
-        df.createOrReplaceTempView(t)
+    for t in TABLES:
+        relational._t(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 # --------------------------------------------------------------------------
@@ -195,302 +185,59 @@ WHERE doc_id % {SKEW_MOD} = 0 HAVING count(*) > 0
 # registry
 # --------------------------------------------------------------------------
 
-def _sql_query(name: str) -> Callable[[SparkSession, str], DataFrame]:
+def _template_query(
+    name: str, template: Callable[[Dialect], str]
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Spark side of a two-dialect template: the SPARK rendering over the
+    parquet views (the DUCK rendering is the oracle)."""
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         _register_views(spark, sf_dir)
-        return spark.sql(TEXT_QUERIES[name](SPARK))
+        return spark.sql(template(SPARK))
 
     run.__name__ = name
     return run
-
-
-def _sim_query(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _register_views(spark, sf_dir)
-        return spark.sql(SIMILARITY_QUERIES[name](SPARK))
-
-    run.__name__ = name
-    return run
-
-
-# Registration ORDER is the driver contract (round-3 VERDICT item 1: the
-# driver checks queries in registration order and has truncated at exactly
-# 50 rows). Round 6 replaces the hand-wired head/tail split with a
-# deterministic LEAST-CERTIFIED-FIRST sort: _GREEN_ROWS records each
-# query's green driver-row count through CORRECTNESS_r07 (updated round 8
-# per r7 VERDICT item 4 — all 50 r7 head rows came back green, +1 each;
-# exact per-round histories in the committed CORRECTNESS_r0N.json files;
-# counts here are GREEN rows, so host_graph_pagerank's r5 red row does
-# not count and multimodal_features / ocr_regions_detail exclude their r1
-# reds), new queries default to 0 and therefore register right after the
-# pins, and ties keep construction order. A 50-row driver cap then always
-# lands on the most-certified residue — never a novel path — with no
-# per-round hand curation.
-_GREEN_ROWS = {
-    # 7 green rows (r1-r7)
-    "extract_text": 7,
-    # 5 green rows
-    "extract_block_hist": 5, "extract_metrics": 5, "ocr_spans": 5,
-    # 4 green rows (the r7 head's re-certified members joined this band)
-    "ann_ivf_probe": 4, "ann_lsh_buckets": 4, "ann_topk_cosine": 4,
-    "asof_join_purchases": 4, "corpus_curation": 4,
-    "customers_without_orders": 4, "decontaminate_ngram_overlap": 4,
-    "dedup_components": 4, "dedup_embedding_cosine": 4, "dedup_exact": 4,
-    "dedup_minhash_lsh": 4, "dedup_ngram_jaccard": 4, "events_pivot": 4,
-    "events_rollup": 4, "events_sessionize": 4,
-    "events_tumbling_window": 4, "fingerprint_rolling_hash": 4,
-    "fingerprint_simhash": 4, "host_cap_sample": 4, "inverted_index": 4,
-    "lang_detect_stopwords": 4, "lang_word_rank": 4,
-    "layout_instances": 4, "lsh_recall": 4, "multimodal_features": 4,
-    "ocr_regions_detail": 4, "orders_running_total": 4,
-    "paragraph_dedup": 4, "q17_small_quantity": 4, "q1_pricing_summary": 4,
-    "q3_top_orders": 4, "q4_priority_semi": 4, "q5_region_revenue": 4,
-    "quality_score": 4, "raster_extract_text": 4,
-    "raster_layout_blocks": 4, "raster_ocr_regions": 4,
-    "raster_ocr_spans": 4, "repetition_filter": 4, "split_and_pack": 4,
-    "stratified_sample": 4, "streaming_click_attribution": 4,
-    "streaming_dedup_exact": 4, "streaming_events_window": 4,
-    "streaming_extract_text": 4, "table_cells": 4, "text_stats": 4,
-    "tfidf_top_terms": 4, "token_count_bpe": 4,
-    "top_customers_per_segment": 4, "trocr_transcripts": 4,
-    "url_canonicalize": 4,
-    # 3 green rows (last driver-checked r5/r7 mixes; the computed order
-    # puts the stalest of these inside the next head-50 so certification
-    # keeps rotating)
-    "bloom_dedup_probe": 3, "cdc_upsert_compact": 3,
-    "cms_heavy_hitters": 3, "cohort_retention": 3, "dedup_incremental": 3,
-    "dedup_simhash": 3, "dup_window_fraction": 3, "funnel_conversion": 3,
-    "hll_distinct_chunks": 3, "lang_setops": 3, "line_freq_filter": 3,
-    "multimodal_frame_sample": 3, "ngram_counts": 3, "pii_redact": 3,
-    "priority_sample_weighted": 3, "q6_revenue_delta": 3,
-    "quality_ngram_familiarity": 3,
-    "streaming_click_attribution_full": 3,
-    "streaming_click_attribution_outer": 3, "streaming_cms_sketch": 3,
-    "streaming_enrich_events": 3, "streaming_sessionize": 3,
-    "token_quantiles": 3, "url_canonicalize_agg": 3, "zorder_cluster": 3,
-    # 2 green rows (the round-6 additions, re-certified r7)
-    "anchor_text_agg": 2, "bpe_merge_step": 2, "domain_mix_weights": 2,
-    "events_hopping_window": 2, "host_graph_pagerank": 2,
-    "kmeans_lloyd_step": 2, "robots_policy_filter": 2,
-    "streaming_events_hopping": 2,
-    # 1 green row (the round-7 additions, certified r7)
-    "dedup_semantic_cells": 1, "dup_char_kgram_fraction": 1,
-    "export_roundtrip": 1, "kmeans_ivf_build": 1, "lm_bigram_fluency": 1,
-    "streaming_dedup_minhash": 1,
-}
-
-# Pinned to the very front regardless of count: the flagship (driver smoke
-# entry). The r6 re-certification pins (host_graph_pagerank,
-# quality_ngram_familiarity) came back green and now sort by their counts.
-_HEAD_PINS = ("extract_text",)
-
-
-def _order_registry(queries: dict, oracles: dict) -> tuple[dict, dict]:
-    """Reorder both dicts least-certified-first with _HEAD_PINS in front."""
-    def sort_key(item):
-        idx, name = item
-        if name in _HEAD_PINS:
-            return (0, _HEAD_PINS.index(name), 0)
-        return (1, _GREEN_ROWS.get(name, 0), idx)
-
-    ordered = [n for _, n in sorted(
-        ((i, n) for i, n in enumerate(queries)), key=sort_key)]
-    return ({n: queries[n] for n in ordered}, {n: oracles[n] for n in ordered
-                                               if n in oracles})
-
-
-# Construction-order grouping below is now organizational only (the final
-# _order_registry pass determines driver order); kept so multiply-certified
-# relational/text/similarity members still register through the shared loops.
-_CERTIFIED_TAIL = ("text_stats", "token_count_bpe", "quality_score",
-                   "fingerprint_simhash", "lang_detect_stopwords",
-                   "dedup_exact", "fingerprint_rolling_hash",
-                   "quality_ngram_familiarity", "q6_revenue_delta",
-                   "lang_setops", "events_pivot", "q17_small_quantity",
-                   "events_rollup", "customers_without_orders",
-                   "asof_join_purchases", "events_sessionize",
-                   "q1_pricing_summary", "q3_top_orders",
-                   "q5_region_revenue", "top_customers_per_segment",
-                   "events_tumbling_window", "q4_priority_semi",
-                   "orders_running_total", "corpus_curation",
-                   "ann_topk_cosine", "ann_lsh_buckets",
-                   "dedup_embedding_cosine", "dedup_ngram_jaccard",
-                   "ann_ivf_probe", "dedup_minhash_lsh",
-                   "dedup_incremental", "lang_word_rank")
 
 
 def build_registry() -> tuple[dict, dict]:
     """Returns (queries, oracles) for the driver contract.
 
-    ORDER IS THE DRIVER CONTRACT (round-3 VERDICT item 1): the driver
-    checks queries in registration order and truncated at 50/54 in round 3.
-    Since round 6 the order is computed by _order_registry — _HEAD_PINS
-    first, then ascending green-driver-row count (_GREEN_ROWS; new queries
-    count 0) — so a driver cap always truncates the most-certified tail."""
-    queries: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    oracles: dict[str, str] = {}
-
-    # extraction flagship
-    queries["extract_text"] = extract_text
-    oracles["extract_text"] = EXTRACT_TEXT_ORACLE
-
-    # ---- at-risk head: the four rows CORRECTNESS_r03 never checked ----
-    # streaming extraction: same byte-identical oracle as batch extract_text
-    from .streaming.extract import streaming_extract_text
-
-    queries["streaming_extract_text"] = streaming_extract_text
-    oracles["streaming_extract_text"] = EXTRACT_TEXT_ORACLE
-
-    # multimodal: oracle rebuilds the synthesized page bytes in SQL
-    queries["multimodal_features"] = multimodal_features
-    oracles["multimodal_features"] = MULTIMODAL_ORACLE
-
-    # multimodal frame sampling: mapInPandas fan-OUT (up to K strided
-    # frame rows per payload), oracle slices the rebuilt byte list
-    from .operators.multimodal import FRAME_SAMPLE_ORACLE, multimodal_frame_sample
-
-    queries["multimodal_frame_sample"] = multimodal_frame_sample
-    oracles["multimodal_frame_sample"] = FRAME_SAMPLE_ORACLE
-
-    # streaming (oracle = the batch-equivalent SQL)
-    queries["streaming_events_window"] = streaming_events_window
-    oracles["streaming_events_window"] = STREAMING_ORACLE
-
-    # hopping (sliding) streaming window — converges to the batch
-    # events_hopping_window answer (same oracle; round 6)
-    from .operators.relational import EVENTS_HOPPING_ORACLE
-    from .streaming.events import streaming_events_hopping
-
-    queries["streaming_events_hopping"] = streaming_events_hopping
-    oracles["streaming_events_hopping"] = EVENTS_HOPPING_ORACLE
-
-    # stateful streaming exact-dedup: converges to the batch dedup_exact
-    # answer (same oracle) across any micro-batch split
-    from .streaming.dedup import streaming_dedup_exact
-
-    queries["streaming_dedup_exact"] = streaming_dedup_exact
-    oracles["streaming_dedup_exact"] = TEXT_QUERIES["dedup_exact"](DUCK)
-
-    # stateful streaming MinHash-LSH near-dup candidates (round 7): per-
-    # (band, band_key) bucket membership folded as keep-smallest-BAND_CAP
-    # — converges to the batch dedup_minhash_lsh answer at any micro-batch
-    # split (same oracle)
-    from .streaming.dedup_minhash import streaming_dedup_minhash
-
-    queries["streaming_dedup_minhash"] = streaming_dedup_minhash
-    oracles["streaming_dedup_minhash"] = TEXT_QUERIES["dedup_minhash_lsh"](DUCK)
-
-    # stateful streaming sessionization with EVENT-TIME TIMEOUT eviction:
-    # converges to the batch events_sessionize answer (same oracle)
-    from .operators.relational import SESSIONIZE_SQL
-    from .streaming.sessionize import streaming_sessionize
-
-    queries["streaming_sessionize"] = streaming_sessionize
-    oracles["streaming_sessionize"] = SESSIONIZE_SQL
-
-    # stream-static enrichment join (stateless dim lookup, broadcast per
-    # micro-batch): converges to the batch LEFT JOIN at any file split
-    from .streaming.enrich import ENRICH_ORACLE, streaming_enrich_events
-
-    queries["streaming_enrich_events"] = streaming_enrich_events
-    oracles["streaming_enrich_events"] = ENRICH_ORACLE
-
-    # incremental CMS maintenance: per-micro-batch partial sketches
-    # appended, merged by group-by-sum — equals the batch sketch at any
-    # split (sketch addition IS multiset union)
-    from .operators.web_curation import cms_sketch_sql
-    from .streaming.cms import streaming_cms_sketch
-
-    queries["streaming_cms_sketch"] = streaming_cms_sketch
-    oracles["streaming_cms_sketch"] = cms_sketch_sql(DUCK)
-
-    # web-curation family (operators/web_curation.py): the round-4 five
-    # plus round-5's url_canonicalize_agg register inside the at-risk head
-    # (the round-4 members got their first green driver rows in r4; the
-    # paragraph_dedup / inverted_index templates were REWRITTEN round 5 —
-    # skew-safe aggregation forms — so they are at-risk again)
-    from .operators.web_curation import WEB_QUERIES
-
-    for name in WEB_QUERIES:
-        queries[name] = _sql_query(name)
-        oracles[name] = TEXT_QUERIES[name](DUCK)
-
-    # round 8: Spark-side materialized execution for the CMS audit query
-    # (the template's twice-referenced tokens CTE re-ran the 2M-bigram
-    # md5 explode; oracle text unchanged)
-    from .operators.web_curation import cms_heavy_hitters_exec
-
-    queries["cms_heavy_hitters"] = cms_heavy_hitters_exec
-
-    # round 8: materialized execution for the bigram-LM scorer (the
-    # template's executed plan held 12 documents scans via CTE inlining;
-    # the exec runs 4 with c1 derived from materialized c2; oracle text
-    # unchanged)
-    from .operators.text_exec import dedup_simhash_exec, lm_bigram_fluency_exec
-
-    queries["lm_bigram_fluency"] = lm_bigram_fluency_exec
-    # the TEXT_QUERIES loop below skips names already in `queries`, so
-    # the oracle must be registered here explicitly
-    oracles["lm_bigram_fluency"] = TEXT_QUERIES["lm_bigram_fluency"](DUCK)
-
-    # round 8: simhash with the signature CTE materialized once (the
-    # template re-ran the md5+bit-vote projection for each of its three
-    # references; oracle text unchanged)
-    queries["dedup_simhash"] = dedup_simhash_exec
-    oracles["dedup_simhash"] = TEXT_QUERIES["dedup_simhash"](DUCK)
-
-    # round 8: lsh_recall with ds/cands/exact materialized once (the
-    # template's scalar subqueries re-ran the whole subtree per
-    # reference — 52 parquet scans for a one-row answer; oracle text
-    # unchanged)
-    from .operators.text_exec import lsh_recall_exec
-
-    queries["lsh_recall"] = lsh_recall_exec
-    oracles["lsh_recall"] = TEXT_QUERIES["lsh_recall"](DUCK)
-
-    # packed-shard export round-trip (round 7): terminal sink -> custom
-    # Python DataSource (manifest-planned, per-shard sha256-verified) ->
-    # full row set == the split_and_pack assignment + text, proven in SQL
+    Registration order is construction order: the hand-wired entries
+    (flagship `extract_text` first), then the relational suite, then every
+    text and similarity template. A name registered by two families raises
+    ValueError. The `execs` table then swaps a template's Spark callable
+    for a Spark-side execution; the template's DUCK text stays the oracle,
+    and an exec that names no template raises ValueError."""
     from .io.shard_source import export_roundtrip, export_roundtrip_oracle
-
-    queries["export_roundtrip"] = export_roundtrip
-    oracles["export_roundtrip"] = export_roundtrip_oracle()
-
-    # trained-Lloyd-chain queries (round 8): the Spark side runs the
-    # materialized iterative execution (operators/training_mix_exec.py —
-    # ONE embeddings scan instead of the 96/142 scans Spark's CTE
-    # inlining made of the unrolled template); the oracle is the
-    # unchanged single-statement template text
+    from .operators.components import components_oracle, dedup_components
+    from .operators.grouped import LANG_WORD_RANK_ORACLE, lang_word_rank
+    from .operators.instances_query import instances_oracle, layout_instances
+    from .operators.multimodal import FRAME_SAMPLE_ORACLE, multimodal_frame_sample
+    from .operators.relational import EVENTS_HOPPING_ORACLE, SESSIONIZE_SQL
+    from .operators.text_exec import (
+        corpus_curation_exec,
+        dedup_ngram_jaccard_exec,
+        dedup_simhash_exec,
+        lm_bigram_fluency_exec,
+        lsh_recall_exec,
+        quality_ngram_familiarity_exec,
+    )
     from .operators.training_mix_exec import (
         dedup_semantic_cells_exec,
         kmeans_ivf_build_exec,
     )
-
-    queries["kmeans_ivf_build"] = kmeans_ivf_build_exec
-    oracles["kmeans_ivf_build"] = TEXT_QUERIES["kmeans_ivf_build"](DUCK)
-    queries["dedup_semantic_cells"] = dedup_semantic_cells_exec
-    oracles["dedup_semantic_cells"] = TEXT_QUERIES["dedup_semantic_cells"](DUCK)
-
-    # char-k-gram dedup (round 7): Spark side runs the O(n) Rabin-Karp
-    # kernel through mapInPandas (Spark's interpreted HOF fold is minutes
-    # at sf0.1); the oracle is the unchanged SQL-fold template
+    from .operators.web_curation import cms_heavy_hitters_exec, cms_sketch_sql
     from .pipeline.chargrams import dup_char_kgram_fraction
-
-    queries["dup_char_kgram_fraction"] = dup_char_kgram_fraction
-    oracles["dup_char_kgram_fraction"] = TEXT_QUERIES["dup_char_kgram_fraction"](DUCK)
-
-    # anchor-text aggregation from raw page HTML (round 6): the crawl-
-    # frontier lens — mapInPandas link scan + hot-key-safe hash agg,
-    # oracle rebuilds every page's links in SQL from the generator spec
     from .pipeline.links import ANCHOR_AGG_ORACLE, anchor_text_agg
-
-    queries["anchor_text_agg"] = anchor_text_agg
-    oracles["anchor_text_agg"] = ANCHOR_AGG_ORACLE
-
-    # stream-stream interval joins (streaming/attribution.py): the round-4
-    # inner form and the round-5 LEFT-OUTER and FULL-OUTER forms
-    # (unmatched rows emit with NULLs once the watermark closes them —
-    # sentinel-driven closure on both state sides)
+    from .pipeline.raster_layout import raster_layout_blocks, raster_layout_oracle
+    from .pipeline.raster_ocr import (
+        RASTER_EXTRACT_ORACLE,
+        raster_extract_text,
+        raster_ocr_oracle,
+        raster_ocr_regions,
+        raster_ocr_spans,
+    )
+    from .pipeline.tables import TABLE_CELLS_ORACLE, table_cells
+    from .pipeline.trocr import TROCR_ORACLE, trocr_transcripts
     from .streaming.attribution import (
         ATTRIBUTION_FULL_ORACLE,
         ATTRIBUTION_ORACLE,
@@ -499,143 +246,91 @@ def build_registry() -> tuple[dict, dict]:
         streaming_click_attribution_full,
         streaming_click_attribution_outer,
     )
+    from .streaming.cms import streaming_cms_sketch
+    from .streaming.dedup import streaming_dedup_exact
+    from .streaming.dedup_minhash import streaming_dedup_minhash
+    from .streaming.enrich import ENRICH_ORACLE, streaming_enrich_events
+    from .streaming.events import streaming_events_hopping
+    from .streaming.extract import streaming_extract_text
+    from .streaming.sessionize import streaming_sessionize
 
-    queries["streaming_click_attribution"] = streaming_click_attribution
-    oracles["streaming_click_attribution"] = ATTRIBUTION_ORACLE
-    queries["streaming_click_attribution_outer"] = streaming_click_attribution_outer
-    oracles["streaming_click_attribution_outer"] = ATTRIBUTION_OUTER_ORACLE
-    queries["streaming_click_attribution_full"] = streaming_click_attribution_full
-    oracles["streaming_click_attribution_full"] = ATTRIBUTION_FULL_ORACLE
-    # -------------------------------------------------------------------
-
-    queries["extract_metrics"] = extract_metrics
-    oracles["extract_metrics"] = EXTRACT_METRICS_ORACLE
-    queries["extract_block_hist"] = extract_block_hist
-    oracles["extract_block_hist"] = EXTRACT_BLOCK_HIST_ORACLE
-    queries["ocr_spans"] = ocr_spans_text
-    oracles["ocr_spans"] = OCR_SPANS_ORACLE
-    queries["ocr_regions_detail"] = ocr_regions_detail
-    oracles["ocr_regions_detail"] = _ocr_regions_oracle()
-
-    # TrOCR autoregressive recognition (R3/R6), EOS + max-steps oracled
-    from .pipeline.trocr import TROCR_ORACLE, trocr_transcripts
-
-    queries["trocr_transcripts"] = trocr_transcripts
-    oracles["trocr_transcripts"] = TROCR_ORACLE
-
-    # OBB / keypoint / instance-mask decode (L8-L10), pinned-geometry oracle
-    from .operators.instances_query import instances_oracle, layout_instances
-
-    queries["layout_instances"] = layout_instances
-    oracles["layout_instances"] = instances_oracle()
-
-    # pixel-native D1-D7 detection over rendered page rasters, oracled
-    # from the RENDER SPEC (no pinned kernel output — round-2 VERDICT #1)
-    from .pipeline.raster_ocr import (
-        raster_ocr_oracle,
-        raster_ocr_regions,
-        raster_ocr_spans,
+    # name -> (Spark callable, DuckDB oracle). Streaming queries converge
+    # to their batch twin's answer at any micro-batch split, so they share
+    # its oracle.
+    hand_wired = {
+        "extract_text": (extract_text, EXTRACT_TEXT_ORACLE),
+        "streaming_extract_text": (streaming_extract_text, EXTRACT_TEXT_ORACLE),
+        # oracles rebuild the synthesized page bytes in SQL
+        "multimodal_features": (multimodal_features, MULTIMODAL_ORACLE),
+        "multimodal_frame_sample": (multimodal_frame_sample, FRAME_SAMPLE_ORACLE),
+        "streaming_events_window": (streaming_events_window, STREAMING_ORACLE),
+        "streaming_events_hopping": (streaming_events_hopping, EVENTS_HOPPING_ORACLE),
+        "streaming_dedup_exact": (
+            streaming_dedup_exact, TEXT_QUERIES["dedup_exact"](DUCK)),
+        "streaming_dedup_minhash": (
+            streaming_dedup_minhash, TEXT_QUERIES["dedup_minhash_lsh"](DUCK)),
+        "streaming_sessionize": (streaming_sessionize, SESSIONIZE_SQL),
+        "streaming_enrich_events": (streaming_enrich_events, ENRICH_ORACLE),
+        "streaming_cms_sketch": (streaming_cms_sketch, cms_sketch_sql(DUCK)),
+        # packed-shard sink -> usls_shards DataSource round trip
+        "export_roundtrip": (export_roundtrip, export_roundtrip_oracle()),
+        # oracle rebuilds every page's links in SQL from the generator spec
+        "anchor_text_agg": (anchor_text_agg, ANCHOR_AGG_ORACLE),
+        # stream-stream interval joins: inner, left-outer, full-outer
+        "streaming_click_attribution": (
+            streaming_click_attribution, ATTRIBUTION_ORACLE),
+        "streaming_click_attribution_outer": (
+            streaming_click_attribution_outer, ATTRIBUTION_OUTER_ORACLE),
+        "streaming_click_attribution_full": (
+            streaming_click_attribution_full, ATTRIBUTION_FULL_ORACLE),
+        "extract_metrics": (extract_metrics, EXTRACT_METRICS_ORACLE),
+        "extract_block_hist": (extract_block_hist, EXTRACT_BLOCK_HIST_ORACLE),
+        "ocr_spans": (ocr_spans_text, OCR_SPANS_ORACLE),
+        "ocr_regions_detail": (ocr_regions_detail, _ocr_regions_oracle()),
+        "trocr_transcripts": (trocr_transcripts, TROCR_ORACLE),
+        "layout_instances": (layout_instances, instances_oracle()),
+        # pixel-native paths, oracled from the render spec
+        "raster_ocr_regions": (raster_ocr_regions, raster_ocr_oracle()),
+        "raster_ocr_spans": (raster_ocr_spans, raster_ocr_oracle(with_text=True)),
+        "raster_extract_text": (raster_extract_text, RASTER_EXTRACT_ORACLE),
+        "raster_layout_blocks": (raster_layout_blocks, raster_layout_oracle()),
+        "table_cells": (table_cells, TABLE_CELLS_ORACLE),
+        # iterative Spark loop vs DuckDB recursive CTE
+        "dedup_components": (dedup_components, components_oracle()),
+        "lang_word_rank": (lang_word_rank, LANG_WORD_RANK_ORACLE),
+    }
+    families = (
+        hand_wired,
+        relational.RELATIONAL_QUERIES,
+        {n: (_template_query(n, t), t(DUCK)) for n, t in TEXT_QUERIES.items()},
+        {n: (_template_query(n, t), t(DUCK)) for n, t in SIMILARITY_QUERIES.items()},
     )
+    # Spark-side executions of templates whose plan Spark runs badly (it
+    # inlines every CTE reference, so a twice-referenced CTE re-runs its
+    # whole subtree; interpreted HOF folds are minutes at sf0.1). Each
+    # must stay row-identical to its template.
+    execs = {
+        "cms_heavy_hitters": cms_heavy_hitters_exec,
+        "lm_bigram_fluency": lm_bigram_fluency_exec,
+        "dedup_simhash": dedup_simhash_exec,
+        "lsh_recall": lsh_recall_exec,
+        "kmeans_ivf_build": kmeans_ivf_build_exec,
+        "dedup_semantic_cells": dedup_semantic_cells_exec,
+        "dup_char_kgram_fraction": dup_char_kgram_fraction,
+        "dedup_ngram_jaccard": dedup_ngram_jaccard_exec,
+        "corpus_curation": corpus_curation_exec,
+        "quality_ngram_familiarity": quality_ngram_familiarity_exec,
+    }
 
-    queries["raster_ocr_regions"] = raster_ocr_regions
-    oracles["raster_ocr_regions"] = raster_ocr_oracle()
-
-    # end-to-end pixel-native OCR: glyph-coded raster -> detect -> crop at
-    # DETECTED geometry -> pixel-read recognize -> CTC; the source text
-    # never reaches the model stub
-    queries["raster_ocr_spans"] = raster_ocr_spans
-    oracles["raster_ocr_spans"] = raster_ocr_oracle(with_text=True)
-
-    # the pixel-native flagship: render -> detect -> XY-cut -> recognize ->
-    # byte-identical extracted text (two-column pages prove the ordering)
-    from .pipeline.raster_ocr import RASTER_EXTRACT_ORACLE, raster_extract_text
-
-    queries["raster_extract_text"] = raster_extract_text
-    oracles["raster_extract_text"] = RASTER_EXTRACT_ORACLE
-
-    # pixel-native layout detection: anchor-free pixel head -> real
-    # L2-L7+NMS+L12 decode, spec-oracled (incl. abandon drop + sub-stride
-    # miss semantics)
-    from .pipeline.raster_layout import raster_layout_blocks, raster_layout_oracle
-
-    queries["raster_layout_blocks"] = raster_layout_blocks
-    oracles["raster_layout_blocks"] = raster_layout_oracle()
-
-    # SLANet table-structure decode over merged <table> blocks (§2.7)
-    from .pipeline.tables import TABLE_CELLS_ORACLE, table_cells
-
-    queries["table_cells"] = table_cells
-    oracles["table_cells"] = TABLE_CELLS_ORACLE
-
-    # relational (_CERTIFIED_TAIL members register last)
-    for name, (fn, oracle) in relational.RELATIONAL_QUERIES.items():
-        if name in _CERTIFIED_TAIL:
-            continue
-        queries[name] = fn
-        oracles[name] = oracle
-
-    # text / dedup (two-dialect templates); _CERTIFIED_TAIL register last,
-    # the web-curation family already registered in the at-risk head
-    for name, tmpl in TEXT_QUERIES.items():
-        if name in _CERTIFIED_TAIL or name in queries:
-            continue
-        queries[name] = _sql_query(name)
-        oracles[name] = tmpl(DUCK)
-
-    # similarity (_CERTIFIED_TAIL members register last)
-    for name, tmpl in SIMILARITY_QUERIES.items():
-        if name in _CERTIFIED_TAIL:
-            continue
-        queries[name] = _sim_query(name)
-        oracles[name] = tmpl(DUCK)
-
-    # connected-components canonical dedup (iterative Spark loop vs
-    # DuckDB recursive CTE)
-    from .operators.components import components_oracle, dedup_components
-
-    queries["dedup_components"] = dedup_components
-    oracles["dedup_components"] = components_oracle()
-
-    # grouped-map (applyInPandas path) — promoted to _CERTIFIED_TAIL in
-    # round 5 (4 green driver rows), registered by the tail loop below
-    from .operators.grouped import LANG_WORD_RANK_ORACLE, lang_word_rank
-
-    # multiply-certified tail (see _CERTIFIED_TAIL note above)
-    for name in _CERTIFIED_TAIL:
-        if name == "lang_word_rank":
-            queries[name], oracles[name] = lang_word_rank, LANG_WORD_RANK_ORACLE
-        elif name in relational.RELATIONAL_QUERIES:
-            fn, oracle = relational.RELATIONAL_QUERIES[name]
+    queries: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+    oracles: dict[str, str] = {}
+    for family in families:
+        for name, (fn, oracle) in family.items():
+            if name in queries:
+                raise ValueError(f"query {name!r} is registered by two families")
             queries[name], oracles[name] = fn, oracle
-        elif name in SIMILARITY_QUERIES:
-            queries[name] = _sim_query(name)
-            oracles[name] = SIMILARITY_QUERIES[name](DUCK)
-        else:
-            queries[name] = _sql_query(name)
-            oracles[name] = TEXT_QUERIES[name](DUCK)
-
-    # round 8: the shared-LSH pair queries with the shingle table
-    # materialized once (ds re-ran 8x/10x via CTE inlining; oracle texts
-    # unchanged). Registered AFTER the _CERTIFIED_TAIL loop — both names
-    # are tail members, so an earlier override would be silently
-    # re-registered back to the template (this bit once).
-    from .operators.text_exec import (
-        corpus_curation_exec,
-        dedup_ngram_jaccard_exec,
-        quality_ngram_familiarity_exec,
-    )
-
-    queries["dedup_ngram_jaccard"] = dedup_ngram_jaccard_exec
-    oracles["dedup_ngram_jaccard"] = TEXT_QUERIES["dedup_ngram_jaccard"](DUCK)
-    queries["corpus_curation"] = corpus_curation_exec
-    oracles["corpus_curation"] = TEXT_QUERIES["corpus_curation"](DUCK)
-    # round 8: quality_ngram_familiarity's trigram stage is an interpreted
-    # HOF lambda re-run 3x via dtg inlining (149 s isolated at sf0.1,
-    # never bench-timed — found closing the bench blind spot); the exec
-    # runs the dtg stage as a mapInPandas kernel, materialized once.
-    queries["quality_ngram_familiarity"] = quality_ngram_familiarity_exec
-    oracles["quality_ngram_familiarity"] = TEXT_QUERIES[
-        "quality_ngram_familiarity"
-    ](DUCK)
-
-    return _order_registry(queries, oracles)
+    for name, fn in execs.items():
+        if name not in TEXT_QUERIES and name not in SIMILARITY_QUERIES:
+            raise ValueError(f"exec {name!r} replaces no template query")
+        queries[name] = fn
+    return queries, oracles
