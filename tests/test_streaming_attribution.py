@@ -75,7 +75,7 @@ def test_attribution_outer_nulls_emit_only_after_watermark(spark, tmp_path_facto
             spark.read.parquet(f"{SF_DIR}/events.parquet")
             .selectExpr("max(ts) AS m").collect()[0]["m"]
         )
-        write_watermark_sentinels(spark, str(base), max_ts)
+        write_watermark_sentinels(str(base), max_ts)
         q.processAllAvailable()
         progress = q.lastProgress
     finally:

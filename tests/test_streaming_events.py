@@ -57,7 +57,7 @@ def _split_events(spark, base, stage):
         shutil.move(f"{sdir}/{part}", dest)
         os.utime(dest, (2_000_000_000 + i, 2_000_000_000 + i))
     max_ts = events.agg(F.max("ts")).collect()[0][0]
-    write_window_sentinels(spark, str(base), max_ts, mtime_base=2_000_000_005)
+    write_window_sentinels(str(base), max_ts, mtime_base=2_000_000_005)
 
 
 def test_split_stream_accumulates_evicts_and_emits_once(spark, tmp_path_factory):

@@ -16,22 +16,21 @@ the batch SQL. Cross-batch buffering (a view arriving in micro-batch 1
 matched by a purchase in micro-batch 2) is exercised deterministically in
 tests/test_streaming_attribution.py via a time-ordered 2-file split.
 
-Sink discipline: append-mode foreachBatch parquet (executor-side write,
-never driver memory), zero-batch guarded by read_sink_or_empty.
+Sink discipline: the shared drain in streaming/sink.py (append-mode
+per-batch parquet written on the executors, never driver memory,
+zero-batch guarded by read_sink_or_empty).
 """
 
 from __future__ import annotations
 
-import shutil
-import tempfile
+from datetime import timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-EVENTS_SCHEMA = (
-    "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-    "value double, props string"
-)
+from .events import EVENTS_SCHEMA
+from .sentinel import stage_events, write_events_file
+from .sink import drain, file_stream, read_sink_or_empty, start_sink
 
 ATTRIBUTION_OUT_SCHEMA = (
     "view_id bigint, purchase_id bigint, user_id bigint, "
@@ -41,14 +40,6 @@ ATTRIBUTION_OUT_SCHEMA = (
 WINDOW_MINUTES = 120
 
 _QUERY_NAME = "usls_stream_attribution"
-
-
-def _event_stream(spark: SparkSession, events_dir: str, glob: str,
-                  max_files: int | None):
-    reader = spark.readStream.schema(EVENTS_SCHEMA).option("pathGlobFilter", glob)
-    if max_files is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files)
-    return reader.parquet(events_dir)
 
 
 def start_attribution_stream(spark: SparkSession, events_dir: str,
@@ -65,11 +56,8 @@ def start_attribution_stream(spark: SparkSession, events_dir: str,
     global watermark (the MIN across both sides' watermarks) passes the
     row's state-closure point and Structured Streaming can prove no
     match will arrive."""
-    for q in spark.streams.active:
-        if q.name == query_name:
-            q.stop()
     views = (
-        _event_stream(spark, events_dir, glob, max_files)
+        file_stream(spark, EVENTS_SCHEMA, events_dir, glob, max_files)
         .filter(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
@@ -79,7 +67,7 @@ def start_attribution_stream(spark: SparkSession, events_dir: str,
         .withWatermark("view_ts", "1 hour")
     )
     purchases = (
-        _event_stream(spark, events_dir, glob, max_files)
+        file_stream(spark, EVENTS_SCHEMA, events_dir, glob, max_files)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -107,28 +95,7 @@ def start_attribution_stream(spark: SparkSession, events_dir: str,
         "purchase_ts",
         (F.unix_millis("purchase_ts") - F.unix_millis("view_ts")).alias("lag_ms"),
     )
-
-    def _append(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(sink_dir)
-
-    return (
-        joined.writeStream.outputMode("append")
-        .foreachBatch(_append)
-        .queryName(query_name)
-        .start()
-    )
-
-
-def dropped_by_watermark(q) -> int:
-    """Total rows the join state dropped as too-late across the query's
-    recorded progress — nonzero means some input arrived more than the
-    watermark delay out of event-time order and was EXCLUDED from the
-    join, silently diverging from the batch oracle."""
-    return sum(
-        int(so.get("numRowsDroppedByWatermark", 0))
-        for p in q.recentProgress
-        for so in p.get("stateOperators", [])
-    )
+    return start_sink(joined, sink_dir, query_name)
 
 
 def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -140,39 +107,20 @@ def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 1-hour watermark delay out of event-time order — a later file
     containing older events would have its late rows dropped from join
     state with no error. The driver path reads one events.parquet in a
-    single micro-batch, so this holds trivially; the assert below turns
-    any future multi-file source violating it into a loud failure."""
-    import atexit
-
-    from .tuning import scaled_state_partitions, stream_shuffle_partitions
-
-    sink_dir = tempfile.mkdtemp(prefix="usls_stream_attr_")
-    shutil.rmtree(sink_dir, ignore_errors=True)
-    atexit.register(shutil.rmtree, sink_dir, ignore_errors=True)
-    with stream_shuffle_partitions(
-        spark, scaled_state_partitions(spark, f"{sf_dir}/events.parquet")
-    ):
-        q = start_attribution_stream(spark, sf_dir, sink_dir)
-        try:
-            q.processAllAvailable()
-            dropped = dropped_by_watermark(q)
-        finally:
-            q.stop()
-    if dropped:
-        raise RuntimeError(
-            f"{dropped} late rows dropped by watermark — input files arrived "
-            "out of event-time order; the batch oracle no longer applies"
-        )
-    from .sink import read_sink_or_empty
-
+    single micro-batch, so this holds trivially; sink.drain turns any
+    future multi-file source violating it into a loud failure."""
+    _, sink_dir = drain(
+        spark,
+        lambda sink: start_attribution_stream(spark, sf_dir, sink),
+        state_input=f"{sf_dir}/events.parquet",
+    )
     return read_sink_or_empty(spark, sink_dir, ATTRIBUTION_OUT_SCHEMA)
 
 
 SENTINEL_USER = -1  # never a real user_id (synth user ids are >= 0)
 
 
-def write_watermark_sentinels(spark: SparkSession, events_dir: str,
-                              max_ts, waves=(7, 11),
+def write_watermark_sentinels(events_dir: str, max_ts, waves=(7, 11),
                               mtime_base: int = 2_000_000_000) -> None:
     """Write one tiny parquet file per sentinel wave into ``events_dir``:
     a matching view+purchase pair for SENTINEL_USER at max_ts + <wave>
@@ -185,11 +133,7 @@ def write_watermark_sentinels(spark: SparkSession, events_dir: str,
     delay), and wave 2 forces a further batch in which that watermark is
     APPLIED, evicting closed view state and emitting the unmatched-view
     NULL rows. Without wave 2 the emission would depend on Spark's
-    optional no-data micro-batch racing processAllAvailable."""
-    from datetime import timedelta
-
-    from .sentinel import write_events_file
-
+    optional no-data micro-batch racing the drain's end."""
     # driver-side pyarrow writes (round 8): a Spark write job per 2-row
     # wave measured ~5 s of pure overhead — see streaming/sentinel.py
     for i, hours in enumerate(waves):
@@ -219,7 +163,8 @@ def streaming_click_attribution_outer(spark: SparkSession, sf_dir: str) -> DataF
     the global watermark past every real view's close point and wave 2
     forces the batch that applies it. Sentinel rows (negative ids) are
     filtered out of the result. The files are written oldest-first, so
-    nothing is ever late — asserted via dropped_by_watermark == 0."""
+    nothing is ever late — sink.drain raises if the watermark dropped a
+    row."""
     return _drained_outer(spark, sf_dir, "leftOuter")
 
 
@@ -236,48 +181,22 @@ def streaming_click_attribution_full(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 def _drained_outer(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
-    import atexit
-    import os
-
-    work = tempfile.mkdtemp(prefix="usls_stream_attr_outer_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    from .sentinel import events_max_ts
-
-    events_dir = f"{work}/in"
-    os.makedirs(events_dir)
-    shutil.copy(f"{sf_dir}/events.parquet", f"{events_dir}/batch0.parquet")
-    os.utime(f"{events_dir}/batch0.parquet", (2_000_000_000, 2_000_000_000))
-    max_ts = events_max_ts(f"{sf_dir}/events.parquet")
-    write_watermark_sentinels(spark, events_dir, max_ts)
-
-    sink_dir = f"{work}/sink"
+    events_dir = stage_events(sf_dir, write_watermark_sentinels)
     # maxFilesPerTrigger=2 packs [data, wave1] into micro-batch 1 (mtime
     # order) and leaves wave2 as micro-batch 2: wave 1 raises the global
     # watermark computed at batch 1's end past every real row's close
     # point, wave 2's batch applies it (emitting the unmatched NULL rows
     # and evicting state) — one fewer state round than one-file-per-
     # trigger, same emitted rows; nothing is late in batch 1 because the
-    # watermark during it is still the initial one (asserted below).
-    from .tuning import scaled_state_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(
-        spark, scaled_state_partitions(spark, f"{sf_dir}/events.parquet")
-    ):
-        q = start_attribution_stream(
-            spark, events_dir, sink_dir, _QUERY_NAME + "_" + how.lower(),
+    # watermark during it is still the initial one (drain checks it).
+    _, sink_dir = drain(
+        spark,
+        lambda sink: start_attribution_stream(
+            spark, events_dir, sink, _QUERY_NAME + "_" + how.lower(),
             max_files=2, glob="*.parquet", how=how,
-        )
-        try:
-            q.processAllAvailable()
-            dropped = dropped_by_watermark(q)
-        finally:
-            q.stop()
-    if dropped:
-        raise RuntimeError(
-            f"{dropped} late rows dropped by watermark — sentinel protocol broken"
-        )
-    from .sink import read_sink_or_empty
-
+        ),
+        state_input=f"{sf_dir}/events.parquet",
+    )
     return read_sink_or_empty(spark, sink_dir, ATTRIBUTION_OUT_SCHEMA).filter(
         "(view_id IS NULL OR view_id >= 0)"
         " AND (purchase_id IS NULL OR purchase_id >= 0)"

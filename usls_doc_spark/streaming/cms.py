@@ -17,15 +17,12 @@ across a forced 2-file split in tests/test_streaming_cms.py).
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dialect import SPARK
 from ..operators.web_curation import cms_sketch_sql
-from .sink import read_sink_or_empty
+from .sink import drain, file_stream, read_sink_or_empty, start_sink
 
 DOCS_SCHEMA = "doc_id bigint, text string, lang string"
 CMS_SINK_SCHEMA = "r bigint, idx bigint, c bigint"
@@ -39,38 +36,18 @@ def run_cms_to_sink(spark: SparkSession, docs_dir: str,
     """Drive the incremental sketch build to completion; return the
     MERGED sketch (r, idx, c) — group-by-sum over the appended
     per-micro-batch partials."""
-    for q in spark.streams.active:
-        if q.name == _QUERY_NAME:
-            q.stop()
-    reader = spark.readStream.schema(DOCS_SCHEMA).option("pathGlobFilter", glob)
-    if max_files is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files)
-    stream = reader.parquet(docs_dir)
-
-    import atexit
-
-    sink_dir = tempfile.mkdtemp(prefix="usls_stream_cms_")
-    shutil.rmtree(sink_dir, ignore_errors=True)
-    atexit.register(shutil.rmtree, sink_dir, ignore_errors=True)
-
     batch_sql = cms_sketch_sql(SPARK, table="cms_batch_docs")
 
-    def _append_partial(batch_df: DataFrame, _batch_id: int) -> None:
+    def _partial(batch_df: DataFrame) -> DataFrame:
         # per-batch partial sketch: bounded at DEPTH*WIDTH rows however
         # large the batch; appended, never merged in place
         batch_df.createOrReplaceTempView("cms_batch_docs")
-        batch_df.sparkSession.sql(batch_sql).write.mode("append").parquet(sink_dir)
+        return batch_df.sparkSession.sql(batch_sql)
 
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(_append_partial)
-        .queryName(_QUERY_NAME)
-        .start()
+    stream = file_stream(spark, DOCS_SCHEMA, docs_dir, glob, max_files)
+    _, sink_dir = drain(
+        spark, lambda sink: start_sink(stream, sink, _QUERY_NAME, per_batch=_partial)
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     partials = read_sink_or_empty(spark, sink_dir, CMS_SINK_SCHEMA)
     return partials.groupBy("r", "idx").agg(F.sum("c").alias("c"))
 

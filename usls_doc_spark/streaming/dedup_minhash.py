@@ -30,16 +30,13 @@ production deployment rides the RocksDB state store + the same epoch
 rotation documented for the bloom-fronted exact variant (streaming/
 dedup.py); per-bucket state stays O(BAND_CAP) regardless of skew.
 
-Sink: update rows flow through foreachBatch into an append-only parquet
-directory on the executors (never a driver memory sink); the batch
+Sink: update rows flow through the per-batch sink (streaming/sink.py)
+into an append-only parquet directory on the executors (never a driver memory sink); the batch
 read-back takes max_by(members, n_seen) per bucket — n_seen strictly
 increases per update, so "latest" is well-defined without wall clocks.
 """
 
 from __future__ import annotations
-
-import shutil
-import tempfile
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -48,8 +45,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.dialect import SPARK
 from ..operators.text_queries import BAND_CAP
-
-DOCS_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
+from .dedup import DOCS_SCHEMA
+from .sink import drain, file_stream, read_sink_or_empty, start_sink
 
 N_BANDS = 8  # must match build_minhash_lsh_pairs (8 md5 minhashes)
 
@@ -96,15 +93,7 @@ def start_streaming_dedup_minhash(
     """Start the stateful bucket-membership stream over parquet document
     files, sinking per-bucket update rows to ``sink_dir`` (parquet,
     appended per micro-batch on the executors)."""
-    for q in spark.streams.active:
-        if q.name == query_name:
-            q.stop()
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .option("pathGlobFilter", glob)
-        .parquet(docs_dir)
-    )
+    stream = file_stream(spark, DOCS_SCHEMA, docs_dir, glob, max_files)
     sig_arr, ws, sh = _signature_array_expr()
     banded = (
         stream.select("doc_id", F.expr(ws).alias("ws"))
@@ -118,16 +107,7 @@ def start_streaming_dedup_minhash(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-    def _append_updates(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(sink_dir)
-
-    return (
-        out.writeStream.outputMode("update")
-        .foreachBatch(_append_updates)
-        .queryName(query_name)
-        .start()
-    )
+    return start_sink(out, sink_dir, query_name, "update")
 
 
 def fold_bucket_log(spark: SparkSession, sink_dir: str) -> DataFrame:
@@ -136,8 +116,6 @@ def fold_bucket_log(spark: SparkSession, sink_dir: str) -> DataFrame:
     run the batch pair join over the folded buckets. Each bucket is ≤
     BAND_CAP members, so the self-join is bounded by cap²/2 pairs per
     bucket — identical to the batch plan's post-cap join."""
-    from .sink import read_sink_or_empty
-
     updates = read_sink_or_empty(spark, sink_dir, OUTPUT_SCHEMA)
     final = updates.groupBy("band", "band_key").agg(
         F.max_by("members", "n_seen").alias("members")
@@ -165,20 +143,10 @@ def fold_bucket_log(spark: SparkSession, sink_dir: str) -> DataFrame:
 
 def streaming_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the stream, fold the bucket log, return near-dup candidate
-    pairs — exactly the batch dedup_minhash_lsh answer (same oracle SQL)."""
-    import atexit
-
-    sink_dir = tempfile.mkdtemp(prefix="usls_stream_mh_")
-    shutil.rmtree(sink_dir, ignore_errors=True)  # parquet writer creates it
-    atexit.register(shutil.rmtree, sink_dir, ignore_errors=True)
-    # NOTE (round 8): no input-size state-partition scaling here (unlike
-    # events/attribution/sessionize) — the stateful stage runs the
-    # per-bucket Python fold downstream of the per-doc MinHash kernel,
-    # so partitions are its COMPUTE parallelism: measured 7.2 s at 32
-    # partitions vs 14.0 s at the formula's 2 (sf0.1).
-    q = start_streaming_dedup_minhash(spark, sf_dir, sink_dir)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    pairs — exactly the batch dedup_minhash_lsh answer (same oracle SQL).
+    No ``state_input``: the per-bucket Python fold's partitions are its
+    compute parallelism (see streaming/sink.py)."""
+    _, sink_dir = drain(
+        spark, lambda sink: start_streaming_dedup_minhash(spark, sf_dir, sink)
+    )
     return fold_bucket_log(spark, sink_dir)

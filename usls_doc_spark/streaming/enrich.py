@@ -9,12 +9,12 @@ with a small dim" pattern a 100 TB event pipeline runs in front of every
 aggregation.
 
 The reference has no streaming analogue (its dataloader is a bounded
-producer/consumer over files, /root/reference/src/misc/dataloader.rs);
-Spark-first shape: readStream -> join(broadcast(static)) -> foreachBatch
-append sink. The oracle is the identical batch LEFT JOIN — stateless, so
-ANY micro-batch split converges to it (proven across a 2-file split in
-tests/test_streaming_enrich.py, which also exercises the unmatched-user
-NULL branch via a filtered static dim).
+producer/consumer over files, src/misc/dataloader.rs in the reference);
+Spark-first shape: readStream -> join(broadcast(static)) -> per-batch
+parquet append sink (streaming/sink.py). The oracle is the identical
+batch LEFT JOIN — stateless, so ANY micro-batch split converges to it
+(proven across a 2-file split in tests/test_streaming_enrich.py, which
+also exercises the unmatched-user NULL branch via a filtered static dim).
 
 Determinism contract: join and projection are stateless row maps; the
 props payload parse is pure string algebra identical in both dialects
@@ -24,14 +24,11 @@ arithmetic). Rows carry no order guarantee — the driver compare sorts.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .events import EVENTS_SCHEMA
-from .sink import read_sink_or_empty
+from .sink import drain, file_stream, read_sink_or_empty, start_sink
 
 ENRICH_OUT_SCHEMA = (
     "event_id bigint, user_id bigint, event_type string, value double, "
@@ -73,35 +70,11 @@ def run_enrich_to_sink(spark: SparkSession, events_dir: str, dim_dir: str,
     """Drive the stream-static join to completion; return the sink.
     ``max_files`` caps files per trigger so a multi-file directory is
     processed across multiple micro-batches (the dim is re-read and
-    re-broadcast per batch — the stream-static contract)."""
-    for q in spark.streams.active:
-        if q.name == _QUERY_NAME:
-            q.stop()
-    reader = spark.readStream.schema(EVENTS_SCHEMA).option("pathGlobFilter", glob)
-    if max_files is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files)
-    out = build_enrich(spark, reader.parquet(events_dir), dim_dir)
-
-    import atexit
-
-    sink_dir = tempfile.mkdtemp(prefix="usls_stream_enrich_")
-    shutil.rmtree(sink_dir, ignore_errors=True)
-    atexit.register(shutil.rmtree, sink_dir, ignore_errors=True)
-
-    def _append(batch_df: DataFrame, _batch_id: int) -> None:
-        # stateless append mode: each micro-batch's rows are final
-        batch_df.write.mode("append").parquet(sink_dir)
-
-    q = (
-        out.writeStream.outputMode("append")
-        .foreachBatch(_append)
-        .queryName(_QUERY_NAME)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    re-broadcast per batch — the stream-static contract). Stateless
+    append mode: each micro-batch's rows are final."""
+    events = file_stream(spark, EVENTS_SCHEMA, events_dir, glob, max_files)
+    out = build_enrich(spark, events, dim_dir)
+    _, sink_dir = drain(spark, lambda sink: start_sink(out, sink, _QUERY_NAME))
     return read_sink_or_empty(spark, sink_dir, ENRICH_OUT_SCHEMA)
 
 

@@ -18,8 +18,9 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from ..io.synth import PAGES_SCHEMA
+from ..io.synth import PAGES_SCHEMA, pages_from_documents
 from ..pipeline.extract import EXTRACT_SCHEMA, extract_pages
+from .sink import drain, file_stream, read_sink_or_empty, temp_dir
 
 
 def streaming_extract_text(spark: SparkSession, sf_dir: str):
@@ -35,29 +36,17 @@ def streaming_extract_text(spark: SparkSession, sf_dir: str):
     r7 two-file/one-per-trigger layout, but each batch's mapInPandas
     extraction now runs 16 tasks instead of ONE (a single parquet file
     is one split, so the whole batch's kernel work ran on one core)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..io.synth import pages_from_documents
-
-    root = tempfile.mkdtemp(prefix="usls_stream_extract_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    pages_dir, out_dir, cp_dir = (f"{root}/{d}" for d in ("pages", "out", "cp"))
+    root = temp_dir("usls_stream_extract_")
+    pages_dir, cp_dir = f"{root}/pages", f"{root}/cp"
     # n_partitions=32 renders the pages 32-way parallel AND lands one
     # parquet file per partition — no post-render shuffle of the html
     pages_from_documents(spark, sf_dir, n_partitions=32).write.parquet(pages_dir)
-    q = start_streaming_extraction(
-        spark, pages_dir, out_dir, cp_dir, max_files_per_trigger=16
+    _, out_dir = drain(
+        spark,
+        lambda sink: start_streaming_extraction(
+            spark, pages_dir, sink, cp_dir, max_files_per_trigger=16
+        ),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    from .sink import read_sink_or_empty
-
     return read_sink_or_empty(spark, out_dir, EXTRACT_SCHEMA).select(
         "url", "extracted_text"
     )
@@ -72,10 +61,8 @@ def start_streaming_extraction(
 ):
     """Start (and return) the streaming query: parquet page files appearing
     under ``pages_dir`` are extracted and appended to ``out_dir``."""
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(pages_dir)
+    stream = file_stream(
+        spark, PAGES_SCHEMA, pages_dir, "*.parquet", max_files_per_trigger
     )
     return (
         extract_pages(stream).writeStream.outputMode("append")

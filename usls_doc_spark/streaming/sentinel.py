@@ -8,7 +8,7 @@ wall. The event-time maximum likewise ran a Spark read+agg job. Both are
 driver-side metadata chores over KNOWN tiny data, so round 8 does them
 with pyarrow directly (guide §1.2: remove work, don't tune it):
 
-  * ``events_max_ts`` reads ONLY the ts column of the events parquet via
+  * ``stage_events`` reads ONLY the ts column of the events parquet via
     pyarrow and takes its max — the exact same value the Spark
     ``agg(F.max("ts"))`` job produced, with zero timezone round-trips
     (both paths are micros-since-epoch under the UTC session),
@@ -23,10 +23,13 @@ streaming/attribution.py module docstrings."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+
+from .sink import temp_dir
 
 _EVENTS_ARROW_SCHEMA = pa.schema(
     [
@@ -40,14 +43,6 @@ _EVENTS_ARROW_SCHEMA = pa.schema(
 )
 
 
-def events_max_ts(events_path: str):
-    """Max event time of an events parquet file as a naive datetime
-    (micros-since-epoch semantics — identical to what the UTC-session
-    Spark ``agg(F.max("ts"))`` produced)."""
-    t = pq.read_table(events_path, columns=["ts"])
-    return pc.max(t.column("ts")).as_py()
-
-
 def write_events_file(dest: str, rows: list[tuple], mtime: int) -> None:
     """Write ``rows`` (EVENTS_SCHEMA order: event_id, ts, user_id,
     event_type, value, props) as one parquet file with a pinned mtime."""
@@ -59,3 +54,16 @@ def write_events_file(dest: str, rows: list[tuple], mtime: int) -> None:
     )
     pq.write_table(table, dest)
     os.utime(dest, (mtime, mtime))
+
+
+def stage_events(sf_dir: str, write_sentinels) -> str:
+    """Copy ``sf_dir``'s events file into a fresh directory as the first
+    file to trigger (pinned mtime), let ``write_sentinels(events_dir,
+    max_ts)`` add the sentinel waves after it, and return the directory."""
+    src = f"{sf_dir}/events.parquet"
+    events_dir = temp_dir("usls_stream_events_")
+    shutil.copy(src, f"{events_dir}/batch0.parquet")
+    os.utime(f"{events_dir}/batch0.parquet", (2_000_000_000, 2_000_000_000))
+    max_ts = pc.max(pq.read_table(src, columns=["ts"]).column("ts")).as_py()
+    write_sentinels(events_dir, max_ts)
+    return events_dir

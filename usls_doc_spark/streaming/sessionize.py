@@ -31,22 +31,21 @@ Scale shape: state per ACTIVE user is one fixed-width row, and event-time
 timeout bounds "active" to users seen within the last session-gap +
 watermark delay — the property that lets this run forever on an unbounded
 clickstream (NoTimeout sessionization would accrete every user ever
-seen). Sink discipline: update-mode foreachBatch parquet appends on the
-executors, zero-batch guarded; the fold is itself one distributed hash
+seen). Sink discipline: update-mode per-batch parquet appends on the
+executors (streaming/sink.py), zero-batch guarded; the fold is itself one distributed hash
 aggregate per level, both map-side combinable.
 """
 
 from __future__ import annotations
-
-import shutil
-import tempfile
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .attribution import EVENTS_SCHEMA, SENTINEL_USER, dropped_by_watermark
+from .attribution import SENTINEL_USER
+from .events import EVENTS_SCHEMA
+from .sink import drain, file_stream, read_sink_or_empty, start_sink
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # the batch query's 30-minute rule (micros)
 
@@ -123,14 +122,8 @@ def start_streaming_sessionize(spark: SparkSession, events_dir: str,
     push the filter below the EventTimeWatermark node, and the sentinels
     would stop advancing event time (observed, not hypothetical: the
     eviction test caught exactly that with a pre-state filter)."""
-    for q in spark.streams.active:
-        if q.name == query_name:
-            q.stop()
-    reader = spark.readStream.schema(EVENTS_SCHEMA).option("pathGlobFilter", glob)
-    if max_files is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files)
     events = (
-        reader.parquet(events_dir)
+        file_stream(spark, EVENTS_SCHEMA, events_dir, glob, max_files)
         .withWatermark("ts", "1 hour")
         .select("user_id", "event_id", "ts")
     )
@@ -141,16 +134,7 @@ def start_streaming_sessionize(spark: SparkSession, events_dir: str,
         outputMode="update",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-
-    def _append(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(sink_dir)
-
-    return (
-        out.writeStream.outputMode("update")
-        .foreachBatch(_append)
-        .queryName(query_name)
-        .start()
-    )
+    return start_sink(out, sink_dir, query_name, "update")
 
 
 def fold_session_log(spark: SparkSession, sink_dir: str) -> DataFrame:
@@ -159,8 +143,6 @@ def fold_session_log(spark: SparkSession, sink_dir: str) -> DataFrame:
     final state); across generations sessions/events are disjoint (sum)
     and first/last nest (min/max). Both levels are ordinary hash
     aggregates with map-side combine."""
-    from .sink import read_sink_or_empty
-
     updates = read_sink_or_empty(spark, sink_dir, OUT_SCHEMA).filter(
         F.col("user_id") != SENTINEL_USER
     )
@@ -187,25 +169,9 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence does not depend on eviction having fired — eviction is
     separately proven by the sentinel-driven test
     (tests/test_streaming_sessionize.py)."""
-    import atexit
-
-    from .tuning import scaled_state_partitions, stream_shuffle_partitions
-
-    sink_dir = tempfile.mkdtemp(prefix="usls_stream_sess_")
-    shutil.rmtree(sink_dir, ignore_errors=True)
-    atexit.register(shutil.rmtree, sink_dir, ignore_errors=True)
-    with stream_shuffle_partitions(
-        spark, scaled_state_partitions(spark, f"{sf_dir}/events.parquet")
-    ):
-        q = start_streaming_sessionize(spark, sf_dir, sink_dir)
-        try:
-            q.processAllAvailable()
-            dropped = dropped_by_watermark(q)
-        finally:
-            q.stop()
-    if dropped:
-        raise RuntimeError(
-            f"{dropped} late rows dropped by watermark — input files arrived "
-            "out of event-time order; the batch oracle no longer applies"
-        )
+    _, sink_dir = drain(
+        spark,
+        lambda sink: start_streaming_sessionize(spark, sf_dir, sink),
+        state_input=f"{sf_dir}/events.parquet",
+    )
     return fold_session_log(spark, sink_dir)
