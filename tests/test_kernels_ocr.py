@@ -4,6 +4,7 @@ from collections import deque
 
 import numpy as np
 
+from tests.conftest import SF_DIR
 from usls_doc_spark.kernels.ocr import (
     binarize_prob_map,
     convex_hull,
@@ -17,6 +18,7 @@ from usls_doc_spark.kernels.ocr import (
     unclip,
     verify,
 )
+from usls_doc_spark.pipeline.ocr import region_xywh
 
 
 def test_binarize_thresholds():
@@ -59,7 +61,7 @@ def test_unclip_square_expands():
     assert np.allclose(out, exp)
     # clamping to the image bounds
     out2 = unclip(sq, delta=10.0, width=7.0, height=7.0)
-    assert out2.min() >= 0.0 and out2.max() <= 7.0
+    assert np.asarray(out2).min() >= 0.0 and np.asarray(out2).max() <= 7.0
 
 
 def test_resample_counts():
@@ -112,8 +114,8 @@ def test_hull_resample_identity():
     h1 = convex_hull(pts)
     h2 = convex_hull(resample(pts, 50))
     assert abs(polygon_area(h1) - polygon_area(h2)) < 1e-9
-    assert np.allclose(h1.min(axis=0), h2.min(axis=0))
-    assert np.allclose(h1.max(axis=0), h2.max(axis=0))
+    assert np.allclose(np.asarray(h1).min(axis=0), np.asarray(h2).min(axis=0))
+    assert np.allclose(np.asarray(h1).max(axis=0), np.asarray(h2).max(axis=0))
 
 
 def test_ctc_greedy_decode_reference_semantics():
@@ -196,6 +198,26 @@ def test_ocr_batch_width_buckets_preserve_order():
     regs = detect_page_regions(html1, "u1")
     assert regs[0]["bucket"] != regs[1]["bucket"]
     assert regs[1]["width"] >= WIDTH_BUCKET
+
+
+def test_region_xywh_rounds_half_away_in_float32():
+    """(x1, y1, x2, y2) -> (x, y, w, h) as Python ints: each value cast to
+    float32 (w and h are float64 differences first), then rounded half
+    away from zero — ties and negatives included."""
+    from usls_doc_spark.kernels.yolo_decode import round_half_away
+
+    assert region_xywh((0.5, 1.5, 3.0, 4.0)) == (1, 2, 3, 3)  # w = h = 2.5
+    assert region_xywh((-0.5, -2.5, -3.0, 1.0)) == (-1, -3, -3, 4)  # w = -2.5
+    assert region_xywh((0.49999999, 0.0, 1.0, 1.0))[0] == 1  # float32(.49999999) == .5
+    rng = np.random.default_rng(5)
+    boxes = rng.uniform(-1e3, 1e3, (2000, 4)).tolist()
+    boxes += (rng.integers(-2000, 2000, (2000, 4)) / 2).tolist()
+    for bbox in boxes:
+        got = region_xywh(tuple(bbox))
+        x1, y1, x2, y2 = bbox
+        want = tuple(int(round_half_away(np.float32(v))) for v in (x1, y1, x2 - x1, y2 - y1))
+        assert type(got) is tuple and got == want
+        assert all(type(v) is int for v in got)
 
 
 # ---------------------------------------------------------------------------
@@ -361,6 +383,203 @@ def test_single_rect_fast_path_condition_boundaries():
         assert len(got) == len(want)
         for g, w_ in zip(got, want):
             assert np.array_equal(g, w_) and g.dtype == w_.dtype
+
+
+def test_trace_boundary_raises_past_its_safety_bound():
+    """A Moore walk longer than 4 * fg.size raises instead of returning a
+    truncated ring."""
+    import pytest
+
+    from usls_doc_spark.kernels.ocr import _trace_boundary
+
+    class OnePixelSize(np.ndarray):
+        size = 1  # 3x3 block, 8-point ring: past the bound of 4
+
+    block = np.ones((3, 3), dtype=bool)
+    assert len(_trace_boundary(block, (0, 0))) == 8
+    with pytest.raises(RuntimeError, match="exceeded 4 steps"):
+        _trace_boundary(block.view(OnePixelSize), (0, 0))
+
+
+def test_rect_corners_match_simplified_ring():
+    """A solid component's corner ring, area and perimeter come from its
+    bbox; they must equal _simplify_runs, polygon_area and
+    polygon_perimeter over the _rect_ring it replaces. 1-px lines are not
+    solid: they keep the Moore trace."""
+    from usls_doc_spark.kernels.ocr import _components, _rect_corners, _rect_ring, _simplify_runs
+
+    for w in range(1, 31):
+        for h in range(1, 31):
+            fg = np.zeros((h + 4, w + 5), dtype=bool)
+            fg[2 : 2 + h, 3 : 3 + w] = True
+            ((*box, trace),) = _components(fg)
+            assert box == [3, 2, 3 + w - 1, 2 + h - 1]
+            if w == 1 or h == 1:
+                assert np.array_equal(trace, _reference_contours(fg)[0])
+                continue
+            assert trace is None
+            ring = _rect_ring(*box)[::-1].astype(np.float64)
+            got = [tuple(p) for p in _rect_corners(*box)]
+            assert got == [tuple(p) for p in _simplify_runs(ring).tolist()]
+            assert all(type(v) is float for p in got for v in p)
+            assert len(got) == 12 or min(w, h) < 4
+            assert polygon_area(ring) == float((w - 1) * (h - 1))
+            assert polygon_perimeter(ring) == float(2 * (w - 1 + h - 1))
+
+
+# The numpy D4-D7 chain db_postprocess ran before its scalar rewrite, kept
+# as the differential oracle (np.roll == the old _shift_fwd/_shift_back).
+
+def _ref_unclip(p, delta, width, height):
+    edge = np.roll(p, -1, axis=0) - np.roll(p, 1, axis=0)
+    normal = np.stack([-edge[:, 1], edge[:, 0]], axis=1)
+    length = np.sqrt((normal**2).sum(axis=1))
+    out = p.copy()
+    ok = np.abs(length) >= 1e-6
+    out[ok] = p[ok] + normal[ok] / length[ok, None] * delta
+    out[:, 0] = np.clip(out[:, 0], 0.0, width)
+    out[:, 1] = np.clip(out[:, 1], 0.0, height)
+    out[~ok] = p[~ok]
+    return out
+
+
+def _ref_convex_hull(p):
+    p = p[np.lexsort((p[:, 1], p[:, 0]))]
+    keep = np.ones(len(p), dtype=bool)
+    keep[1:] = (p[1:] != p[:-1]).any(axis=1)
+    p = p[keep]
+    if len(p) <= 2:
+        return p
+    pts = [(float(x), float(y)) for x, y in p]
+
+    def half(seq):
+        out = []
+        for q in seq:
+            while len(out) >= 2:
+                (ox, oy), (ax, ay) = out[-2], out[-1]
+                if (ax - ox) * (q[1] - oy) - (ay - oy) * (q[0] - ox) <= 0:
+                    out.pop()
+                else:
+                    break
+            out.append(q)
+        return out
+
+    return np.asarray(half(pts)[:-1] + half(pts[::-1])[:-1], dtype=np.float64)
+
+
+def _ref_verify(points):
+    p = list(points)
+    if p:
+        first = (int(p[0][0]), int(p[0][1]))
+        while len(p) > 1 and (int(p[-1][0]), int(p[-1][1])) == first:
+            p.pop()
+    seen, out = set(), []
+    for q in p:
+        if (int(q[0]), int(q[1])) not in seen:
+            seen.add((int(q[0]), int(q[1])))
+            out.append(q)
+    return np.asarray(out, dtype=np.float64)
+
+
+def _ref_area_ordered(p):
+    s = 0.0
+    for i in range(len(p)):
+        x1, y1 = p[i]
+        x2, y2 = p[(i + 1) % len(p)]
+        s += x1 * y2 - y1 * x2
+    return abs(s) / 2.0
+
+
+def _reference_postprocess(prob_map):
+    from usls_doc_spark.kernels.ocr import (
+        CONF_THRESH,
+        MIN_HEIGHT,
+        MIN_WIDTH,
+        UNCLIP_RATIO,
+        _simplify_runs,
+    )
+
+    mask = binarize_prob_map(prob_map)
+    h, w = mask.shape
+    out = []
+    for contour in find_outer_contours(mask):
+        if len(contour) <= 2:
+            continue
+        area, perim = polygon_area(contour), polygon_perimeter(contour)
+        if perim <= 0:
+            continue
+        delta = area * round(1.0) * UNCLIP_RATIO / perim
+        hull = _ref_convex_hull(_ref_unclip(_simplify_runs(contour), delta, float(w), float(h)))
+        poly = _ref_verify(hull)
+        if len(poly) < 3:
+            continue
+        x1, y1 = poly.min(axis=0)
+        x2, y2 = poly.max(axis=0)
+        if (y2 - y1) < MIN_HEIGHT or (x2 - x1) < MIN_WIDTH:
+            continue
+        bbox_area = (x2 - x1) * (y2 - y1)
+        conf = float(np.float32(_ref_area_ordered(poly) / bbox_area)) if bbox_area > 0 else 0.0
+        if np.float32(conf) < CONF_THRESH:
+            continue
+        out.append((poly, (float(x1), float(y1), float(x2), float(y2)), conf))
+    return out
+
+
+def _random_prob_maps(n, seed):
+    """Noise, overlapping rectangles and punched rectangles; rectangles may
+    start off-map (the unclip clamp fires) and carry probs up to 1.2."""
+    rng = np.random.default_rng(seed)
+    maps = []
+    for i in range(n):
+        h, w = rng.integers(8, 90, 2)
+        if i % 3 == 0:
+            m = (rng.random((h, w)) < rng.uniform(0.2, 0.8)).astype(np.float32) * np.float32(0.9)
+        else:
+            m = np.zeros((h, w), dtype=np.float32)
+            for _ in range(rng.integers(1, 6)):
+                x0, y0 = rng.integers(-5, w), rng.integers(-5, h)
+                y1, x1 = y0 + rng.integers(1, 40), x0 + rng.integers(1, 60)
+                m[max(y0, 0) : y1, max(x0, 0) : x1] = rng.uniform(0.21, 1.2)
+            for _ in range(rng.integers(1, 8) if i % 3 == 2 else 0):
+                y, x = rng.integers(0, h), rng.integers(0, w)
+                m[y : y + rng.integers(1, 4), x : x + rng.integers(1, 4)] = 0
+        maps.append(m)
+    return maps
+
+
+def test_db_postprocess_matches_numpy_chain_bytewise():
+    """Scalar D4-D7 over the corner ring must reproduce the numpy chain's
+    polygon, bbox and conf byte for byte (.tobytes() also pins the sign of
+    zero) on the raster corpus, random maps, and the 512² masks."""
+    import pyarrow.parquet as pq
+
+    from usls_doc_spark.io.synth import chunk_text
+    from usls_doc_spark.pipeline.raster_ocr import _render_glyphs, raster_extract_spec
+
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"])
+    maps = []
+    for d, t in zip(docs.column("doc_id").to_pylist(), docs.column("text").to_pylist()):
+        chunks = chunk_text(t)
+        raster = _render_glyphs(raster_extract_spec(d, chunks), chunks)
+        maps.append(raster.astype(np.float32) / np.float32(255.0))
+    maps += _random_prob_maps(450, seed=11)
+    maps += [m.astype(np.float32) * np.float32(0.9) for m in _adversarial_masks()]
+    n_regions = clamped = above_one = 0
+    for pm in maps:
+        got = db_postprocess(pm, ratio=1.0)
+        want = _reference_postprocess(pm)
+        assert len(got) == len(want)
+        for g, (poly, bbox, conf) in zip(got, want):
+            assert g["polygon"].dtype == poly.dtype and g["polygon"].shape == poly.shape
+            assert g["polygon"].tobytes() == poly.tobytes()
+            assert np.array(g["bbox"]).tobytes() == np.array(bbox).tobytes()
+            assert np.float64(g["conf"]).tobytes() == np.float64(conf).tobytes()
+            assert all(type(v) is float for v in (*g["bbox"], g["conf"]))
+        n_regions += len(got)
+        h, w = pm.shape
+        clamped += any(((r["polygon"] == 0) | (r["polygon"] == (w, h))).any() for r in got)
+        above_one += bool(got) and pm.max() > 1
+    assert n_regions > 3000 and clamped > 50 and above_one > 50
 
 
 # ---------------------------------------------------------------------------

@@ -81,7 +81,8 @@ def region_xywh(bbox: tuple[float, float, float, float]) -> tuple[int, int, int,
     """Detected (x1, y1, x2, y2) -> integer (x, y, w, h), each value
     round-half-away of its float32 — the rounding the oracles restate."""
     x1, y1, x2, y2 = bbox
-    return tuple(int(round_half_away(np.float32(v))) for v in (x1, y1, x2 - x1, y2 - y1))
+    xywh = round_half_away(np.array([x1, y1, x2 - x1, y2 - y1], dtype=np.float32))
+    return tuple(map(int, xywh.tolist()))
 
 
 def detect_page_regions(html_bytes: bytes | None, url: str) -> list[dict]:
