@@ -8,6 +8,11 @@ Usage:
         --sf-dir /root/testdata/sf0.01 --out /tmp/extract_out \\
         [--run-id r1] [--n-buckets 64] [--copies 1]
 
+The zip carries the C source of the HTML block parser
+(usls_doc_spark/kernels/_blockparse.c); the first import on each host
+compiles it with gcc into ~/.cache/usls_doc_spark, so every host needs gcc
+and the Python headers, and a host without them fails the import loudly.
+
 On a real cluster, pass --master/--num-executors etc. to spark-submit; the
 job itself is cluster-agnostic (everything is partition-count independent
 and resumable — re-running after a failure completes only remaining

@@ -163,6 +163,18 @@ ADVERSARIAL_HTML = [
     '<noscript><script>var x="</noscript>";</script></noscript><p>t</p>',
     "<noscript><p>fallback</p></noscript><p>shown</p>",
     "<template>never closed <p>still handled",
+    # stdlib keeps the LAST class attribute (dict(attrs)), compares
+    # attribute names exactly after str.lower() (no 'ſ' -> 's' folding),
+    # and leaves CDATA only on a close tag with an ASCII name; '\v' after
+    # a tag name is part of stdlib's tolerant tag name
+    '<p class="x"\tclass="ad">x</p>',
+    '<p class="ad"\tclass="x">x</p>',
+    '<p data-class=1 claſs="ad">x</p>',
+    "<script>x</ſcrİpt><p>after</p>",
+    '<p\x0bclass="ad">x</p><p>y</p>',
+    # an unterminated start tag that stdlib's tolerant grammar ends early
+    # (here at '\x00') is raw text to that point, not unescaped
+    "<p>x<nav&#65;\x00\nli",
 ]
 
 
@@ -217,6 +229,15 @@ def test_fast_tokenizer_fuzz_differential():
             "text ", "words here ", "&amp;", "&lt;", "&#65;", "&bogus;",
             "<", ">", "&", "  ", "\n", "\t", "<p", "p>", "</", "/>",
             "<P CLASS='MENU'>", "<span>", "</span>", "quoted='>'",
+            # characters whose Python semantics differ from ASCII: case
+            # folding, str.split()/regex whitespace, all three str kinds
+            "ſ", "İ", "\u212a", "\x85", "\xa0", "\x1c", "\u3000",
+            "\U0001f600", "\x0b",
+            # odd spellings of class and script
+            "<p claſs='ad'>", "<p CLASS=ad>", '<div class="x" class="menu">',
+            '<div class="menu"\tclass="x">', "<p class>", "<li class=\xa0ad\u3000>",
+            "<p a\xa0class=ad>", "<p\x0bclass=ad>", '<div class="a&#100;s">',
+            "<SCRIPT>", "</SCRIPT >", "</ſcript>", "</scrİpt>", "</p \xa0>",
         ]
     )
     texts = st.text(

@@ -3,8 +3,11 @@
 North-rule capability (BASELINE.json north_star: "DOM-tree boilerplate
 stripping via text-density and link-density heuristics (readability/
 Arc90-style scoring)"). The reference has no HTML code — this is new,
-Spark-first design: a pure-python kernel (stdlib html.parser, no external
-deps) run per document inside an Arrow-batched pandas UDF.
+Spark-first design: a kernel run per document inside an Arrow-batched
+pandas UDF. Its block parser is a small C extension (_blockparse.c,
+compiled with gcc on first import, see kernels/native.py); the stdlib
+html.parser path beside it is the fallback for markup outside the C
+parser's well-formed subset and the differential-test oracle.
 
 Classification maps each DOM block onto the DocStructBench label set
 (/root/reference/src/models/yolo/config.rs:23-34) so the downstream layout /
@@ -20,11 +23,14 @@ float32; whitespace normalized with str.split()/join.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from html import unescape
 from html.parser import HTMLParser
+from importlib import resources
 
 import numpy as np
+
+from .native import load_extension
 
 # tags whose text forms one extractable block
 BLOCK_TAGS = frozenset(
@@ -40,7 +46,7 @@ SKIP_CONTENT_TAGS = frozenset({"script", "style", "noscript", "template"})
 # (HTMLParser.CDATA_CONTENT_ELEMENTS); noscript/template content is
 # tokenized normally — its tags still run the handlers (so e.g. a
 # class="ad" div inside <noscript> marks boilerplate ancestry) while
-# _skip_depth drops the text. The fast tokenizer must match exactly.
+# _skip_depth drops the text. The C parser must match exactly.
 CDATA_CONTENT_TAGS = frozenset({"script", "style"})
 # HTML5 void elements: never produce end tags, must not occupy the open-
 # element stack (an <img class="ad"> would otherwise mark the rest of the
@@ -52,10 +58,10 @@ VOID_TAGS = frozenset(
 LINK_DENSITY_ABANDON = np.float32(0.5)
 
 # one dict lookup instead of ~6 set-membership tests per tag event (the
-# handlers run ~100x per page inside the extraction hot path); bit values
-# are private to this module
-_F_SKIP, _F_BP, _F_VOID, _F_ANCHOR, _F_MERGE, _F_BLOCK, _F_CELLSEP = (
-    1, 2, 4, 8, 16, 32, 64,
+# handlers run ~100x per page inside the extraction hot path); the C
+# parser reads the same table, with the same bit values
+_F_SKIP, _F_BP, _F_VOID, _F_ANCHOR, _F_MERGE, _F_BLOCK, _F_CELLSEP, _F_CDATA = (
+    1, 2, 4, 8, 16, 32, 64, 128,
 )
 _TAG_FLAGS: dict[str, int] = {}
 for _t, _f in (
@@ -66,6 +72,7 @@ for _t, _f in (
     *((t, _F_MERGE) for t in MERGE_CONTAINER_TAGS),
     *((t, _F_BLOCK) for t in BLOCK_TAGS),
     *((t, _F_CELLSEP) for t in ("td", "th", "tr", "caption", "li", "p")),
+    *((t, _F_CDATA) for t in CDATA_CONTENT_TAGS),
 ):
     _TAG_FLAGS[_t] = _TAG_FLAGS.get(_t, 0) | _f
 
@@ -76,7 +83,6 @@ class Block:
     text: str = ""
     link_chars: int = 0
     boilerplate_ancestor: bool = False
-    _parts: list = field(default_factory=list)
 
     @property
     def n_chars(self) -> int:
@@ -95,7 +101,8 @@ class _BlockParser(HTMLParser):
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
         self.blocks: list[Block] = []
-        self._open: list[Block] = []
+        # open blocks, each with the text fragments it has collected
+        self._open: list[tuple[Block, list[str]]] = []
         # open-element stack: one (tag, is_boilerplate_marker) entry per
         # non-void start tag, popped per matching end tag — nested same-name
         # tags no longer pop an outer boilerplate marker early, and void
@@ -107,11 +114,11 @@ class _BlockParser(HTMLParser):
         self._merge_depth = 0  # inside <table>
 
     def _start_block(self, tag: str) -> None:
-        self._open.append(Block(tag=tag, boilerplate_ancestor=self._bp_depth > 0))
+        self._open.append((Block(tag=tag, boilerplate_ancestor=self._bp_depth > 0), []))
 
     def _end_block(self) -> None:
-        blk = self._open.pop()
-        blk.text = " ".join("".join(blk._parts).split())
+        blk, parts = self._open.pop()
+        blk.text = " ".join("".join(parts).split())
         if blk.text:
             self.blocks.append(blk)
 
@@ -175,334 +182,88 @@ class _BlockParser(HTMLParser):
         elif self._merge_depth > 0 and f & _F_CELLSEP:
             # cell/row boundaries become whitespace inside a merged block
             if self._open:
-                self._open[-1]._parts.append(" ")
+                self._open[-1][1].append(" ")
         elif f & _F_BLOCK and self._merge_depth == 0:
-            if self._open and self._open[-1].tag == tag:
+            if self._open and self._open[-1][0].tag == tag:
                 self._end_block()
 
     def handle_data(self, data):
         if self._skip_depth or not self._open:
             return
-        blk = self._open[-1]
-        blk._parts.append(data)
+        blk, parts = self._open[-1]
+        parts.append(data)
         if self._anchor_depth > 0:
             blk.link_chars += len(" ".join(data.split()))
 
 
 # ---------------------------------------------------------------------------
-# fast tokenizer: single-pass regex scan with the _BlockParser handler
-# semantics inlined over plain locals (stdlib html.parser spends ~60% of
-# extraction time in its char-by-char goahead loop; the per-event method
-# dispatch was the next-largest share). Byte-identical block output is
-# enforced by tests/test_boilerplate_parser.py differential tests over all
-# fixture pages and an adversarial corpus.
+# parse_blocks runs the C block parser of _blockparse.c: the _BlockParser
+# handler semantics over its own single-pass tokenizer for a well-formed
+# tag subset (stdlib html.parser spent ~60% of extraction time in its
+# char-by-char loop, and a Python tokenizer in the per-tag-event
+# interpreter cost). The functions below are the leaves it calls back
+# for, where Python's Unicode regex and str semantics decide. Identical
+# blocks to the stdlib path are enforced by tests/test_boilerplate_parser.py
+# differential tests over all fixture pages, an adversarial corpus and a
+# hypothesis fuzz.
 # ---------------------------------------------------------------------------
 
-# WELL-FORMED tag grammar only: simple name, whitespace-separated attrs with
-# quoted or plain bare values. Anything outside this subset (stray quotes in
-# attr names, '<' inside tags, '/' not before '>', junk in end tags, ...)
-# raises _FallbackToStdlib and the WHOLE page re-parses through stdlib
-# html.parser — its tolerant-recovery grammar has too many quirks to
-# replicate safely, and real pages that trip it are rare, so correctness is
-# guaranteed by construction and speed preserved for the common case.
-# re.ASCII: python's Unicode \s accepts \x1c-\x1f/\x85/\xa0 as whitespace,
-# which stdlib's tolerant tag grammar recovers from differently — those
-# pages must FALL BACK, not parse here. '<' is likewise excluded from attr
-# tokens ('<p\x1f<p>' must not read as one tag with a '<p' attribute).
-# Shrinking the accepted subset is always safe: rejected pages reparse
-# through stdlib (the oracle), they are never mis-tokenized.
-_TAG_RE = re.compile(
-    r"<(?P<end>/)?(?P<name>[a-zA-Z][a-zA-Z0-9:._-]*)"
-    r"(?P<attrs>(?:\s+[^\s/>='\"`<]+(?:\s*=\s*(?:\"[^\"]*\"|'[^']*'|[^\s>'\"`=<]*))?)*)"
-    r"\s*(?P<slash>/?)>",
-    re.ASCII,
-)
-
-
-class _FallbackToStdlib(Exception):
-    """Markup outside the fast tokenizer's well-formed subset."""
-_CLASS_RE = re.compile(
-    r"""[\s"']class\s*=\s*("([^"]*)"|'([^']*)'|([^\s>/]+))""", re.IGNORECASE
-)
 # stdlib closes comments with _markupbase._commentclose = r'--\s*>' —
 # whitespace IS allowed between -- and > ('<!--x--\n>' ends the comment).
 # Same pattern verbatim (deliberately NOT re.ASCII: this REPLICATES
 # stdlib, it does not approximate it, so exotic-whitespace closers must
-# match too). A literal find('-->') here mis-parsed '--\n>' closers —
-# caught by the 20k-example differential fuzz, round 5.
+# match too).
 _COMMENT_CLOSE_RE = re.compile(r"--\s*>")
 # stdlib exits CDATA mode only on a STRICT close tag r'</\s*tag\s*>' with
 # the exact element name — '</scriptx>' or '</script x=1>' stay inside.
 # Only script/style: stdlib's CDATA_CONTENT_ELEMENTS excludes noscript/
 # template, whose inner tags must keep firing the handlers.
 _SKIP_CLOSE_RES = {
-    t: re.compile(rf"</\s*{t}\s*>", re.IGNORECASE) for t in CDATA_CONTENT_TAGS
+    t: re.compile(rf"</\s*({t})\s*>", re.IGNORECASE) for t in CDATA_CONTENT_TAGS
 }
 
 
-def _fast_parse(html: str) -> list[Block]:
-    """Single-function tokenizer + block state machine over plain locals.
+def _comment_end(html: str, pos: int) -> int:
+    """End of the comment whose body starts at ``pos``, or -1 if unclosed."""
+    m = _COMMENT_CLOSE_RE.search(html, pos)
+    return -1 if m is None else m.end()
 
-    Semantics are EXACTLY the _BlockParser handlers driven by the regex
-    tokenizer (the pre-round-5 ``_fast_feed`` shape), with the per-event
-    method dispatch and attribute traffic inlined away — the handlers run
-    ~300x per page and were the largest remaining share of extraction
-    kernel time after the NMS conflict-graph fix. Byte-identical block
-    output vs the stdlib path is enforced by the differential tests in
-    tests/test_boilerplate_parser.py (fixtures + adversarial corpus +
-    hypothesis fuzz). Raises _FallbackToStdlib outside the well-formed
-    subset; any other internal error degrades to the blocks recovered so
-    far (S3 semantics), matching the old except-pass behavior.
-    """
-    blocks: list[Block] = []
-    open_blocks: list[Block] = []
-    elem_stack: list[tuple[str, bool]] = []
-    bp_depth = 0
-    skip_depth = 0
-    anchor_depth = 0
-    merge_depth = 0
-    flags = _TAG_FLAGS
-    hints = BOILERPLATE_CLASS_HINTS
-    i, n = 0, len(html)
-    find = html.find
-    tag_match = _TAG_RE.match
-    class_search = _CLASS_RE.search
-    pend: str | None = None  # end-tag event funnel: one inline handler site
-    try:
-        while i < n or pend is not None:
-            if pend is not None:
-                name, pend = pend, None
-                f = flags.get(name, 0)
-                if f & _F_SKIP:
-                    if skip_depth:
-                        skip_depth -= 1
-                    continue
-                # close the NEAREST open element with this name (standard
-                # HTML recovery); fast path: well-nested markup
-                if elem_stack and elem_stack[-1][0] == name:
-                    if elem_stack[-1][1]:
-                        bp_depth -= 1
-                    elem_stack.pop()
-                else:
-                    for j in range(len(elem_stack) - 1, -1, -1):
-                        if elem_stack[j][0] == name:
-                            for _t, was_bp in elem_stack[j:]:
-                                if was_bp:
-                                    bp_depth -= 1
-                            del elem_stack[j:]
-                            break
-                if not f & (_F_ANCHOR | _F_MERGE | _F_CELLSEP | _F_BLOCK):
-                    continue  # plain container, the common case
-                if f & _F_ANCHOR:
-                    if anchor_depth:
-                        anchor_depth -= 1
-                elif f & _F_MERGE:
-                    if merge_depth == 1 and open_blocks:
-                        blk = open_blocks.pop()
-                        blk.text = " ".join("".join(blk._parts).split())
-                        if blk.text:
-                            blocks.append(blk)
-                    if merge_depth:
-                        merge_depth -= 1
-                elif merge_depth > 0 and f & _F_CELLSEP:
-                    # cell/row boundaries become whitespace in merged blocks
-                    if open_blocks:
-                        open_blocks[-1]._parts.append(" ")
-                elif f & _F_BLOCK and merge_depth == 0:
-                    if open_blocks and open_blocks[-1].tag == name:
-                        blk = open_blocks.pop()
-                        blk.text = " ".join("".join(blk._parts).split())
-                        if blk.text:
-                            blocks.append(blk)
-                continue
-            lt = find("<", i)
-            if lt != i:
-                s = html[i:] if lt < 0 else html[i:lt]
-                if s and skip_depth == 0 and open_blocks:
-                    if "&" in s:
-                        s = unescape(s)
-                    blk = open_blocks[-1]
-                    blk._parts.append(s)
-                    if anchor_depth > 0:
-                        blk.link_chars += len(" ".join(s.split()))
-                if lt < 0:
-                    break
-            nxt = html[lt + 1] if lt + 1 < n else ""
-            # comment check only under '!' — '<!--' implies nxt == '!', so
-            # hoisting the nxt dispatch saves a startswith per tag (~200
-            # tags/page) with identical semantics
-            if nxt == "!" and html.startswith("<!--", lt):
-                cm = _COMMENT_CLOSE_RE.search(html, lt + 4)
-                if cm is None:
-                    # invalid/unterminated comment ('<!-->', '<!--->', or
-                    # EOF): stdlib close() emits through the next '>' as
-                    # data and resumes; with no '>', it emits only up to
-                    # the NEXT '<' (exclusive) and reprocesses from there
-                    # — NOT the whole remainder (goahead(end=1) recovery;
-                    # round-5 differential-fuzz fix, the one-fragment
-                    # flush drifted link_chars by the collapsed gap)
-                    g = find(">", lt + 1)
-                    if g < 0:
-                        g2 = find("<", lt + 1)
-                        s = html[lt:] if g2 < 0 else html[lt:g2]
-                    else:
-                        s = html[lt : g + 1]
-                    if s and skip_depth == 0 and open_blocks:
-                        if "&" in s:
-                            s = unescape(s)
-                        blk = open_blocks[-1]
-                        blk._parts.append(s)
-                        if anchor_depth > 0:
-                            blk.link_chars += len(" ".join(s.split()))
-                    if g >= 0:
-                        i = g + 1
-                        continue
-                    if g2 < 0:
-                        break
-                    i = g2
-                    continue
-                i = cm.end()
-                continue
-            if nxt in ("!", "?"):
-                end = find(">", lt + 2)
-                if end < 0:  # unterminated decl/PI: data up to next '<'
-                    g2 = find("<", lt + 1)
-                    s = html[lt:] if g2 < 0 else html[lt:g2]
-                    if s and skip_depth == 0 and open_blocks:
-                        if "&" in s:
-                            s = unescape(s)
-                        blk = open_blocks[-1]
-                        blk._parts.append(s)
-                        if anchor_depth > 0:
-                            blk.link_chars += len(" ".join(s.split()))
-                    if g2 < 0:
-                        break
-                    i = g2
-                    continue
-                i = end + 1
-                continue
-            is_letter = "a" <= nxt <= "z" or "A" <= nxt <= "Z"
-            if nxt == "/" and not (
-                lt + 2 < n
-                and ("a" <= html[lt + 2] <= "z" or "A" <= html[lt + 2] <= "Z")
-            ):
-                # '</' + non-name: html.parser consumes it as a bogus
-                # comment (up to and including the next '>'), emitting
-                # nothing; if no '>' follows, close() emits data up to
-                # the next '<' and reprocesses from there
-                end = find(">", lt + 2)
-                if end < 0:
-                    g2 = find("<", lt + 1)
-                    s = html[lt:] if g2 < 0 else html[lt:g2]
-                    if s and skip_depth == 0 and open_blocks:
-                        if "&" in s:
-                            s = unescape(s)
-                        blk = open_blocks[-1]
-                        blk._parts.append(s)
-                        if anchor_depth > 0:
-                            blk.link_chars += len(" ".join(s.split()))
-                    if g2 < 0:
-                        break
-                    i = g2
-                    continue
-                i = end + 1
-                continue
-            if not is_letter and nxt != "/":
-                # recovery: bare '<' is text
-                if skip_depth == 0 and open_blocks:
-                    blk = open_blocks[-1]
-                    blk._parts.append("<")
-                    if anchor_depth > 0:
-                        blk.link_chars += 1  # len(" ".join("<".split()))
-                i = lt + 1
-                continue
-            m = tag_match(html, lt)
-            if not m:
-                if find(">", lt) < 0:
-                    # incomplete tag at EOF: close() emits data up to the
-                    # next '<' and reprocesses from there (never the whole
-                    # remainder in one fragment — the whitespace-collapse
-                    # of a merged fragment drifts link_chars)
-                    g2 = find("<", lt + 1)
-                    s = html[lt:] if g2 < 0 else html[lt:g2]
-                    if s and skip_depth == 0 and open_blocks:
-                        if "&" in s:
-                            s = unescape(s)
-                        blk = open_blocks[-1]
-                        blk._parts.append(s)
-                        if anchor_depth > 0:
-                            blk.link_chars += len(" ".join(s.split()))
-                    if g2 < 0:
-                        break
-                    i = g2
-                    continue
-                raise _FallbackToStdlib  # tag outside the well-formed subset
-            end_g, name, attrs_s, slash = m.group("end", "name", "attrs", "slash")
-            name = name.lower()
-            i = m.end()
-            if end_g:
-                if attrs_s.strip() or slash:
-                    raise _FallbackToStdlib  # junk inside an end tag
-                pend = name
-                continue
-            f = flags.get(name, 0)
-            if f & _F_SKIP:
-                skip_depth += 1
-            else:
-                is_bp = bool(f & _F_BP)
-                if not is_bp and attrs_s and "class" in attrs_s.lower():
-                    cm = class_search(attrs_s)
-                    if cm:
-                        val = cm.group(2) or cm.group(3) or cm.group(4) or ""
-                        if "&" in val:
-                            val = unescape(val)
-                        is_bp = not hints.isdisjoint(val.lower().split())
-                if not f & _F_VOID:
-                    elem_stack.append((name, is_bp))
-                    if is_bp:
-                        bp_depth += 1
-                if f & (_F_ANCHOR | _F_MERGE | _F_BLOCK):
-                    if f & _F_ANCHOR:
-                        anchor_depth += 1
-                    elif f & _F_MERGE:
-                        merge_depth += 1
-                        if merge_depth == 1:
-                            open_blocks.append(
-                                Block(tag=name, boilerplate_ancestor=bp_depth > 0)
-                            )
-                    elif merge_depth == 0:
-                        open_blocks.append(
-                            Block(tag=name, boilerplate_ancestor=bp_depth > 0)
-                        )
-            if slash:
-                pend = name
-            elif name in CDATA_CONTENT_TAGS:
-                # CDATA mode: raw content until the strict matching close
-                cm2 = _SKIP_CLOSE_RES[name].search(html, i)
-                if cm2 is None:
-                    break  # unclosed script/style swallows the rest
-                pend = name
-                i = cm2.end()
-    except _FallbackToStdlib:
-        raise
-    except Exception:  # defensive: degrade to blocks recovered so far (S3)
-        pass
-    while open_blocks:  # flush unclosed blocks (malformed html)
-        blk = open_blocks.pop()
-        blk.text = " ".join("".join(blk._parts).split())
-        if blk.text:
-            blocks.append(blk)
-    return blocks
+
+def _cdata_end(html: str, pos: int, tag: str) -> int:
+    """End of the close tag of the script/style element whose raw content
+    starts at ``pos``, or -1 if it is never closed. Case-insensitive
+    matching folds 'ſ' and 'İ' to 's' and 'i', but stdlib's end-tag
+    grammar then needs an ASCII name: a close tag such as '</ſcript>' is
+    raw content too."""
+    close = _SKIP_CLOSE_RES[tag]
+    while (m := close.search(html, pos)) is not None:
+        if m.group(1).isascii():
+            return m.end()
+        pos = m.end()
+    return -1
+
+
+def _class_is_boilerplate(value: str) -> bool:
+    """Does a class attribute value (the last ``class`` attribute of a tag,
+    as stdlib's dict(attrs) keeps it) name a boilerplate hint?"""
+    if "&" in value:
+        value = unescape(value)
+    return not BOILERPLATE_CLASS_HINTS.isdisjoint(value.lower().split())
+
+
+_blockparse = load_extension(resources.files(__package__) / "_blockparse.c")
+_blockparse.configure(
+    Block, _TAG_FLAGS, unescape, _comment_end, _cdata_end, _class_is_boilerplate
+)
 
 
 def parse_blocks(html: str) -> list[Block]:
-    """Parse HTML into ordered text blocks. Malformed HTML degrades to
-    whatever blocks were recoverable (never raises). Markup outside the
-    fast tokenizer's well-formed subset re-parses through stdlib."""
-    try:
-        return _fast_parse(html)
-    except _FallbackToStdlib:
-        return parse_blocks_stdlib(html)
+    """Parse HTML into ordered text blocks, with the C block parser.
+    Malformed HTML degrades to whatever blocks are recoverable; a page
+    with a tag outside the parser's well-formed subset re-parses through
+    stdlib html.parser. Internal errors (a MemoryError, say) raise."""
+    blocks = _blockparse.parse(html)
+    return parse_blocks_stdlib(html) if blocks is None else blocks
 
 
 def parse_blocks_stdlib(html: str) -> list[Block]:

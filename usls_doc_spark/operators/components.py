@@ -47,16 +47,6 @@ def _qualified(spark: SparkSession, path: str) -> str:
     return fs.makeQualified(p).toString()
 
 
-def _rdd_ckpt_dirs(spark: SparkSession, checkpoint_dir: str) -> set[str]:
-    """The rdd-<id> checkpoint directories currently under the context's
-    checkpoint root — one globStatus listing."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(checkpoint_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    st = fs.globStatus(jvm.org.apache.hadoop.fs.Path(f"{checkpoint_dir}/*/rdd-*"))
-    return set() if st is None else {s.getPath().toString() for s in st}
-
-
 def _own_ckpt_dirs(df: DataFrame) -> set[str]:
     """THIS DataFrame's reliable-checkpoint rdd-<id> directory, found by
     walking the physical RDD's dependency chain to the checkpointed node

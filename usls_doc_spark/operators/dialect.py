@@ -230,14 +230,3 @@ def dot64(a: str, b: str, dims: int = 64) -> str:
 
     return render
 
-
-def cosine64(a: str, b: str, dims: int = 64):
-    """Renderer for cosine similarity with fixed evaluation order."""
-
-    def render(d: Dialect) -> str:
-        dab = dot64(a, b, dims)(d)
-        daa = dot64(a, a, dims)(d)
-        dbb = dot64(b, b, dims)(d)
-        return f"({dab} / (sqrt({daa}) * sqrt({dbb})))"
-
-    return render
