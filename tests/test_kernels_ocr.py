@@ -162,7 +162,7 @@ def test_greedy_generate_eos_and_refeed():
 def test_ocr_page_roundtrips_uppercase_punct_and_long_chunks():
     """The span == chunk invariant must survive uppercase, punctuation and
     chunks longer than the old 256-step decode cap (round-1 ADVICE)."""
-    from usls_doc_spark.pipeline.ocr import ocr_page
+    from usls_doc_spark.pipeline.ocr import ocr_rows
 
     long_words = " ".join("Supercalifragilistic-Expialidocious!?" for _ in range(8))
     html = (
@@ -171,8 +171,8 @@ def test_ocr_page_roundtrips_uppercase_punct_and_long_chunks():
         f"<p>{long_words}</p>"
         "</body></html>"
     ).encode()
-    rows = ocr_page(html, "u")
-    texts = [r["span_text"] for r in rows]
+    rows = ocr_rows([("u", html)])  # a one-row batch through the bucket path
+    texts = [r[2] for r in rows]
     assert texts[0] == "Hello, World! MIXED case & punct: (yes)."
     assert texts[1] == long_words
     assert len(long_words) > 256
@@ -183,14 +183,15 @@ def test_ocr_batch_width_buckets_preserve_order():
     output rows stay in (page, region) order with exact span text."""
     import pandas as pd
 
-    from usls_doc_spark.pipeline.ocr import WIDTH_BUCKET, detect_page_regions, ocr_batch
+    from usls_doc_spark.pipeline.ocr import WIDTH_BUCKET, detect_page_regions, ocr_rows
 
     short = "tiny"
     long = "x" * 90  # 4*90+... > WIDTH_BUCKET/4? width = 4*n_chars -> 360 > 320
     html1 = f"<html><body><p>{short}</p><p>{long}</p></body></html>".encode()
     html2 = f"<html><body><p>{long}</p><p>{short}</p></body></html>".encode()
     pdf = pd.DataFrame({"url": ["u1", "u2"], "html": [html1, html2]})
-    out = pd.concat(list(ocr_batch(iter([pdf]))))
+    cols = ["url", "region_id", "span_text", "x", "y", "width", "height", "conf"]
+    out = pd.DataFrame(ocr_rows(pdf.itertuples(index=False, name=None)), columns=cols)
     assert list(out["url"]) == ["u1", "u1", "u2", "u2"]
     assert list(out["region_id"]) == [0, 1, 0, 1]
     assert list(out["span_text"]) == [short, long, long, short]

@@ -93,7 +93,7 @@ def test_flow_layout_fast_path_ab():
         boxes = np.zeros((n, 4), dtype=np.float32)
         y = MARGIN
         for i, blk in enumerate(blocks):
-            bx, by, bw, bh = _block_box(blk.n_chars, MARGIN, y, CONTENT_W)
+            bx, by, bw, bh = _block_box(len(blk.text), MARGIN, y, CONTENT_W)
             y = by + bh + BLOCK_GAP
             boxes[i] = (bx, by, bw, bh)
         page_h = max(y - BLOCK_GAP + MARGIN, MARGIN * 2 + LINE_H)

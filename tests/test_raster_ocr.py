@@ -82,7 +82,7 @@ def test_spec_is_independent_of_kernels():
 
 
 def test_spans_differential_bit_exact():
-    from usls_doc_spark.pipeline.raster_ocr import _spans_batch
+    from usls_doc_spark.pipeline.raster_ocr import spans_rows
 
     docs = [
         (0, "one two three four five six seven eight nine ten eleven tw"),
@@ -90,7 +90,7 @@ def test_spans_differential_bit_exact():
         (21, " ".join(["aa"] * 25)),
     ]
     pdf = pd.DataFrame(docs, columns=["doc_id", "text"])
-    got = sorted(tuple(r) for r in pd.concat(list(_spans_batch(iter([pdf])))).itertuples(index=False))
+    got = sorted(spans_rows(pdf.itertuples(index=False, name=None)))
     con = duckdb.connect(":memory:")
     con.register(
         "docs_src",

@@ -26,10 +26,13 @@ HDFS-block-sized at any corpus scale.
 
 from __future__ import annotations
 
+import hashlib
 import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..pipeline.crossing import map_rows
 
 MANIFEST_NAME = "_export_manifest.json"  # '_' prefix: invisible to readers
 
@@ -107,6 +110,11 @@ def _existing_shard_keys(spark: SparkSession, out_dir: str) -> set[str]:
     return keys
 
 
+def _hash_shard(key: str, content) -> list[tuple]:
+    data = bytes(content)
+    return [(key, hashlib.sha256(data).hexdigest(), data.count(b"\n"))]
+
+
 def _compute_shard_entries(
     spark: SparkSession, out_dir: str, skip_keys: set[str] | None = None
 ) -> dict[str, dict]:
@@ -115,8 +123,6 @@ def _compute_shard_entries(
     executors, only the tiny (key, sha, count) rows reach the driver.
     ``skip_keys`` entries are not re-hashed (their manifest rows are
     already trusted — the resume economy)."""
-    import pandas as pd
-
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.txt")
@@ -132,21 +138,8 @@ def _compute_shard_entries(
             [(k,) for k in sorted(skip_keys)], "key string"
         )
         files = files.join(F.broadcast(skip_df), "key", "left_anti")
-
-    def _hash(batches):
-        import hashlib
-
-        for pdf in batches:
-            rows = []
-            for key, content in zip(pdf["key"], pdf["content"]):
-                data = bytes(content)
-                rows.append(
-                    (key, hashlib.sha256(data).hexdigest(), data.count(b"\n"))
-                )
-            yield pd.DataFrame(rows, columns=["key", "sha256", "lines"])
-
-    out = files.select("key", "content").mapInPandas(
-        _hash, "key string, sha256 string, lines bigint"
+    out = map_rows(
+        files.select("key", "content"), _hash_shard, "key string, sha256 string, lines bigint"
     )
     return {
         r["key"]: {"sha256": r["sha256"], "lines": int(r["lines"])}

@@ -29,9 +29,8 @@ from __future__ import annotations
 
 import datetime as dt
 import html as html_mod
-from collections.abc import Iterator
 
-import pandas as pd
+from ..pipeline.crossing import adaptive_partitions, map_rows
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -207,13 +206,8 @@ def synth_page(doc_id: int, text: str, lang: str) -> dict:
     }
 
 
-def _synth_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = [
-            synth_page(int(d), t, lg)
-            for d, t, lg in zip(pdf["doc_id"], pdf["text"], pdf["lang"])
-        ]
-        yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
+def _synth_row(doc_id: int, text: str, lang: str) -> list[tuple]:
+    return [tuple(synth_page(doc_id, text, lang).values())]  # PAGES_SCHEMA order
 
 
 def pages_from_documents(spark, sf_dir: str, copies: int = 1, n_partitions: int | None = None):
@@ -244,24 +238,4 @@ def pages_from_documents(spark, sf_dir: str, copies: int = 1, n_partitions: int 
     nparts = n_partitions or adaptive_partitions(
         spark, f"{sf_dir}/documents.parquet", size_mult=max(copies, 1)
     )
-    return docs.repartition(nparts, "doc_id").mapInPandas(_synth_batch, schema=PAGES_SCHEMA)
-
-
-def adaptive_partitions(spark, path: str, floor_waves: int = 2,
-                        cap_waves: int = 8, part_bytes: int = 32 * 1024,
-                        size_mult: int = 1) -> int:
-    """Input-size-derived task count for a kernel crossing (round 8,
-    guide §2.2): ceil(input_bytes / part_bytes) clamped to
-    [floor_waves, cap_waves] waves per core. Fixed waves-per-core
-    constants pay pure scheduling overhead on small inputs and the cap
-    keeps big inputs at the measured skew-amortizing wave count."""
-    import math
-    import os
-
-    par = spark.sparkContext.defaultParallelism
-    try:
-        size = os.path.getsize(path) * size_mult
-    except OSError:
-        return par * cap_waves
-    return min(par * cap_waves,
-               max(par * floor_waves, math.ceil(size / part_bytes)))
+    return map_rows(docs.repartition(nparts, "doc_id"), _synth_row, PAGES_SCHEMA)

@@ -85,12 +85,8 @@ class Block:
     boilerplate_ancestor: bool = False
 
     @property
-    def n_chars(self) -> int:
-        return len(self.text)
-
-    @property
     def link_density(self) -> float:
-        return float(np.float32(self.link_chars) / np.float32(max(self.n_chars, 1)))
+        return float(np.float32(self.link_chars) / np.float32(max(len(self.text), 1)))
 
 
 class _BlockParser(HTMLParser):
@@ -308,7 +304,7 @@ def classify_block(blk: Block) -> tuple[str, float]:
     """
     ld = np.float32(min(blk.link_density, 1.0))
     if blk.boilerplate_ancestor:
-        if blk.n_chars > 2000:
+        if len(blk.text) > 2000:
             return "abandon", 0.550000011920929  # float(np.float32(0.55))
         return "abandon", float(_F041 + _F008 * ld)
     if ld > LINK_DENSITY_ABANDON:
@@ -323,7 +319,7 @@ def classify_block(blk: Block) -> tuple[str, float]:
         return "table_caption", 0.800000011920929  # float(np.float32(0.80))
     if blk.tag == "figcaption":
         return "figure_caption", 0.800000011920929
-    size = np.float32(min(blk.n_chars, 280)) / _F280
+    size = np.float32(min(len(blk.text), 280)) / _F280
     return "plain text", float(_F060 + _F035 * size)
 
 
@@ -373,7 +369,7 @@ def classify_blocks(blocks: list[Block]) -> tuple[list[str], np.ndarray]:
             out_conf[i] = cf
         return out_c, out_conf
     link = np.fromiter((b.link_chars for b in blocks), dtype=np.int64, count=n)
-    chars = np.fromiter((b.n_chars for b in blocks), dtype=np.int64, count=n)
+    chars = np.fromiter((len(b.text) for b in blocks), dtype=np.int64, count=n)
     bp = np.fromiter((b.boilerplate_ancestor for b in blocks), dtype=bool, count=n)
     # scalar path: ld = f32(min(float(f32(link)/f32(max(chars,1))), 1.0))
     ld = link.astype(np.float32) / np.maximum(chars, 1).astype(np.float32)

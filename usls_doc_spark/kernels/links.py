@@ -9,7 +9,7 @@ DISCARDS nav/footer link text as boilerplate; this kernel is the
 complementary view that keeps exactly those links.
 
 Pure stdlib (re + html.unescape), no Spark imports — the Spark side
-(pipeline/links.py) runs it inside mapInPandas over Arrow batches.
+(pipeline/links.py) runs it per page through pipeline/crossing.map_rows.
 """
 
 from __future__ import annotations

@@ -68,7 +68,7 @@ def flow_layout(
         # loop below (A/B-proven in test_raster_layout.py). Below the
         # threshold the loop wins: fresh array construction dominates at
         # tens of blocks in this environment (CLAUDE.md gotcha).
-        chars = np.fromiter((b.n_chars for b in blocks), dtype=np.int64, count=n)
+        chars = np.fromiter((len(b.text) for b in blocks), dtype=np.int64, count=n)
         nn = np.maximum(chars, 1)
         cpl = max(1, CONTENT_W // CHAR_W)
         h = (nn + cpl - 1) // cpl * LINE_H
@@ -91,14 +91,14 @@ def flow_layout(
                 col_y[0] = col_y[1] = y
             col = 0 if i in left_set else 1
             cx = MARGIN if col == 0 else COL2_X
-            bx, by, bw, bh = _block_box(blk.n_chars, cx, col_y[col], COL_W)
+            bx, by, bw, bh = _block_box(len(blk.text), cx, col_y[col], COL_W)
             col_y[col] = by + bh + BLOCK_GAP
         else:
             if col_started:  # resume full-width flow below both columns
                 y = max(col_y[0], col_y[1])
                 col_started = False
                 col_y = {0: 0, 1: 0}
-            bx, by, bw, bh = _block_box(blk.n_chars, MARGIN, y, CONTENT_W)
+            bx, by, bw, bh = _block_box(len(blk.text), MARGIN, y, CONTENT_W)
             y = by + bh + BLOCK_GAP
         boxes[i] = (bx, by, bw, bh)
     if col_started:
@@ -205,7 +205,7 @@ def infer_pages_batched(
         for p in el_pages:
             blk_mask[offs[p]:offs[p + 1]] = True
         chars = np.fromiter(
-            (all_blocks[j].n_chars for j in np.nonzero(blk_mask)[0]),
+            (len(all_blocks[j].text) for j in np.nonzero(blk_mask)[0]),
             dtype=np.int64, count=int(el_counts.sum()),
         )
         nn = np.maximum(chars, 1)

@@ -40,7 +40,7 @@ transcendental DuckDB cannot restate bitwise. Per column family:
     truncating u8 cast, 114 padding) restated pixel-for-pixel in SQL
     over the formula-generated source raster.
 
-The decode is MEMOIZED per class k per task (_instances_batch's cache) —
+The decode is MEMOIZED per class k per task (layout_instances' cache) —
 the kernels execute distributed inside the Arrow batches, but at most 64
 times per task; a real per-image decode would drop the memo because its
 inputs vary per row.
@@ -49,13 +49,12 @@ inputs vary per row.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from ..kernels.instances import decode_instance_mask, decode_keypoints, decode_obb
 from ..kernels.letterbox import letterbox_image, letterbox_spec
+from ..pipeline.crossing import map_rows
 
 N_CLASSES = 64
 KP_CONF_THRESH = 0.5
@@ -163,23 +162,19 @@ def decode_instance_row(k: int) -> tuple:
     )
 
 
-def _instances_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.split(" ")[0] for f in INSTANCES_SCHEMA.split(", ")]
-    cache: dict[int, tuple] = {}
-    for pdf in batches:
-        rows = []
-        for d in pdf["doc_id"]:
-            k = int(d) % N_CLASSES
-            if k not in cache:
-                cache[k] = decode_instance_row(k)
-            rows.append((int(d), *cache[k]))
-        yield pd.DataFrame(rows, columns=cols)
-
-
 def layout_instances(spark, sf_dir: str):
     """documents -> per-doc decoded OBB vertices, keypoints, mask stats."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return docs.mapInPandas(_instances_batch, schema=INSTANCES_SCHEMA)
+    # pickled into each task with the closure: one memo per task
+    cache: dict[int, tuple] = {}
+
+    def instance_row(doc_id: int) -> list[tuple]:
+        k = doc_id % N_CLASSES
+        if k not in cache:
+            cache[k] = decode_instance_row(k)
+        return [(doc_id, *cache[k])]
+
+    return map_rows(docs, instance_row, INSTANCES_SCHEMA)
 
 
 def instances_oracle() -> str:

@@ -1,5 +1,6 @@
 """Multimodal binary-column plumbing: opaque media bytes + typed metadata,
-decode/feature-extract as Arrow-batched pandas UDFs.
+decode/feature-extract per row through the Arrow-batched crossing
+(pipeline/crossing.map_rows).
 
 The reference decodes images via the `image` crate inside DataLoader
 (/root/reference/src/misc/dataloader.rs:388-416, RGB8 forced) and resizes
@@ -21,10 +22,11 @@ ASCII (asserted in tests/test_multimodal.py).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
 
 import numpy as np
-import pandas as pd
+
+from ..pipeline.crossing import map_rows
 
 N_FEATURES = 8
 
@@ -54,28 +56,20 @@ def _fake_features(arr: np.ndarray) -> np.ndarray:
     return arr.reshape(-1, N_FEATURES).mean(axis=0).astype(np.float32)
 
 
-def media_features_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = ["url", "n_bytes", "magic", "mean_byte", "n_frames"] + [
-        f"f{j}" for j in range(N_FEATURES)
+def media_features(url: str, data) -> list[tuple]:
+    if data is None:
+        return [(url, 0, "", 0.0, 0, *([0.0] * N_FEATURES))]
+    arr = np.frombuffer(bytes(data), dtype=np.uint8)
+    return [
+        (
+            url,
+            len(arr),
+            bytes(data[:4]).hex(),
+            float(arr.mean()) if len(arr) else 0.0,
+            int(len(arr) // 4096) + 1,  # fake frame-sample count
+            *[float(v) for v in _fake_features(arr)],
+        )
     ]
-    for pdf in batches:
-        rows = []
-        for url, data in zip(pdf["url"], pdf["html"]):
-            if data is None:
-                rows.append((url, 0, "", 0.0, 0, *([0.0] * N_FEATURES)))
-                continue
-            arr = np.frombuffer(bytes(data), dtype=np.uint8)
-            rows.append(
-                (
-                    url,
-                    len(arr),
-                    bytes(data[:4]).hex(),
-                    float(arr.mean()) if len(arr) else 0.0,
-                    int(len(arr) // 4096) + 1,  # fake frame-sample count
-                    *[float(v) for v in _fake_features(arr)],
-                )
-            )
-        yield pd.DataFrame(rows, columns=cols)
 
 
 def multimodal_features(spark, sf_dir: str):
@@ -87,9 +81,7 @@ def multimodal_features(spark, sf_dir: str):
     from ..io.synth import pages_from_documents
 
     pages = pages_from_documents(spark, sf_dir)
-    return pages.select("url", "html").mapInPandas(
-        media_features_batch, schema=MULTIMODAL_SCHEMA
-    )
+    return map_rows(pages.select("url", "html"), media_features, MULTIMODAL_SCHEMA)
 
 
 def _esc(expr: str) -> str:
@@ -203,39 +195,34 @@ FRAME_SAMPLE_SCHEMA = (
 )
 
 
-def frame_sample_batch(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-    """mapInPandas fan-OUT: each media payload yields up to K sampled
-    frame rows (the video frame-sample shape — dataloader.rs's images2mp4
-    consumer side would decode these). Frames are FRAME_BYTES slices;
-    sampling is the deterministic even stride ceil(n_frames / K). A real
-    deployment swaps the per-frame stats for a decoder call; the
-    partitioning/batching/fan-out plumbing is what this operator tests."""
-    import math
-
-    cols = ["url", "frame_id", "frame_off", "frame_len", "mean_byte", "first_byte"]
-    for pdf in batches:
-        rows = []
-        for url, data in zip(pdf["url"], pdf["html"]):
-            if data is None or len(data) == 0:
-                continue
-            arr = np.frombuffer(bytes(data), dtype=np.uint8)
-            n_frames = math.ceil(len(arr) / FRAME_BYTES)
-            step = math.ceil(n_frames / FRAME_SAMPLE_K)
-            for fi in range(0, n_frames, step):
-                off = fi * FRAME_BYTES
-                fr = arr[off : off + FRAME_BYTES]
-                # integer sum then ONE division: bit-identical to the oracle
-                rows.append(
-                    (
-                        url,
-                        fi,
-                        off,
-                        len(fr),
-                        float(int(fr.sum(dtype=np.int64)) / len(fr)),
-                        int(fr[0]),
-                    )
-                )
-        yield pd.DataFrame(rows, columns=cols)
+def frame_samples(url: str, data) -> list[tuple]:
+    """Fan-OUT: each media payload yields up to K sampled frame rows (the
+    video frame-sample shape — dataloader.rs's images2mp4 consumer side
+    would decode these). Frames are FRAME_BYTES slices; sampling is the
+    deterministic even stride ceil(n_frames / K). A real deployment swaps
+    the per-frame stats for a decoder call; the partitioning/batching/
+    fan-out plumbing is what this operator tests."""
+    if data is None or len(data) == 0:
+        return []
+    arr = np.frombuffer(bytes(data), dtype=np.uint8)
+    n_frames = math.ceil(len(arr) / FRAME_BYTES)
+    step = math.ceil(n_frames / FRAME_SAMPLE_K)
+    rows = []
+    for fi in range(0, n_frames, step):
+        off = fi * FRAME_BYTES
+        fr = arr[off : off + FRAME_BYTES]
+        # integer sum then ONE division: bit-identical to the oracle
+        rows.append(
+            (
+                url,
+                fi,
+                off,
+                len(fr),
+                float(int(fr.sum(dtype=np.int64)) / len(fr)),
+                int(fr[0]),
+            )
+        )
+    return rows
 
 
 def multimodal_frame_sample(spark, sf_dir: str):
@@ -243,9 +230,7 @@ def multimodal_frame_sample(spark, sf_dir: str):
     from ..io.synth import pages_from_documents
 
     pages = pages_from_documents(spark, sf_dir)
-    return pages.select("url", "html").mapInPandas(
-        frame_sample_batch, schema=FRAME_SAMPLE_SCHEMA
-    )
+    return map_rows(pages.select("url", "html"), frame_samples, FRAME_SAMPLE_SCHEMA)
 
 
 FRAME_SAMPLE_ORACLE = f"""{_PAGE_CODES_CTES},

@@ -9,6 +9,10 @@ Spark-first re-expression of the reference's ``detect_documents``
                                    # flow-layout model head, decode (L2-L7),
                                    # abandon-filter + i32 round (L12),
                                    # XY-cut reading order, span assembly
+                                   # (its own batch kernel, not
+                                   # crossing.map_batches: columnar
+                                   # output, per-task model, stage
+                                   # retry, elapsed_us)
   -> downstream DataFrame ops      # filters/aggregations/joins stay JVM-side
 
 Everything per-page is local to the UDF (no shuffle); the only cross-node

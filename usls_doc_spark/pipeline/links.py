@@ -1,12 +1,13 @@
 """Anchor-text aggregation over raw page HTML — the crawl-frontier lens.
 
-Spark path: synthesized pages -> mapInPandas link extraction
-(kernels/links.py, Arrow batches, no per-row Python UDF) -> one hash
-aggregate per link target. The DuckDB oracle REBUILDS every page's links
-in SQL from the generator's closed form (io/synth.py:synth_page — nav
-emits '/cat/k' for k < 12, or k < 1200 on skew pages doc_id % SKEW_MOD
-== 0, plus the fixed '/more'/'/about'/'/tos' links), so the whole
-HTML -> scanner -> aggregation path is checked from first principles.
+Spark path: synthesized pages -> link extraction per page through
+crossing.map_rows (kernels/links.py, Arrow batches, no per-row Python
+UDF) -> one hash aggregate per link target. The DuckDB oracle REBUILDS
+every page's links in SQL from the generator's closed form
+(io/synth.py:synth_page — nav emits '/cat/k' for k < 12, or k < 1200 on
+skew pages doc_id % SKEW_MOD == 0, plus the fixed '/more'/'/about'/'/tos'
+links), so the whole HTML -> scanner -> aggregation path is checked from
+first principles.
 
 Scale shape (100 TB): the link triples are a flatMap (1 page -> ~15
 rows, ~1200 on skew pages); the aggregate keys on href with map-side
@@ -18,33 +19,24 @@ it as a two-level (href, url) -> href aggregate, both levels hash aggs.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.synth import SKEW_MOD, pages_from_documents
 from ..kernels.links import extract_links
+from .crossing import map_rows
 
 LINKS_SCHEMA = "url string, href string, anchor string"
 
 
-def _links_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for url, html in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
-            page = bytes(html).decode("utf-8", errors="replace")
-            for href, anchor in extract_links(page):
-                rows.append((url, href, anchor))
-        yield pd.DataFrame(rows, columns=["url", "href", "anchor"])
+def _page_links(url: str, html: bytes) -> list[tuple]:
+    page = bytes(html).decode("utf-8", errors="replace")
+    return [(url, href, anchor) for href, anchor in extract_links(page)]
 
 
 def page_links(pages_df: DataFrame) -> DataFrame:
     """(url, href, anchor) triples — lazy, column-pruned before Arrow."""
-    return pages_df.select("url", "html").mapInPandas(
-        _links_batch, schema=LINKS_SCHEMA
-    )
+    return map_rows(pages_df.select("url", "html"), _page_links, LINKS_SCHEMA)
 
 
 def anchor_text_agg(spark: SparkSession, sf_dir: str) -> DataFrame:

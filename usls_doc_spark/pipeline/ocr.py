@@ -1,6 +1,6 @@
 """OCR-span pipeline: text-region detection (DB postprocess) + recognition
 (SVTR-style CTC decode) over region crops, per page, inside one
-Arrow-batched UDF.
+Arrow-batched crossing (``ocr_rows`` through crossing.map_batches).
 
 Model boundary: the ONNX DB/SVTR sessions are stubbed (image libs absent)
 with deterministic emitters — the DETECTION stub renders each text block as
@@ -14,23 +14,22 @@ the source documents (the DuckDB oracle states span == 8-word chunk).
 Width bucketing (R2, svtr/config.rs:14-17): recognition is batched ACROSS
 the whole Arrow batch, grouped by crop-width bucket (``width // 320``) —
 detection runs per page, recognition defers each region crop into its
-bucket, and one recognizer call serves each bucket (`recognize_bucket`,
-where a production ONNX SVTR would pad the bucket to a common width and
-issue a single session.run). Output rows re-assemble in (page, region)
-order, so the bucketing is invisible to results — the ocr_spans /
-ocr_regions_detail oracles pin that.
+bucket, and one recognizer call serves each bucket (`recognize_by_bucket`
+calling `recognize_bucket`, where a production ONNX SVTR would pad the
+bucket to a common width and issue a single session.run). Output rows
+re-assemble in (page, region) order, so the bucketing is invisible to
+results — the ocr_spans / ocr_regions_detail oracles pin that. The
+pixel-native spans of pipeline/raster_ocr share `recognize_by_bucket`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from ..kernels.boilerplate import classify_block, parse_blocks
 from ..kernels.ocr import ctc_greedy_decode, db_postprocess
 from ..kernels.yolo_decode import round_half_away
+from .crossing import map_batches
 
 OCR_SCHEMA = (
     "url string, region_id int, span_text string, "
@@ -87,7 +86,8 @@ def region_xywh(bbox: tuple[float, float, float, float]) -> tuple[int, int, int,
 
 def detect_page_regions(html_bytes: bytes | None, url: str) -> list[dict]:
     """DB-detect stage only: one pending record per text region, carrying
-    the crop geometry + source text for the deferred recognition stage."""
+    the crop geometry + source text (``crop``) for the deferred
+    recognition stage."""
     if html_bytes is None:
         return []
     html = bytes(html_bytes).decode("utf-8", errors="replace")
@@ -98,7 +98,7 @@ def detect_page_regions(html_bytes: bytes | None, url: str) -> list[dict]:
         cls, _conf = classify_block(blk)
         if cls != "plain text":
             continue
-        pm = render_region_prob_map(blk.n_chars)
+        pm = render_region_prob_map(len(blk.text))
         regions = db_postprocess(pm, ratio=1.0)
         if not regions:
             region_id += 1
@@ -109,7 +109,7 @@ def detect_page_regions(html_bytes: bytes | None, url: str) -> list[dict]:
             {
                 "url": url,
                 "region_id": region_id,
-                "crop_text": blk.text,
+                "crop": blk.text,
                 "x": x,
                 "y": y,
                 "width": width,
@@ -133,56 +133,33 @@ def recognize_bucket(crops: list[str]) -> list[str]:
     ]
 
 
-def ocr_page(html_bytes: bytes | None, url: str) -> list[dict]:
-    """Single-page convenience path (tests): detect + recognize inline."""
-    pending = detect_page_regions(html_bytes, url)
-    texts = recognize_bucket([r["crop_text"] for r in pending])
-    out = []
-    for r, t in zip(pending, texts):
-        r = dict(r)
-        r.pop("crop_text")
-        r.pop("bucket")
-        r["span_text"] = t
-        out.append(r)
-    return out
+def recognize_by_bucket(pending: list[dict], recognize) -> list[str | None]:
+    """Recognition batched per width bucket across a whole Arrow batch
+    (R2): group the pending records' ``crop`` by ``bucket``, make one
+    ``recognize`` call per bucket in sorted bucket order, and write the
+    results back by index so they stay in ``pending`` order."""
+    by_bucket: dict[int, list[int]] = {}
+    for idx, r in enumerate(pending):
+        by_bucket.setdefault(r["bucket"], []).append(idx)
+    texts: list[str | None] = [None] * len(pending)
+    for bucket in sorted(by_bucket):
+        idxs = by_bucket[bucket]
+        for i, t in zip(idxs, recognize([pending[i]["crop"] for i in idxs])):
+            texts[i] = t
+    return texts
 
 
-def ocr_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = ["url", "region_id", "span_text", "x", "y", "width", "height", "conf"]
-    for pdf in batches:
-        # stage 1: detection per page, recognition deferred
-        pending: list[dict] = []
-        for h, u in zip(pdf["html"].to_numpy(), pdf["url"].to_numpy()):
-            pending.extend(detect_page_regions(h, u))
-        # stage 2: recognition batched per width bucket across the WHOLE
-        # Arrow batch (R2); results written back by index, so output order
-        # stays (page, region)
-        by_bucket: dict[int, list[int]] = {}
-        for idx, r in enumerate(pending):
-            by_bucket.setdefault(r["bucket"], []).append(idx)
-        texts: list[str | None] = [None] * len(pending)
-        for bucket in sorted(by_bucket):
-            idxs = by_bucket[bucket]
-            decoded = recognize_bucket([pending[i]["crop_text"] for i in idxs])
-            for i, t in zip(idxs, decoded):
-                texts[i] = t
-        rows = []
-        for r, t in zip(pending, texts):
-            rows.append(
-                {
-                    "url": r["url"],
-                    "region_id": r["region_id"],
-                    "span_text": t,
-                    "x": r["x"],
-                    "y": r["y"],
-                    "width": r["width"],
-                    "height": r["height"],
-                    "conf": r["conf"],
-                }
-            )
-        yield pd.DataFrame(rows, columns=cols)
+def ocr_rows(rows) -> list[tuple]:
+    """map_batches kernel: (url, html) rows -> span rows in (page, region)
+    order; detection per page, recognition deferred to the buckets."""
+    pending = [r for url, html in rows for r in detect_page_regions(html, url)]
+    texts = recognize_by_bucket(pending, recognize_bucket)
+    return [
+        (r["url"], r["region_id"], t, r["x"], r["y"], r["width"], r["height"], r["conf"])
+        for r, t in zip(pending, texts)
+    ]
 
 
 def ocr_spans(pages_df):
     """pages -> one row per recognized text span (lazy)."""
-    return pages_df.select("url", "html").mapInPandas(ocr_batch, schema=OCR_SCHEMA)
+    return map_batches(pages_df.select("url", "html"), ocr_rows, OCR_SCHEMA)

@@ -35,10 +35,7 @@ ratio-1 letterbox and even w/h make every decode float op exact), conf
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from ..io.synth import chunk_text, raster_spec
 from ..kernels.letterbox import letterbox_spec
@@ -47,6 +44,7 @@ from ..kernels.yolo_decode import (
     abandon_filter_and_round,
     decode_preds,
 )
+from .crossing import map_rows, split_documents
 
 STRIDE = 8
 # (class_id, fill value) per k % 6; class ids index DOCSTRUCTBENCH_NAMES
@@ -132,24 +130,9 @@ def detect_layout(doc_id: int, text: str) -> list[tuple]:
     return rows
 
 
-def _layout_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = ["doc_id", "x", "y", "width", "height", "cls", "conf", "id_born"]
-    for pdf in batches:
-        rows: list[tuple] = []
-        for d, t in zip(pdf["doc_id"], pdf["text"]):
-            rows.extend(detect_layout(int(d), t))
-        yield pd.DataFrame(rows, columns=cols)
-
-
 def raster_layout_blocks(spark, sf_dir: str):
     """documents -> pixel-native layout detections (real L2-L7+L12 path)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    from ..io.synth import adaptive_partitions
-    nparts = adaptive_partitions(spark, f"{sf_dir}/documents.parquet",
-                                 floor_waves=1, cap_waves=4)
-    return docs.repartition(nparts, "doc_id").mapInPandas(
-        _layout_batch, schema=RASTER_LAYOUT_SCHEMA
-    )
+    return map_rows(split_documents(spark, sf_dir), detect_layout, RASTER_LAYOUT_SCHEMA)
 
 
 def raster_layout_oracle() -> str:

@@ -38,14 +38,12 @@ The spec guarantees no region is ever dropped by the D6/D7 filters
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from ..io.synth import GLYPH_BIAS, RASTER_CELL, chunk_text, raster_spec, render_page_raster
 from ..kernels.ocr import ctc_greedy_decode, db_postprocess
-from .ocr import MAX_DECODE_LEN, VOCAB, WIDTH_BUCKET, region_xywh
+from .crossing import map_batches, map_rows, split_documents
+from .ocr import MAX_DECODE_LEN, VOCAB, WIDTH_BUCKET, recognize_by_bucket, region_xywh
 
 RASTER_OCR_SCHEMA = (
     "doc_id bigint, region_id int, x int, y int, width int, height int, conf float"
@@ -74,29 +72,9 @@ def detect_raster_regions(doc_id: int, text: str) -> list[tuple]:
     ]
 
 
-def _raster_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = ["doc_id", "region_id", "x", "y", "width", "height", "conf"]
-    for pdf in batches:
-        rows: list[tuple] = []
-        for d, t in zip(pdf["doc_id"], pdf["text"]):
-            rows.extend(detect_raster_regions(int(d), t))
-        yield pd.DataFrame(rows, columns=cols)
-
-
 def raster_ocr_regions(spark, sf_dir: str):
-    """documents -> per-chunk detected glyph-box geometry from pixels.
-
-    The source parquet is a single split at test scale — repartition on
-    doc_id BEFORE the Arrow crossing (4 waves per core) so the raster
-    render + contour trace runs on every core, same shape as
-    io/synth.pages_from_documents."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    from ..io.synth import adaptive_partitions
-    nparts = adaptive_partitions(spark, f"{sf_dir}/documents.parquet",
-                                 floor_waves=1, cap_waves=4)
-    return docs.repartition(nparts, "doc_id").mapInPandas(
-        _raster_batch, schema=RASTER_OCR_SCHEMA
-    )
+    """documents -> per-chunk detected glyph-box geometry from pixels."""
+    return map_rows(split_documents(spark, sf_dir), detect_raster_regions, RASTER_OCR_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -171,43 +149,23 @@ def recognize_glyph_bucket(crops: list[np.ndarray]) -> list[str]:
     ]
 
 
-def _spans_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = ["doc_id", "region_id", "span_text", "x", "y", "width", "height", "conf"]
-    for pdf in batches:
-        pending: list[dict] = []
-        for d, t in zip(pdf["doc_id"], pdf["text"]):
-            pending.extend(detect_raster_spans(int(d), t))
-        # recognition batched per width bucket across the Arrow batch (R2):
-        # one recognize_glyph_bucket call per bucket, results written back
-        # by index so output order stays (doc, region)
-        by_bucket: dict[int, list[int]] = {}
-        for idx, r in enumerate(pending):
-            by_bucket.setdefault(r["bucket"], []).append(idx)
-        texts: list[str | None] = [None] * len(pending)
-        for bucket in sorted(by_bucket):
-            idxs = by_bucket[bucket]
-            decoded = recognize_glyph_bucket([pending[i]["crop"] for i in idxs])
-            for i, t in zip(idxs, decoded):
-                texts[i] = t
-        rows = [
-            (r["doc_id"], r["region_id"], t, r["x"], r["y"], r["width"],
-             r["height"], r["conf"])
-            for r, t in zip(pending, texts)
-        ]
-        yield pd.DataFrame(rows, columns=cols)
+def spans_rows(rows) -> list[tuple]:
+    """map_batches kernel: (doc_id, text) rows -> span rows, detection per
+    page and recognition per width bucket across the whole batch (R2)."""
+    pending = [r for d, t in rows for r in detect_raster_spans(d, t)]
+    texts = recognize_by_bucket(pending, recognize_glyph_bucket)
+    return [
+        (r["doc_id"], r["region_id"], t, r["x"], r["y"], r["width"],
+         r["height"], r["conf"])
+        for r, t in zip(pending, texts)
+    ]
 
 
 def raster_ocr_spans(spark, sf_dir: str):
     """documents -> pixel-native end-to-end OCR: rendered glyph raster ->
     D1-D7 detect -> crop at the DETECTED geometry -> pixel-read recognize
     -> CTC decode. Oracle: render-spec geometry + span_text == chunk."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    from ..io.synth import adaptive_partitions
-    nparts = adaptive_partitions(spark, f"{sf_dir}/documents.parquet",
-                                 floor_waves=1, cap_waves=4)
-    return docs.repartition(nparts, "doc_id").mapInPandas(
-        _spans_batch, schema=RASTER_SPANS_SCHEMA
-    )
+    return map_batches(split_documents(spark, sf_dir), spans_rows, RASTER_SPANS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -284,14 +242,8 @@ def extract_from_raster(doc_id: int, text: str) -> tuple[int, str]:
     return len(regions), " ".join(texts)
 
 
-def _extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = ["doc_id", "n_regions", "extracted_text"]
-    for pdf in batches:
-        rows = []
-        for d, t in zip(pdf["doc_id"], pdf["text"]):
-            n, txt = extract_from_raster(int(d), t)
-            rows.append((int(d), n, txt))
-        yield pd.DataFrame(rows, columns=cols)
+def _extract_row(doc_id: int, text: str) -> list[tuple]:
+    return [(doc_id, *extract_from_raster(doc_id, text))]
 
 
 def raster_extract_text(spark, sf_dir: str):
@@ -299,13 +251,7 @@ def raster_extract_text(spark, sf_dir: str):
     render -> D1-D7 detect -> XY-cut order -> pixel-read recognize -> join.
     Oracle: extracted_text == documents.text (the north-rule per-row
     invariant), n_regions == the chunk count."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    from ..io.synth import adaptive_partitions
-    nparts = adaptive_partitions(spark, f"{sf_dir}/documents.parquet",
-                                 floor_waves=1, cap_waves=4)
-    return docs.repartition(nparts, "doc_id").mapInPandas(
-        _extract_batch, schema=RASTER_EXTRACT_SCHEMA
-    )
+    return map_rows(split_documents(spark, sf_dir), _extract_row, RASTER_EXTRACT_SCHEMA)
 
 
 RASTER_EXTRACT_ORACLE = """

@@ -15,13 +15,11 @@ oracle states them with integer arithmetic, no pinning needed.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from ..kernels.boilerplate import classify_block, parse_blocks
 from ..kernels.table_structure import decode_table_structure
+from .crossing import map_rows
 
 SLANET_VOCAB = ["<sos>", "<eos>", "<tr>", "</tr>", "<td></td>"]
 SOS_ID, EOS_ID, TR_ID, TREND_ID, TD_ID = range(5)
@@ -58,7 +56,7 @@ def stub_slanet_heads(row_lens: list[int]) -> tuple[np.ndarray, np.ndarray]:
     return logits, np.asarray(bboxes, dtype=np.float32)
 
 
-def table_cells_for_page(html_bytes, url: str) -> list[tuple]:
+def table_cells_for_page(url: str, html_bytes) -> list[tuple]:
     if html_bytes is None:
         return []
     from ..io.synth import table_rows
@@ -95,15 +93,6 @@ def table_cells_for_page(html_bytes, url: str) -> list[tuple]:
     return out
 
 
-def _tables_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.split(" ")[0] for f in TABLE_CELLS_SCHEMA.split(", ")]
-    for pdf in batches:
-        rows: list[tuple] = []
-        for url, html in zip(pdf["url"], pdf["html"]):
-            rows.extend(table_cells_for_page(html, url))
-        yield pd.DataFrame(rows, columns=cols)
-
-
 def table_cells(spark, sf_dir: str):
     """pages -> one row per recognized table cell with 4-corner geometry.
 
@@ -117,11 +106,8 @@ def table_cells(spark, sf_dir: str):
     from ..io.synth import pages_from_documents
 
     pages = pages_from_documents(spark, sf_dir)
-    return (
-        pages.select("url", "html")
-        .filter(F.col("html").cast("string").contains("<table"))
-        .mapInPandas(_tables_batch, schema=TABLE_CELLS_SCHEMA)
-    )
+    tables = pages.select("url", "html").filter(F.col("html").cast("string").contains("<table"))
+    return map_rows(tables, table_cells_for_page, TABLE_CELLS_SCHEMA)
 
 
 # cell x-pitch = IMAGE_W/8 = 64, y-pitch = IMAGE_H/4 = 64 — exact integers.

@@ -27,14 +27,12 @@ nuclei, cumulative-weight draws) are exercised in tests/test_sampler.py.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from ..kernels.boilerplate import classify_block, parse_blocks
 from ..kernels.ocr import greedy_generate
 from ..kernels.sampler import sample_topp, xorshift64s
+from .crossing import map_rows
 
 TROCR_SCHEMA = (
     "url string, transcript string, capped_transcript string, "
@@ -103,25 +101,18 @@ def _first_plain_text(html_bytes) -> str | None:
     return None
 
 
-def trocr_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = ["url", "transcript", "capped_transcript", "sampled_transcript"]
-    for pdf in batches:
-        rows = []
-        for url, html in zip(pdf["url"], pdf["html"]):
-            text = _first_plain_text(html)
-            if text is None:
-                continue
-            step = stub_decoder_step(_encode(text))
-            full = greedy_generate(step, START_ID, EOS_ID, max_steps=MAX_STEPS)
-            capped = greedy_generate(step, START_ID, EOS_ID, max_steps=CAP_STEPS)
-            sampled = sampled_generate(
-                step, START_ID, EOS_ID, MAX_STEPS,
-                SAMPLE_P, SAMPLE_TEMPERATURE, SAMPLE_SEED,
-            )
-            rows.append(
-                (url, _decode_ids(full), _decode_ids(capped), _decode_ids(sampled))
-            )
-        yield pd.DataFrame(rows, columns=cols)
+def transcribe_page(url: str, html) -> list[tuple]:
+    text = _first_plain_text(html)
+    if text is None:
+        return []
+    step = stub_decoder_step(_encode(text))
+    full = greedy_generate(step, START_ID, EOS_ID, max_steps=MAX_STEPS)
+    capped = greedy_generate(step, START_ID, EOS_ID, max_steps=CAP_STEPS)
+    sampled = sampled_generate(
+        step, START_ID, EOS_ID, MAX_STEPS,
+        SAMPLE_P, SAMPLE_TEMPERATURE, SAMPLE_SEED,
+    )
+    return [(url, _decode_ids(full), _decode_ids(capped), _decode_ids(sampled))]
 
 
 def trocr_transcripts(spark, sf_dir: str):
@@ -129,7 +120,7 @@ def trocr_transcripts(spark, sf_dir: str):
     from ..io.synth import pages_from_documents
 
     pages = pages_from_documents(spark, sf_dir)
-    return pages.select("url", "html").mapInPandas(trocr_batch, schema=TROCR_SCHEMA)
+    return map_rows(pages.select("url", "html"), transcribe_page, TROCR_SCHEMA)
 
 
 TROCR_ORACLE = """
