@@ -641,12 +641,12 @@ def test_raster_ocr_rejects_region_longer_than_decode_cap():
     import pytest
 
     from usls_doc_spark.pipeline.ocr import MAX_DECODE_LEN
-    from usls_doc_spark.pipeline.raster_ocr import detect_raster_spans, extract_from_raster
+    from usls_doc_spark.pipeline.raster_ocr import extract_from_raster, spans_rows
 
     text = "ab " + "x" * 5000 + " cd"
     with pytest.raises(RuntimeError, match="5006 glyph cells > 4096"):
         extract_from_raster(7, text)
     with pytest.raises(RuntimeError, match="5006 glyph cells > 4096"):
-        detect_raster_spans(7, text)
+        spans_rows([(7, text)])
     at_cap = "x" * (MAX_DECODE_LEN - 6)
     assert extract_from_raster(7, f"ab {at_cap} cd") == (1, f"ab {at_cap} cd")

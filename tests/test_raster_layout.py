@@ -7,6 +7,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
+from tests.test_raster_ocr import UNRENDERABLE
 from usls_doc_spark.pipeline.raster_layout import (
     detect_layout,
     pixel_head,
@@ -34,6 +35,7 @@ def test_differential_bit_exact_all_classes():
             (0, " ".join(f"w{i}" for i in range(70))),  # 9 chunks: all 6 m-cases
             (1, "a " * 39 + "b"),
             (5, "normal words go here over eight tokens total plus tail"),
+            *((10 + i, t) for i, t in enumerate(UNRENDERABLE)),  # geometry only
         ]
     )
     assert {r[5] for r in rows} >= {"title", "plain text", "table", "abandon", "figure_caption"}

@@ -43,106 +43,3 @@ def test_streaming_dedup_stitches_across_micro_batches(spark, tmp_path_factory):
     con = duck_con(SF_DIR)
     ok, msg = compare(got, con.sql(TEXT_QUERIES["dedup_exact"](DUCK)))
     assert ok, msg
-
-
-def test_bloom_fronted_dedup_bounds_state_and_loses_nothing(spark, tmp_path_factory):
-    """r6 VERDICT item 7: the bloom-fronted variant must (1) never admit a
-    historical duplicate as new (no false negatives — bloom guarantee),
-    (2) hold exact state ONLY for definite-new keys (numRowsTotal equals
-    their distinct count), and (3) produce exactly the python-replay
-    answer on both the exact and the maybe-seen paths (FPs are
-    deterministic: the bloom is md5 arithmetic, no RNG)."""
-    import hashlib
-
-    import duckdb
-
-    from usls_doc_spark.operators.web_curation import BLOOM_BITS, BLOOM_K
-    from usls_doc_spark.streaming.dedup import (
-        BLOOM_FRONT_OUT_SCHEMA,
-        build_dedup_bloom,
-        start_streaming_dedup_bloom_fronted,
-    )
-    from usls_doc_spark.streaming.sink import read_sink_or_empty
-
-    rows = duckdb.sql(
-        f"SELECT doc_id, text FROM '{SF_DIR}/documents.parquet' ORDER BY doc_id"
-    ).fetchall()
-
-    def key(text):
-        return hashlib.md5(" ".join(text.split(" ")[:3]).encode()).hexdigest()
-
-    hist_keys = {key(t) for i, t in rows if i % 2 == 0}
-    bloom_bits = set()
-    for h in hist_keys:
-        for ki in range(BLOOM_K):
-            bloom_bits.add(int(h[8 * ki : 8 * ki + 8], 16) % BLOOM_BITS)
-
-    def probes(h):
-        return all(
-            int(h[8 * ki : 8 * ki + 8], 16) % BLOOM_BITS in bloom_bits
-            for ki in range(BLOOM_K)
-        )
-
-    want_maybe, want_groups = set(), {}
-    for i, t in rows:
-        if i % 2 == 0:
-            continue
-        h = key(t)
-        if probes(h):
-            want_maybe.add(h)
-        else:
-            c, n = want_groups.get(h, (i, 0))
-            want_groups[h] = (min(c, i), n + 1)
-
-    # (1) bloom guarantee on the real corpus: every odd doc whose key IS
-    # historical must probe positive
-    odd_keys = {key(t) for i, t in rows if i % 2 == 1}
-    for h in odd_keys & hist_keys:
-        assert probes(h)
-
-    history = spark.read.parquet(f"{SF_DIR}/documents.parquet").filter("doc_id % 2 = 0")
-    words = build_dedup_bloom(history)
-    assert len(words) == BLOOM_BITS // 32
-    # the SQL-built bloom equals the hashlib-built bloom bit for bit
-    got_bits = {
-        w * 32 + b for w in range(len(words)) for b in range(32)
-        if words[w] & (1 << b)
-    }
-    assert got_bits == bloom_bits
-
-    sink = str(tmp_path_factory.mktemp("bloomed") / "sink")
-    q_exact, q_maybe, maybe_sink = start_streaming_dedup_bloom_fronted(
-        spark, SF_DIR, sink, words, query_name="bloomed_test"
-    )
-    try:
-        q_exact.processAllAvailable()
-        q_maybe.processAllAvailable()
-        state_rows = sum(
-            int(o.get("numRowsTotal", 0))
-            for o in (q_exact.lastProgress or {}).get("stateOperators", [])
-        )
-    finally:
-        q_exact.stop()
-        q_maybe.stop()
-
-    # (2) exact state bounded by definite-new keys only
-    assert state_rows == len(want_groups), (state_rows, len(want_groups))
-
-    # (3) both output paths equal the replay
-    from pyspark.sql import functions as F
-
-    exact = (
-        read_sink_or_empty(spark, sink, BLOOM_FRONT_OUT_SCHEMA)
-        .groupBy("dup_key")
-        .agg(F.min("canonical_id").alias("c"), F.max("n_members").alias("n"))
-        .collect()
-    )
-    got_groups = {r["dup_key"]: (r["c"], r["n"]) for r in exact}
-    assert got_groups == want_groups
-    got_maybe = {
-        r["dup_key"]
-        for r in read_sink_or_empty(spark, maybe_sink, BLOOM_FRONT_OUT_SCHEMA).collect()
-    }
-    assert got_maybe == want_maybe
-    # the corpus genuinely exercises both branches
-    assert want_maybe and want_groups

@@ -57,9 +57,3 @@ def fetch_artifact(
             if attempt + 1 < max_attempts:
                 time.sleep(backoff_s * (2**attempt))
     raise RuntimeError(f"failed to fetch {url} after {max_attempts} attempts") from last_err
-
-
-def broadcast_artifact(spark, url: str, cache_dir: str = DEFAULT_CACHE, fetch_fn=None):
-    """Fetch once on the driver, broadcast bytes to executors."""
-    path = fetch_artifact(url, cache_dir, fetch_fn)
-    return spark.sparkContext.broadcast(path.read_bytes())

@@ -30,6 +30,8 @@ from __future__ import annotations
 import datetime as dt
 import html as html_mod
 
+import numpy as np
+
 from ..pipeline.crossing import adaptive_partitions, map_rows
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -123,35 +125,29 @@ GLYPH_BIAS = 100  # glyph column value = ord(char) + 100: printable ASCII ->
 #                   132..226, all safely above binarize (0.2 * 255 = 51)
 
 
-def render_page_raster(
-    rects: list[tuple[int, int, int, int]], chunks: list[str] | None = None
-) -> "np.ndarray":
-    """Render the spec to a u8 grayscale page image. Asserts the layout
-    invariants the detect oracle relies on (separation, margins, min dims)
-    so a bad spec fails HERE, not as a confusing hash mismatch.
+def glyph_row(chunk: str) -> np.ndarray:
+    """The u8 pixel row of one chunk: each character a RASTER_CELL-wide
+    column whose VALUE encodes it (ord + GLYPH_BIAS), so pixel-native
+    recognition reads the text back from pixels alone. Only printable
+    ASCII has a glyph value; anything else raises ValueError here rather
+    than rendering a column the recognizer would read back as wrong text."""
+    if not (chunk.isascii() and chunk.isprintable()):
+        raise ValueError(f"chunk {chunk!r} holds a character outside printable ASCII")
+    codes = np.frombuffer(chunk.encode("ascii"), dtype=np.uint8)
+    return np.repeat(codes + GLYPH_BIAS, RASTER_CELL)
 
-    With ``chunks``, each character renders as a 4px-wide glyph column
-    whose pixel VALUE encodes the character (ord + GLYPH_BIAS) — the
-    pixel-native recognition path reads the text back from pixels alone.
-    The detect geometry is unchanged either way: every glyph value
-    survives binarization, so the mask is the same solid rectangle."""
-    import numpy as np
 
-    height = RASTER_MARGIN + RASTER_PITCH * len(rects)
-    width = max(x0 + w for x0, y0, w, h in rects) + RASTER_MARGIN
+def render_raster(rects: list[tuple[int, int, int, int]], fills) -> np.ndarray:
+    """Render a page spec to a u8 grayscale image sized to the rects'
+    extent plus RASTER_MARGIN. Each rect is filled with its entry of
+    ``fills``: a u8 value (a solid box) or a ``glyph_row`` (broadcast down
+    the rect's rows). Every fill value survives binarization, so the detect
+    mask is the same solid rectangle either way."""
+    height = max(y0 + h for _x, y0, _w, h in rects) + RASTER_MARGIN
+    width = max(x0 + w for x0, _y, w, _h in rects) + RASTER_MARGIN
     img = np.zeros((height, width), dtype=np.uint8)
-    for k, (x0, y0, w, h) in enumerate(rects):
-        assert w >= 4 and 16 <= h <= 20, (w, h)
-        assert x0 >= RASTER_MARGIN and y0 >= RASTER_MARGIN
-        assert y0 + h + RASTER_MARGIN <= height and x0 + w + RASTER_MARGIN <= width + 1
-        if chunks is None:
-            img[y0 : y0 + h, x0 : x0 + w] = RASTER_VALUE
-        else:
-            codes = np.frombuffer(chunks[k].encode("ascii"), dtype=np.uint8)
-            assert (codes >= 0x20).all() and (codes <= 0x7E).all()
-            img[y0 : y0 + h, x0 : x0 + w] = np.repeat(
-                codes + GLYPH_BIAS, RASTER_CELL
-            )[None, :]
+    for (x0, y0, w, h), fill in zip(rects, fills):
+        img[y0 : y0 + h, x0 : x0 + w] = fill
     return img
 
 

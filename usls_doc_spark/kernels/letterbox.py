@@ -91,14 +91,3 @@ def letterbox_image(plane_u8: np.ndarray, spec: LetterboxSpec, pad_value: int = 
     resized = resize_luma8_u8(plane, h, w)
     canvas[spec.pad_top : spec.pad_top + h, spec.pad_left : spec.pad_left + w] = resized
     return canvas
-
-
-def scale_wh(w0: float, h0: float, w1: float, h1: float) -> tuple[float, float, float]:
-    """Ref: Ops::scale_wh ops.rs:192-196 — ratio and scaled dims."""
-    r = min(w1 / w0, h1 / h0)
-    return r, round(w0 * r), round(h0 * r)
-
-
-def make_divisible(x: int, divisor: int) -> int:
-    """Ref: Ops::make_divisible ops.rs:198-200 — round x up to a multiple."""
-    return int(np.ceil(x / divisor) * divisor)

@@ -50,12 +50,13 @@ UNCLIP_RATIO = 1.5  # db unclip_ratio default
 MIN_HEIGHT = 12.0  # db/config.rs:16
 MIN_WIDTH = 5.0  # db/config.rs:17
 CONF_THRESH = np.float32(0.35)  # db/config.rs:15
+CTC_CONF_THRESH = np.float32(0.2)  # svtr per-step confidence floor
 
 
-def binarize_prob_map(prob_map: np.ndarray, thresh: float = BINARY_THRESH) -> np.ndarray:
+def binarize_prob_map(prob_map: np.ndarray) -> np.ndarray:
     """D1: probability map -> u8 mask."""
     pm = np.asarray(prob_map, dtype=np.float32)
-    return np.where(pm <= np.float32(thresh), 0, (pm * 255.0).astype(np.uint8)).astype(np.uint8)
+    return np.where(pm <= BINARY_THRESH, 0, (pm * 255.0).astype(np.uint8)).astype(np.uint8)
 
 
 # 8-neighborhood in clockwise order starting East
@@ -399,21 +400,13 @@ def verify(points: list | np.ndarray) -> list:
     return list(out.values())
 
 
-def db_postprocess(
-    prob_map: np.ndarray,
-    ratio: float = 1.0,
-    binary_thresh: float = BINARY_THRESH,
-    unclip_ratio: float = UNCLIP_RATIO,
-    min_width: float = MIN_WIDTH,
-    min_height: float = MIN_HEIGHT,
-    conf_thresh: float = CONF_THRESH,
-) -> list[dict]:
+def db_postprocess(prob_map: np.ndarray, ratio: float = 1.0) -> list[dict]:
     """D1-D7 over one region probability map (already at original scale —
     the stateless resize2-style caller carries scale metadata per row).
 
     Returns dicts: polygon [K,2], bbox (x1,y1,x2,y2) floats, conf float.
     """
-    mask = binarize_prob_map(prob_map, binary_thresh)
+    mask = binarize_prob_map(prob_map)
     h, w = mask.shape
     regions = []
     for left, top, right, bottom, trace in _components(mask > 0):
@@ -428,7 +421,7 @@ def db_postprocess(
             corners = _simplify_runs(trace).tolist()
         if perim <= 0:
             continue
-        delta = area * round(ratio) * unclip_ratio / perim  # db/impl.rs:136-139
+        delta = area * round(ratio) * UNCLIP_RATIO / perim  # db/impl.rs:136-139
         # reference chain is unclip -> resample(50) -> hull -> verify
         # (db/impl.rs:141-144); resample inserts only convex combinations of
         # edge endpoints, so hull(resample(X)) == hull(X) — we skip the 50x
@@ -440,12 +433,12 @@ def db_postprocess(
             continue
         xs, ys = zip(*poly)
         x1, y1, x2, y2 = min(xs), min(ys), max(xs), max(ys)
-        if (y2 - y1) < min_height or (x2 - x1) < min_width:  # db/impl.rs:146-148
+        if (y2 - y1) < MIN_HEIGHT or (x2 - x1) < MIN_WIDTH:  # db/impl.rs:146-148
             continue
         bbox_area = (x2 - x1) * (y2 - y1)
         # ordered shoelace: the conf a render-spec oracle can restate bitwise
         conf = float(np.float32(polygon_area_ordered(poly) / bbox_area)) if bbox_area > 0 else 0.0
-        if np.float32(conf) < np.float32(conf_thresh):  # db/impl.rs:150-152
+        if np.float32(conf) < CONF_THRESH:  # db/impl.rs:150-152
             continue
         regions.append(
             {
@@ -461,12 +454,7 @@ def db_postprocess(
 # recognition decoders
 # --------------------------------------------------------------------------
 
-def ctc_greedy_decode(
-    logits: np.ndarray,
-    vocab: list[str],
-    max_length: int = 256,
-    conf_thresh: float = 0.2,
-) -> str:
+def ctc_greedy_decode(logits: np.ndarray, vocab: list[str], max_length: int = 256) -> str:
     """R1: per-timestep argmax; truncate to max_length; drop blank id 0 and
     low-conf steps; join vocab entries. No repeat-collapse (svtr/impl.rs:83-93)."""
     lg = np.asarray(logits, dtype=np.float32)
@@ -476,7 +464,7 @@ def ctc_greedy_decode(
     confs = lg[np.arange(len(ids)), ids]
     ids = ids[:max_length]
     confs = confs[:max_length]
-    keep = (ids != 0) & (confs >= np.float32(conf_thresh))
+    keep = (ids != 0) & (confs >= CTC_CONF_THRESH)
     return "".join(vocab[int(i)] for i in ids[keep])
 
 

@@ -37,7 +37,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..io.synth import chunk_text, raster_spec
+from ..io.synth import raster_spec, render_raster
 from ..kernels.letterbox import letterbox_spec
 from ..kernels.yolo_decode import (
     DOCSTRUCTBENCH_NAMES,
@@ -62,14 +62,7 @@ RASTER_LAYOUT_SCHEMA = (
 def render_layout_raster(doc_id: int, text: str) -> np.ndarray:
     """The raster_spec rectangles filled with the class-coded value."""
     rects = raster_spec(doc_id, text)
-    from ..io.synth import RASTER_MARGIN, RASTER_PITCH
-
-    height = RASTER_MARGIN + RASTER_PITCH * len(rects)
-    width = max(x0 + w for x0, y0, w, h in rects) + RASTER_MARGIN
-    img = np.zeros((height, width), dtype=np.uint8)
-    for k, (x0, y0, w, h) in enumerate(rects):
-        img[y0 : y0 + h, x0 : x0 + w] = CLASS_SPEC[k % 6][1]
-    return img
+    return render_raster(rects, [CLASS_SPEC[k % 6][1] for k in range(len(rects))])
 
 
 def pixel_head(raster: np.ndarray) -> np.ndarray:

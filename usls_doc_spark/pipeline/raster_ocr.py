@@ -2,9 +2,14 @@
 D1-D7 DB postprocess (binarize -> 4-connected components -> Moore contour
 -> unclip -> convex hull -> verify -> min-size/conf filters,
 kernels/ocr.py; reference semantics /root/reference/src/models/db/impl.rs:95-153)
-runs on real rendered page pixels (io/synth.render_page_raster) instead of
+runs on real rendered page pixels (io/synth.render_raster) instead of
 an n_chars-derived probability map — and the oracle is derived from the
 RENDER SPEC, not from kernel output.
+
+The four raster queries (regions, spans, extracted text and, in
+pipeline/raster_layout, layout blocks) share one page renderer
+(io/synth.render_raster), and the three OCR queries share one detect step
+(``detect_regions``) and one read step (``read_glyphs``).
 
 How the oracle avoids circularity: for an axis-aligned filled rectangle at
 (x0, y0, w, h) every float64 operation in the detect chain has a closed
@@ -33,14 +38,25 @@ pinned-lookup circularity the round-2 VERDICT flagged.
 The spec guarantees no region is ever dropped by the D6/D7 filters
 (min height 15+2*delta >= 12, min width 3+2*delta >= 5, conf ~0.97 >=
 0.35) and no unclip vertex clamps at the border (margin 16 > max delta
-14.25) — asserted at render time — so region_id == chunk index k.
+14.25), so region_id == chunk index k. Both hold by construction
+(raster_spec / raster_extract_spec heights are 16 or 20, and the page is
+the rects' extent plus the margin); an empty chunk renders no pixels and
+fails the detect step's region count check.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from ..io.synth import GLYPH_BIAS, RASTER_CELL, chunk_text, raster_spec, render_page_raster
+from ..io.synth import (
+    GLYPH_BIAS,
+    RASTER_CELL,
+    RASTER_VALUE,
+    chunk_text,
+    glyph_row,
+    raster_spec,
+    render_raster,
+)
 from ..kernels.ocr import ctc_greedy_decode, db_postprocess
 from .crossing import map_batches, map_rows, split_documents
 from .ocr import MAX_DECODE_LEN, VOCAB, WIDTH_BUCKET, recognize_by_bucket, region_xywh
@@ -55,21 +71,28 @@ RASTER_SPANS_SCHEMA = (
 )
 
 
+def detect_regions(doc_id: int, raster: np.ndarray, n_rects: int) -> list[tuple]:
+    """The detect step: D1-D7 over the u8 page -> one (x, y, w, h, conf)
+    per detected region. A region count other than the rect count raises
+    (loud, not silently shifted region ids)."""
+    regions = db_postprocess(raster.astype(np.float32) / np.float32(255.0), ratio=1.0)
+    if len(regions) != n_rects:
+        raise RuntimeError(
+            f"doc {doc_id}: detected {len(regions)} regions for {n_rects} rects"
+        )
+    return [(*region_xywh(r["bbox"]), float(np.float32(r["conf"]))) for r in regions]
+
+
+def _render_glyphs(rects, chunks) -> np.ndarray:
+    """The glyph-coded page: chunk k's glyph row fills rect k."""
+    return render_raster(rects, [glyph_row(c) for c in chunks])
+
+
 def detect_raster_regions(doc_id: int, text: str) -> list[tuple]:
     """Render the page raster and run the real detect postprocess on it."""
     rects = raster_spec(doc_id, text)
-    if not rects:
-        return []
-    prob = render_page_raster(rects).astype(np.float32) / np.float32(255.0)
-    regions = db_postprocess(prob, ratio=1.0)
-    if len(regions) != len(rects):  # loud, not silently shifted region ids
-        raise RuntimeError(
-            f"doc {doc_id}: detected {len(regions)} regions for {len(rects)} rects"
-        )
-    return [
-        (doc_id, k, *region_xywh(r["bbox"]), float(np.float32(r["conf"])))
-        for k, r in enumerate(regions)
-    ]
+    raster = render_raster(rects, [RASTER_VALUE] * len(rects))
+    return [(doc_id, k, *box) for k, box in enumerate(detect_regions(doc_id, raster, len(rects)))]
 
 
 def raster_ocr_regions(spark, sf_dir: str):
@@ -82,7 +105,7 @@ def raster_ocr_regions(spark, sf_dir: str):
 # cropped pixels alone — the source text never reaches the stub (unlike
 # pipeline/ocr.py's stub_recognizer_logits, which one-hots the text
 # string). Glyphs are 4px columns whose value encodes ord(char) +
-# GLYPH_BIAS (io/synth.render_page_raster).
+# GLYPH_BIAS (io/synth.glyph_row).
 # ---------------------------------------------------------------------------
 
 
@@ -103,50 +126,40 @@ def read_glyph_logits(crop: np.ndarray) -> np.ndarray:
     return logits
 
 
+def read_glyphs(crop: np.ndarray) -> str:
+    """The read step: glyph logits of one region crop -> CTC-decoded text.
+    A crop with more glyph cells than MAX_DECODE_LEN raises (loud, not
+    truncated by the CTC decode)."""
+    logits = read_glyph_logits(crop)
+    if len(logits) > MAX_DECODE_LEN:
+        raise RuntimeError(f"crop has {len(logits)} glyph cells > {MAX_DECODE_LEN}")
+    return ctc_greedy_decode(logits, VOCAB, max_length=MAX_DECODE_LEN)
+
+
 def detect_raster_spans(doc_id: int, text: str) -> list[dict]:
     """Detect stage over the glyph-coded raster: geometry rows + deferred
     recognition crops (same two-stage width-bucket shape as pipeline/ocr)."""
     rects = raster_spec(doc_id, text)
-    if not rects:
-        return []
-    raster = render_page_raster(rects, chunks=chunk_text(text))
-    prob = raster.astype(np.float32) / np.float32(255.0)
-    regions = db_postprocess(prob, ratio=1.0)
-    if len(regions) != len(rects):
-        raise RuntimeError(
-            f"doc {doc_id}: detected {len(regions)} regions for {len(rects)} rects"
-        )
-    out = []
-    for k, r in enumerate(regions):
-        x, y, w, h = region_xywh(r["bbox"])
-        crop = raster[y : y + h, x : x + w]
-        cells = np.count_nonzero(crop.max(axis=0)) // RASTER_CELL  # read_glyph_logits rows
-        if cells > MAX_DECODE_LEN:  # loud, not truncated by the CTC decode
-            raise RuntimeError(
-                f"doc {doc_id}: region {k} has {cells} glyph cells > {MAX_DECODE_LEN}"
-            )
-        out.append(
-            {
-                "doc_id": doc_id,
-                "region_id": k,
-                "crop": crop,
-                "x": x, "y": y, "width": w, "height": h,
-                "conf": float(np.float32(r["conf"])),
-                "bucket": w // WIDTH_BUCKET,
-            }
-        )
-    return out
+    raster = _render_glyphs(rects, chunk_text(text))
+    return [
+        {
+            "doc_id": doc_id,
+            "region_id": k,
+            "crop": raster[y : y + h, x : x + w],
+            "x": x, "y": y, "width": w, "height": h,
+            "conf": conf,
+            "bucket": w // WIDTH_BUCKET,
+        }
+        for k, (x, y, w, h, conf) in enumerate(detect_regions(doc_id, raster, len(rects)))
+    ]
 
 
 def recognize_glyph_bucket(crops: list[np.ndarray]) -> list[str]:
     """One recognizer invocation per width bucket (R2) — the seam where a
     production SVTR would pad the bucket's same-width-class crops to a
     common width and issue ONE session.run over the stacked tensor; the
-    pixel-reading stand-in decodes each crop through the real CTC path."""
-    return [
-        ctc_greedy_decode(read_glyph_logits(c), VOCAB, max_length=MAX_DECODE_LEN)
-        for c in crops
-    ]
+    pixel-reading stand-in reads each crop through the real CTC path."""
+    return [read_glyphs(c) for c in crops]
 
 
 def spans_rows(rows) -> list[tuple]:
@@ -204,18 +217,6 @@ def raster_extract_spec(doc_id: int, chunks: list[str]) -> list[tuple[int, int, 
     return raster_spec(doc_id, " ".join(chunks))
 
 
-def _render_glyphs(rects, chunks) -> np.ndarray:
-    """Free-layout glyph render (render_page_raster assumes one rect per
-    40px line; two-column pages need max-extent sizing instead)."""
-    height = max(y0 + h for _x, y0, _w, h in rects) + 16
-    width = max(x0 + w for x0, _y, w, _h in rects) + 16
-    img = np.zeros((height, width), dtype=np.uint8)
-    for (x0, y0, w, h), chunk in zip(rects, chunks):
-        codes = np.frombuffer(chunk.encode("ascii"), dtype=np.uint8)
-        img[y0 : y0 + h, x0 : x0 + w] = np.repeat(codes + GLYPH_BIAS, RASTER_CELL)[None, :]
-    return img
-
-
 def extract_from_raster(doc_id: int, text: str) -> tuple[int, str]:
     """One page, end-to-end from pixels. Returns (n_regions, text)."""
     from ..kernels.xycut import xycut_order
@@ -223,23 +224,13 @@ def extract_from_raster(doc_id: int, text: str) -> tuple[int, str]:
     chunks = chunk_text(text)
     rects = raster_extract_spec(doc_id, chunks)
     raster = _render_glyphs(rects, chunks)
-    regions = db_postprocess(raster.astype(np.float32) / np.float32(255.0), ratio=1.0)
-    if len(regions) != len(chunks):
-        raise RuntimeError(
-            f"doc {doc_id}: {len(regions)} regions for {len(chunks)} chunks"
-        )
-    boxes = [region_xywh(r["bbox"]) for r in regions]
-    order = xycut_order(np.asarray(boxes, dtype=np.float64))
-    logits = []
+    boxes = detect_regions(doc_id, raster, len(rects))
+    order = xycut_order(np.asarray([b[:4] for b in boxes], dtype=np.float64))
+    texts = []
     for i in order:
-        x, y, w, h = boxes[i]
-        logits.append(read_glyph_logits(raster[y : y + h, x : x + w]))
-        if len(logits[-1]) > MAX_DECODE_LEN:  # loud, not truncated by the CTC decode
-            raise RuntimeError(
-                f"doc {doc_id}: region {i} has {len(logits[-1])} glyph cells > {MAX_DECODE_LEN}"
-            )
-    texts = [ctc_greedy_decode(lg, VOCAB, max_length=MAX_DECODE_LEN) for lg in logits]
-    return len(regions), " ".join(texts)
+        x, y, w, h, _conf = boxes[i]
+        texts.append(read_glyphs(raster[y : y + h, x : x + w]))
+    return len(boxes), " ".join(texts)
 
 
 def _extract_row(doc_id: int, text: str) -> list[tuple]:
@@ -319,7 +310,8 @@ def rect_detect_geometry_sql(spec_cte: str, carry_cols: str) -> str:
     shared symbolic core: delta, unclip offsets, the 12-gon hull's ordered
     shoelace, bbox rounding, float32 conf. Returns a full query (WITH
     included). Assumes the raster layout invariants (solid rects, w >= 4,
-    h >= 4, no border clamping) that render time asserts."""
+    h >= 4, no border clamping) that raster_spec and raster_extract_spec
+    hold by construction."""
     hull_area = _shoelace_fold(_hull_vertices())
     carry = (carry_cols + ", ") if carry_cols else ""
     return f"""

@@ -55,11 +55,6 @@ OUT_SCHEMA = (
 )
 STATE_SCHEMA = "gen bigint, n_sessions bigint, n_events bigint, first_us bigint, last_us bigint"
 
-FINAL_SCHEMA = (
-    "user_id bigint, n_sessions bigint, n_events bigint, "
-    "first_ts timestamp, last_ts timestamp"
-)
-
 _QUERY_NAME = "usls_stream_sessionize"
 
 
