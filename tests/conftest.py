@@ -29,3 +29,21 @@ def spark():
     s.sparkContext.setLogLevel("WARN")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def reliable_checkpoint_dir(spark, tmp_path):
+    """Point the context's checkpoint dir at a fresh tmp dir for one test,
+    so operators/materialize.py takes its reliable-checkpoint branch, and
+    unset it again afterwards: the dir is context-global, and a leaked one
+    would move every later test's materializations onto reliable
+    checkpoints."""
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None, "checkpoint dir leaked from an earlier test"
+    sc.setCheckpointDir(str(tmp_path))
+    try:
+        yield tmp_path
+    finally:
+        # SparkContext has no unset; write None into the Scala var
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+        assert sc.getCheckpointDir() is None

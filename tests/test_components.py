@@ -66,36 +66,33 @@ def test_nonconvergence_raises(spark):
         min_label_components(sdf, max_iters=1)
 
 
-def test_reliable_checkpoint_dir_is_used_and_result_identical(
-    spark, tmp_path_factory
-):
-    """Round-4 VERDICT item 8: with checkpoint_dir set, the per-round
-    lineage cut must be a RELIABLE checkpoint (files actually land in the
-    directory, so executor loss re-reads instead of recomputing), and the
-    labels must equal the localCheckpoint path's."""
+def test_reliable_checkpoint_dir_is_used_and_result_identical(spark, request):
+    """Round-4 VERDICT item 8: with a context checkpoint dir set, the
+    per-round lineage cut must be a RELIABLE checkpoint (files actually
+    land in the directory, so executor loss re-reads instead of
+    recomputing), and the labels must equal the localCheckpoint path's."""
+    import glob
     import os
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], "doc_a bigint, doc_b bigint"
     )
-    ckpt = str(tmp_path_factory.mktemp("cc_ckpt"))
-    labels = min_label_components(edges, max_iters=10, checkpoint_dir=ckpt)
-    got = {r.doc_id: r.component_id for r in labels.collect()}
     base = {
         r.doc_id: r.component_id
         for r in min_label_components(edges, max_iters=10).collect()
     }
+    ckpt = str(request.getfixturevalue("reliable_checkpoint_dir"))
+    labels = min_label_components(edges, max_iters=10)
+    got = {r.doc_id: r.component_id for r in labels.collect()}
     assert got == base and set(got.values()) == {0}
     # reliable checkpoint files were actually written under the dir
     written = [
         os.path.join(d, f) for d, _, fs in os.walk(ckpt) for f in fs
     ]
-    assert written, "no reliable checkpoint files under checkpoint_dir"
+    assert written, "no reliable checkpoint files under the checkpoint dir"
     # retired rounds' checkpoints are deleted as the loop advances (round-5
     # ADVICE): only the FINAL round's rdd-* dir — the one backing the
     # returned DataFrame — may remain in the fault-tolerant store
-    import glob
-
     remaining = glob.glob(f"{ckpt}/*/rdd-*")
     assert len(remaining) <= 1, remaining
     # and the returned labels stay readable off that surviving checkpoint
@@ -115,16 +112,12 @@ def test_long_chain_converges_logarithmically(spark):
     assert len(comp) == 41
 
 
-def test_own_ckpt_dirs_ignores_concurrent_checkpoints(spark, tmp_path_factory):
+def test_own_ckpt_dirs_ignores_concurrent_checkpoints(spark, reliable_checkpoint_dir):
     """r6 ADVICE item 2: round GC must be scoped to THIS run's checkpoint
     lineage — a concurrent caller's checkpoint landing in the same context
     root must never appear in the GC set."""
     from usls_doc_spark.operators.components import _own_ckpt_dirs
 
-    ckpt = str(tmp_path_factory.mktemp("cc_own"))
-    current = spark.sparkContext.getCheckpointDir()
-    if current is None:
-        spark.sparkContext.setCheckpointDir(ckpt)
     mine = spark.range(10).checkpoint(eager=True)
     other = spark.range(20).checkpoint(eager=True)  # the "concurrent" writer
     mine_dirs = _own_ckpt_dirs(mine)

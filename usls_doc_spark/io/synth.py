@@ -52,6 +52,13 @@ def chunk_text(text: str) -> list[str]:
     return [" ".join(words[i : i + CHUNK_WORDS]) for i in range(0, len(words), CHUNK_WORDS)]
 
 
+# chunk_text(text) in DuckDB SQL: the oracles' list of chunks per document
+CHUNKS_SQL = (
+    f"[array_to_string((string_split(text, ' '))[i:i+{CHUNK_WORDS - 1}], ' ') "
+    f"for i in range(1, len(string_split(text, ' ')) + 1, {CHUNK_WORDS})]"
+)
+
+
 def renders_table(doc_id: int, chunks: list[str]) -> bool:
     """True when this page renders its LAST chunk as a table.
 
@@ -119,6 +126,15 @@ def raster_spec(doc_id: int, text: str) -> list[tuple[int, int, int, int]]:
             )
         )
     return rects
+
+
+# raster_spec's rect in DuckDB SQL: select items over doc_id, the chunk
+# index k and the chunk length c
+RASTER_SPEC_SQL = (
+    f"{RASTER_MARGIN} + {RASTER_CELL} * (k % 3) AS x0, "
+    f"{RASTER_MARGIN} + {RASTER_PITCH} * k AS y0, "
+    f"{RASTER_CELL} * c AS w, 16 + 4 * ((doc_id + k) % 2) AS h"
+)
 
 
 GLYPH_BIAS = 100  # glyph column value = ord(char) + 100: printable ASCII ->

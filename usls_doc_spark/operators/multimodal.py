@@ -26,6 +26,7 @@ import math
 
 import numpy as np
 
+from ..io.synth import CHUNKS_SQL
 from ..pipeline.crossing import map_rows
 
 N_FEATURES = 8
@@ -113,8 +114,7 @@ WITH src AS (
   SELECT doc_id, text,
          doc_id % 3 = 1 AS two_col,
          doc_id % 47 = 0 AS skew,
-         [array_to_string((string_split(text, ' '))[i:i+7], ' ')
-          for i in range(1, len(string_split(text, ' ')) + 1, 8)] AS chunks
+         {CHUNKS_SQL} AS chunks
   FROM documents
 ),
 tsrc AS (

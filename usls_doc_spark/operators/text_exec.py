@@ -4,7 +4,7 @@ the two-dialect template text stays the DuckDB oracle verbatim; the
 registry's Spark callable computes IDENTICAL values through materialized
 intermediates, because Spark inlines every CTE reference and re-runs the
 shared subtree per reference (guide §2.4 — remove recomputation, don't
-tune it).
+tune it). Every intermediate is cut by operators/materialize.py.
 
 lm_bigram_fluency: the rendered template's executed plan held 12 parquet
 scans of `documents` (plans/r08/lm_bigram_fluency_before.txt) — `docs`
@@ -33,6 +33,7 @@ from collections import Counter
 from pyspark.sql import DataFrame, SparkSession
 
 from .dialect import SPARK
+from .materialize import materialize
 from .text_queries import (
     LM_PPB,
     SIMHASH_BAND_BITS,
@@ -58,20 +59,18 @@ FROM (SELECT doc_id, {ws} AS ws FROM documents) docs
 {d.explode(d.seq("1", f"greatest({n} - 1, 1)"), "i")}
 WHERE {n} >= 2
 """
-    c2 = spark.sql(
+    materialize(spark.sql(
         f"SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2 "
         f"FROM ({big_body}) b WHERE doc_id % 2 = 0 GROUP BY w1, w2"
-    ).localCheckpoint()
-    c2.createOrReplaceTempView("_lm_c2_mat")
-    vocab = spark.sql(f"""
+    ), "_lm_c2_mat")
+    vocab = materialize(spark.sql(f"""
 SELECT DISTINCT w FROM (
   SELECT {d.element("ws", "i")} AS w
   FROM (SELECT doc_id, {ws} AS ws FROM documents) docs
   {d.explode(d.seq("1", f"greatest({n}, 1)"), "i")}
   WHERE doc_id % 2 = 0
 ) t
-""").localCheckpoint()
-    vocab.createOrReplaceTempView("_lm_vocab_mat")
+"""), "_lm_vocab_mat")
     vsz = vocab.count()  # the template's 1-row vsz CROSS JOIN, as a literal
     p_q = (
         f"CAST(round(({LM_PPB}.0 * (COALESCE(b2.c2, 0) + 1))"
@@ -149,12 +148,9 @@ def _qnf_from_documents(spark: SparkSession) -> DataFrame:
     split out so edge tests can point `documents` at synthetic data."""
     docs = spark.table("documents").select("doc_id", "text")
     n_part = max(spark.sparkContext.defaultParallelism, 8)
-    dtg = (
-        docs.repartition(n_part, "doc_id")
-        .mapInPandas(_emit_doc_trigram_counts, QNF_DTG_SCHEMA)
-        .localCheckpoint()
-    )
-    dtg.createOrReplaceTempView("_qnf_dtg_mat")
+    materialize(docs.repartition(n_part, "doc_id").mapInPandas(
+        _emit_doc_trigram_counts, QNF_DTG_SCHEMA
+    ), "_qnf_dtg_mat")
     return spark.sql("""
 WITH dtg AS (SELECT doc_id, t, k FROM _qnf_dtg_mat),
 cnt AS (SELECT t, CAST(sum(k) AS BIGINT) AS c FROM dtg GROUP BY t),
@@ -227,15 +223,14 @@ def dedup_simhash_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
         sh_cols.append(" + ".join(bit_terms) + f" AS sh{k}")
     sh_select = ",\n         ".join(sh_cols)
     sh_array = "array(" + ", ".join(f"sh{k}" for k in range(SIMHASH_BANDS)) + ")"
-    sigs = spark.sql(f"""
+    materialize(spark.sql(f"""
 WITH wh AS (
   SELECT doc_id, {wh_cols}
   FROM (SELECT doc_id, {wmd} AS wmd
         FROM (SELECT doc_id, {w} AS ws FROM documents))
 )
 SELECT doc_id, {sh_select} FROM wh
-""").localCheckpoint()
-    sigs.createOrReplaceTempView("_simhash_sigs_mat")
+"""), "_simhash_sigs_mat")
     pairs_arr = (
         "flatten(transform(members, x -> "
         "transform(filter(members, y -> y > x), y -> array(x, y))))"
@@ -301,10 +296,10 @@ def _ds_mat(spark: SparkSession, view: str) -> None:
     document, _lsh_jaccard_ctes' text) once and register it as ``view``."""
     d = SPARK
     sh = d.array_distinct(d.shingles("ws", 3))
-    spark.sql(
+    materialize(spark.sql(
         f"SELECT doc_id, {sh} AS sh "
         f"FROM (SELECT doc_id, {_words(d)} AS ws FROM documents)"
-    ).localCheckpoint().createOrReplaceTempView(view)
+    ), view)
 
 
 def dedup_ngram_jaccard_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,7 +335,7 @@ LIMIT 20
 
 def verified_pairs_mat(spark: SparkSession, threshold: float = 0.5) -> DataFrame:
     """build_verified_pairs (the near-dup edge list) with ds materialized
-    once and the result localCheckpointed — the Spark-side execution
+    once and the result materialized — the Spark-side execution
     dedup_components feeds its label-propagation loop. The template
     inlines ds into sigs and both verify-join sides (the
     dedup_ngram_jaccard 8-scan shape), and the CC loop's undirected
@@ -353,14 +348,14 @@ def verified_pairs_mat(spark: SparkSession, threshold: float = 0.5) -> DataFrame
     d = SPARK
     _ds_mat(spark, "_vp_ds_mat")
     inter, alen, blen = _jaccard_exprs(d)
-    return spark.sql(f"""
+    return materialize(spark.sql(f"""
 WITH {_lsh_tail_sql("_vp_ds_mat")}
 SELECT c.doc_a, c.doc_b
 FROM cands c
 JOIN _vp_ds_mat a ON a.doc_id = c.doc_a
 JOIN _vp_ds_mat b ON b.doc_id = c.doc_b
 WHERE CAST({inter} AS DOUBLE) / ({alen} + {blen} - {inter}) >= {threshold}
-""").localCheckpoint()
+"""))
 
 
 def lsh_recall_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -383,12 +378,11 @@ def lsh_recall_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     _register_views(spark, sf_dir)
     d = SPARK
     _ds_mat(spark, "_lshr_ds_mat")
-    cands = spark.sql(
+    materialize(spark.sql(
         f"WITH {_lsh_tail_sql('_lshr_ds_mat')} SELECT doc_a, doc_b FROM cands"
-    ).localCheckpoint()
-    cands.createOrReplaceTempView("_lshr_cands_mat")
+    ), "_lshr_cands_mat")
     inter, alen, blen = _jaccard_exprs(d)
-    exact = spark.sql(f"""
+    materialize(spark.sql(f"""
 WITH inv AS (SELECT doc_id, s FROM _lshr_ds_mat LATERAL VIEW explode(sh) t AS s),
 xpairs AS (
   SELECT DISTINCT i.doc_id AS doc_a, j.doc_id AS doc_b
@@ -399,8 +393,7 @@ FROM xpairs p
 JOIN _lshr_ds_mat a ON a.doc_id = p.doc_a
 JOIN _lshr_ds_mat b ON b.doc_id = p.doc_b
 WHERE CAST({inter} AS DOUBLE) / ({alen} + {blen} - {inter}) >= 0.5
-""").localCheckpoint()
-    exact.createOrReplaceTempView("_lshr_exact_mat")
+"""), "_lshr_exact_mat")
     return spark.sql("""
 WITH hits AS (
   SELECT count(*) AS n_hits
@@ -429,7 +422,7 @@ def corpus_curation_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = _words(d)
     sh = d.array_distinct(d.shingles("ws", 3))
     en = ", ".join(f"'{t}'" for t in STOPWORDS["en"])
-    ds = spark.sql(f"""
+    materialize(spark.sql(f"""
 SELECT doc_id, lang, n_chars, {sh} AS sh FROM (
   SELECT doc_id, lang, n_chars, ws FROM (
     SELECT doc_id, lang, n_chars, {w} AS ws FROM documents
@@ -438,8 +431,7 @@ SELECT doc_id, lang, n_chars, {sh} AS sh FROM (
     AND CAST({d.array_filter_count("ws", "x", f"x IN ({en})")} AS DOUBLE)
         / {d.array_len("ws")} >= 0.02
 ) quality
-""").localCheckpoint()
-    ds.createOrReplaceTempView("_cc_ds_mat")
+"""), "_cc_ds_mat")
     inter, alen, blen = _jaccard_exprs(d)
     return spark.sql(f"""
 WITH {_lsh_tail_sql("_cc_ds_mat")},

@@ -14,7 +14,8 @@ so the rendered plan recomputed the whole Lloyd lineage multiplicatively
 This module computes IDENTICAL values with the textbook iterative shape
 (what MLlib's KMeans does):
 
-  * ONE scan of `embeddings` materializes `base` (localCheckpoint): the
+  * ONE scan of `embeddings` materializes `base` (through
+    operators/materialize.py, as every intermediate here): the
     1e6-quantized BIGINT coordinates q1..q64 (the template's exact `qv`
     projection) plus, for the SemDeDup query, the f64 coordinates
     e1..e64 (exactly CAST(element_at(embedding, k) AS DOUBLE) — the
@@ -63,6 +64,7 @@ from pyspark.sql import functions as F
 
 from ..kernels.lloyd import assign_cells, partial_cluster_sums
 from .dialect import SPARK, balanced_sum
+from .materialize import materialize
 from .training_mix import (
     KMEANS_DIMS,
     KMEANS_ITERS,
@@ -184,7 +186,7 @@ def kmeans_ivf_build_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    base = emb.selectExpr("vec_id", *_quant_exprs()).localCheckpoint()
+    base = materialize(emb.selectExpr("vec_id", *_quant_exprs()))
     cents = _trained_centroids(spark, base)
     if not cents:
         return spark.createDataFrame(
@@ -193,9 +195,7 @@ def kmeans_ivf_build_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     mat_schema = "vec_id bigint, cell bigint, " + ", ".join(
         f"q{k} bigint" for k in range(1, KMEANS_DIMS + 1)
     )
-    mat = base.mapInPandas(
-        _assign_fn(cents, _QCOLS), mat_schema
-    ).localCheckpoint()
+    mat = materialize(base.mapInPandas(_assign_fn(cents, _QCOLS), mat_schema))
     qset = mat.filter(F.col("vec_id") < 10)
     vdist = balanced_sum(
         [
@@ -239,24 +239,24 @@ def dedup_semantic_cells_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    base = emb.selectExpr(
-        "vec_id", *_quant_exprs(), *_e_exprs()
-    ).localCheckpoint()
+    base = materialize(emb.selectExpr("vec_id", *_quant_exprs(), *_e_exprs()))
     cents = _trained_centroids(spark, base)
     if not cents:
         return spark.createDataFrame([], "vec_id bigint, cell bigint")
     a_schema = "vec_id bigint, cell bigint, " + ", ".join(
         f"e{k} double" for k in range(1, KMEANS_DIMS + 1)
     )
-    assigned = base.mapInPandas(
-        _assign_fn(cents, _ECOLS), a_schema
-    ).localCheckpoint()
+    assigned = materialize(
+        base.mapInPandas(_assign_fn(cents, _ECOLS), a_schema)
+    )
     # nrm: the template's sqrt(dot64(embedding, embedding)) — identical
     # doubles (e{k} ARE the dot64 leaves), identical balanced association
     nrm = f"sqrt({balanced_sum([f'(e{k} * e{k})' for k in range(1, KMEANS_DIMS + 1)])})"
     w1 = Window.partitionBy("cell", "_salt").orderBy("vec_id")
     w2 = Window.partitionBy("cell").orderBy("vec_id")
-    capped = (
+    # bounded at K*CAP rows by construction — materialize so the pair
+    # join's two sides don't each recompute the rank windows
+    capped = materialize(
         assigned.selectExpr("vec_id", "cell", f"{nrm} AS nrm", *_ECOLS)
         .withColumn(
             "_salt", F.pmod(F.xxhash64("vec_id"), F.lit(SEMDEDUP_CAP_SALTS))
@@ -266,9 +266,6 @@ def dedup_semantic_cells_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_rnk", F.row_number().over(w2))
         .filter(F.col("_rnk") <= SEMDEDUP_CELL_CAP)
         .select("vec_id", "cell", "nrm", *_ECOLS)
-        # bounded at K*CAP rows by construction — materialize so the pair
-        # join's two sides don't each recompute the rank windows
-        .localCheckpoint()
     )
     # the template's dot64(a.embedding, b.embedding): same leaves, same
     # balanced association, over the materialized f64 columns

@@ -4,12 +4,13 @@ Arrow-batched crossing (``ocr_rows`` through crossing.map_batches).
 
 Model boundary: the ONNX DB/SVTR sessions are stubbed (image libs absent)
 with deterministic emitters — the DETECTION stub renders each text block as
-a probability map (rectangle of 0.9) and the RECOGNITION stub emits one-hot
-logits whose argmax encodes the block text — so the full reference
-postprocess path (binarize -> contour -> unclip -> resample -> hull ->
-verify -> min-size/conf filter -> CTC decode, SURVEY.md §2.5-2.6) runs for
-real on every span and the decoded text is independently checkable against
-the source documents (the DuckDB oracle states span == 8-word chunk).
+a probability map (one io/synth.render_raster rectangle, scaled to [0, 1])
+and the RECOGNITION stub emits one-hot logits whose argmax encodes the
+block text — so the full reference postprocess path (binarize -> contour
+-> unclip -> resample -> hull -> verify -> min-size/conf filter -> CTC
+decode, SURVEY.md §2.5-2.6) runs for real on every span and the decoded
+text is independently checkable against the source documents (the DuckDB
+oracle states span == 8-word chunk).
 
 Width bucketing (R2, svtr/config.rs:14-17): recognition is batched ACROSS
 the whole Arrow batch, grouped by crop-width bucket (``width // 320``) —
@@ -26,6 +27,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..io.synth import RASTER_CELL, RASTER_MARGIN, RASTER_VALUE, render_raster
 from ..kernels.boilerplate import classify_block, parse_blocks
 from ..kernels.ocr import ctc_greedy_decode, db_postprocess
 from ..kernels.yolo_decode import round_half_away
@@ -46,23 +48,12 @@ VOCAB = ["<blank>"] + [chr(c) for c in range(0x20, 0x7F)]
 _CHAR_TO_ID = {c: i for i, c in enumerate(VOCAB)}
 MAX_DECODE_LEN = 4096
 
-CELL = 4  # px per char in the stub prob map
-# margin EXCEEDS the maximum unclip delta (0.75 * RECT_H-1 = 8.25), so no
-# offset vertex ever clamps at the map border and the detect geometry has
-# the clamp-free closed form the symbolic oracle states
-# (pipeline/raster_ocr.rect_detect_geometry_sql — this replaced the pinned
-# operators/ocr_geom.py lookup in round 3)
-PAD = 16
-MAP_H = 44  # PAD + RECT_H + PAD
+# region height in the stub prob map; the rect sits at (RASTER_MARGIN,
+# RASTER_MARGIN), and the margin EXCEEDS the maximum unclip delta
+# (0.75 * RECT_H-1 = 8.25), so no offset vertex ever clamps at the map
+# border and the detect geometry has the clamp-free closed form the
+# symbolic oracle states (pipeline/raster_ocr.rect_detect_geometry_sql)
 RECT_H = 12
-
-
-def render_region_prob_map(n_chars: int) -> np.ndarray:
-    """Stub DB 'model': a text region renders as a filled rectangle."""
-    w = CELL * max(n_chars, 1) + 2 * PAD
-    pm = np.zeros((MAP_H, w), dtype=np.float32)
-    pm[PAD : PAD + RECT_H, PAD : w - PAD] = np.float32(0.9)
-    return pm
 
 
 def stub_recognizer_logits(text: str) -> np.ndarray:
@@ -98,8 +89,9 @@ def detect_page_regions(html_bytes: bytes | None, url: str) -> list[dict]:
         cls, _conf = classify_block(blk)
         if cls != "plain text":
             continue
-        pm = render_region_prob_map(len(blk.text))
-        regions = db_postprocess(pm, ratio=1.0)
+        # stub DB 'model': the region renders as one filled rectangle
+        rect = (RASTER_MARGIN, RASTER_MARGIN, RASTER_CELL * max(len(blk.text), 1), RECT_H)
+        regions = db_postprocess(render_raster([rect], [RASTER_VALUE]) / 255, ratio=1.0)
         if not regions:
             region_id += 1
             continue

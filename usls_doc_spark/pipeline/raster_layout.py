@@ -37,7 +37,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..io.synth import raster_spec, render_raster
+from ..io.synth import CHUNKS_SQL, RASTER_MARGIN, RASTER_SPEC_SQL, raster_spec, render_raster
 from ..kernels.letterbox import letterbox_spec
 from ..kernels.yolo_decode import (
     DOCSTRUCTBENCH_NAMES,
@@ -138,9 +138,7 @@ def raster_layout_oracle() -> str:
     ) + f" ELSE {CLASS_SPEC[-1][1]} END"
     return f"""
 WITH d0 AS (
-  SELECT doc_id,
-         [array_to_string((string_split(text, ' '))[i:i+7], ' ')
-          for i in range(1, len(string_split(text, ' ')) + 1, 8)] AS chunks
+  SELECT doc_id, {CHUNKS_SQL} AS chunks
   FROM documents
 ),
 ch AS (
@@ -149,13 +147,11 @@ ch AS (
   FROM d0
 ),
 spec AS (
-  SELECT doc_id, k,
-         16 + 4 * (k % 3) AS x0, 16 + 40 * k AS y0,
-         4 * c AS w, 16 + 4 * ((doc_id + k) % 2) AS h,
+  SELECT doc_id, k, {RASTER_SPEC_SQL},
          {cls_case} AS cls, {val_case} AS val
   FROM ch
 ),
-page AS (SELECT doc_id, max(x0 + w) + 16 AS pw FROM spec GROUP BY doc_id),
+page AS (SELECT doc_id, max(x0 + w) + {RASTER_MARGIN} AS pw FROM spec GROUP BY doc_id),
 kept AS (
   SELECT s.doc_id, s.x0, s.y0, s.w, s.h, s.cls, s.val,
          (s.y0 + 3) // 8 AS imin, (s.x0 + 3) // 8 AS jmin,

@@ -49,9 +49,14 @@ from __future__ import annotations
 import numpy as np
 
 from ..io.synth import (
+    CHUNKS_SQL,
     GLYPH_BIAS,
     RASTER_CELL,
+    RASTER_MARGIN,
+    RASTER_PITCH,
+    RASTER_SPEC_SQL,
     RASTER_VALUE,
+    TWOCOL_MOD,
     chunk_text,
     glyph_row,
     raster_spec,
@@ -184,7 +189,7 @@ def raster_ocr_spans(spark, sf_dir: str):
 # ---------------------------------------------------------------------------
 # full pixel-native extraction: page image -> detect -> XY-cut reading
 # order -> pixel OCR -> byte-identical extracted text. Two-column pages
-# (doc_id % 3 == 1, mirroring synth's TWOCOL_MOD) lay the chunks out
+# (doc_id % TWOCOL_MOD == 1, as in synth's html pages) lay the chunks out
 # column-major with a 64px column gap, so the detection discovers regions
 # ROW-INTERLEAVED across columns and only a correct XY-cut (column split
 # before row splits) reassembles the original text — the text-equality
@@ -197,24 +202,20 @@ RASTER_EXTRACT_SCHEMA = "doc_id bigint, n_regions int, extracted_text string"
 
 
 def raster_extract_spec(doc_id: int, chunks: list[str]) -> list[tuple[int, int, int, int]]:
-    """Rect per chunk, IN CHUNK ORDER. Two-column pages place the first
-    ceil(n/2) chunks in the left column."""
-    if doc_id % 3 == 1 and len(chunks) >= 4:
-        nleft = (len(chunks) + 1) // 2
-        colw = 4 * max(len(c) for c in chunks)
-        rects = []
-        for i, c in enumerate(chunks):
-            col, row = (0, i) if i < nleft else (1, i - nleft)
-            rects.append(
-                (
-                    16 + col * (colw + TWOCOL_GAP),
-                    16 + 40 * row,
-                    4 * len(c),
-                    16 + 4 * ((doc_id + i) % 2),
-                )
-            )
+    """Rect per chunk, IN CHUNK ORDER: raster_spec's rects, except that
+    two-column pages place the first ceil(n/2) chunks in the left column
+    and the rest in the right one, each column starting at the top."""
+    rects = raster_spec(doc_id, " ".join(chunks))
+    if doc_id % TWOCOL_MOD != 1 or len(chunks) < 4:
         return rects
-    return raster_spec(doc_id, " ".join(chunks))
+    nleft = (len(chunks) + 1) // 2
+    colw = RASTER_CELL * max(len(c) for c in chunks)
+    out = []
+    for i, (_x, _y, w, h) in enumerate(rects):
+        col, row = divmod(i, nleft)
+        x0 = RASTER_MARGIN + col * (colw + TWOCOL_GAP)
+        out.append((x0, RASTER_MARGIN + RASTER_PITCH * row, w, h))
+    return out
 
 
 def extract_from_raster(doc_id: int, text: str) -> tuple[int, str]:
@@ -245,12 +246,8 @@ def raster_extract_text(spark, sf_dir: str):
     return map_rows(split_documents(spark, sf_dir), _extract_row, RASTER_EXTRACT_SCHEMA)
 
 
-RASTER_EXTRACT_ORACLE = """
-SELECT doc_id,
-       CAST(len([array_to_string((string_split(text, ' '))[i:i+7], ' ')
-                 for i in range(1, len(string_split(text, ' ')) + 1, 8)]) AS INT)
-         AS n_regions,
-       text AS extracted_text
+RASTER_EXTRACT_ORACLE = f"""
+SELECT doc_id, CAST(len({CHUNKS_SQL}) AS INT) AS n_regions, text AS extracted_text
 FROM documents
 """
 
@@ -351,9 +348,7 @@ def raster_ocr_oracle(with_text: bool = False) -> str:
     text_col = "unnest(chunks) AS span_text,\n         " if with_text else ""
     text_carry = "span_text, " if with_text else ""
     spec = f"""d0 AS (
-  SELECT doc_id,
-         [array_to_string((string_split(text, ' '))[i:i+7], ' ')
-          for i in range(1, len(string_split(text, ' ')) + 1, 8)] AS chunks
+  SELECT doc_id, {CHUNKS_SQL} AS chunks
   FROM documents
 ),
 ch AS (
@@ -363,9 +358,7 @@ ch AS (
   FROM d0
 ),
 spec AS (
-  SELECT doc_id, CAST(k AS INT) AS region_id, {text_carry}
-         16 + 4 * (k % 3) AS x0, 16 + 40 * k AS y0,
-         4 * c AS w, 16 + 4 * ((doc_id + k) % 2) AS h
+  SELECT doc_id, CAST(k AS INT) AS region_id, {text_carry}{RASTER_SPEC_SQL}
   FROM ch
 )"""
     carry = "doc_id, region_id" + (", span_text" if with_text else "")

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..io.synth import CHUNKS_SQL
 from ..kernels.boilerplate import classify_block, parse_blocks
 from ..kernels.table_structure import decode_table_structure
 from .crossing import map_rows
@@ -117,11 +118,9 @@ def table_cells(spark, sf_dir: str):
 #   i <  ex*(bs+1): row = i // (bs+1),       col = i % (bs+1)
 #   i >= ex*(bs+1): row = ex + rest // bs,   col = rest % bs   (rest = i - ex*(bs+1))
 # Decoded token count = nw cells + 2*nr row tags + 6 html wrappers.
-TABLE_CELLS_ORACLE = """
+TABLE_CELLS_ORACLE = f"""
 WITH d AS (
-  SELECT doc_id,
-         [array_to_string((string_split(text, ' '))[i:i+7], ' ')
-          for i in range(1, len(string_split(text, ' ')) + 1, 8)] AS chunks
+  SELECT doc_id, {CHUNKS_SQL} AS chunks
   FROM documents
 ),
 t AS (

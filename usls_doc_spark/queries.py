@@ -19,7 +19,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .io.synth import CHUNK_WORDS, SKEW_MOD, TABLE_MOD, pages_from_documents
+from .io.synth import CHUNK_WORDS, CHUNKS_SQL, SKEW_MOD, TABLE_MOD, pages_from_documents
 from .operators import relational
 from .operators.dialect import DUCK, SPARK, Dialect
 from .operators.multimodal import MULTIMODAL_ORACLE, multimodal_features
@@ -102,9 +102,7 @@ FROM (
                    AND len(string_split(chunks0[len(chunks0)], ' ')) >= 2
               THEN chunks0[1:len(chunks0) - 1] ELSE chunks0 END AS chunks
   FROM (
-    SELECT doc_id,
-           [array_to_string((string_split(text, ' '))[i:i+{CHUNK_WORDS - 1}], ' ')
-            for i in range(1, len(string_split(text, ' ')) + 1, {CHUNK_WORDS})] AS chunks0
+    SELECT doc_id, {CHUNKS_SQL} AS chunks0
     FROM documents
   )
 )
@@ -115,9 +113,10 @@ def ocr_regions_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full OCR region rows incl. unclipped-polygon geometry + confidence.
 
     The stub DB prob map renders each span as a solid rectangle at
-    (PAD, PAD) of size (4*n_chars, RECT_H) with margins exceeding the
-    maximum unclip delta, so the detect-postprocess geometry has the
-    clamp-free CLOSED FORM the symbolic render-spec oracle states
+    (RASTER_MARGIN, RASTER_MARGIN) of size (RASTER_CELL*n_chars, RECT_H)
+    with margins exceeding the maximum unclip delta, so the
+    detect-postprocess geometry has the clamp-free CLOSED FORM the
+    symbolic render-spec oracle states
     (pipeline/raster_ocr.rect_detect_geometry_sql) — any chunk length is
     covered, no pinned kernel-output lookup (round-2 VERDICT item 3:
     pinned-oracle circularity eliminated)."""
@@ -128,14 +127,15 @@ def ocr_regions_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ocr_regions_oracle() -> str:
-    from .pipeline.ocr import CELL, PAD, RECT_H
+    from .io.synth import RASTER_CELL, RASTER_MARGIN
+    from .pipeline.ocr import RECT_H
     from .pipeline.raster_ocr import rect_detect_geometry_sql
 
     spec = f"""spans AS ({OCR_SPANS_ORACLE}),
 spec AS (
   SELECT url, region_id, span_text,
-         {PAD} AS x0, {PAD} AS y0,
-         {CELL} * length(span_text) AS w, {RECT_H} AS h
+         {RASTER_MARGIN} AS x0, {RASTER_MARGIN} AS y0,
+         {RASTER_CELL} * length(span_text) AS w, {RECT_H} AS h
   FROM spans
 )"""
     return rect_detect_geometry_sql(spec, "url, region_id, span_text")
