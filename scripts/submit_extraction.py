@@ -28,7 +28,7 @@ import json
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", required=True, help="dir with documents.parquet")
-    ap.add_argument("--out", required=True, help="output root (extracted/, _checkpoint/, _lineage/)")
+    ap.add_argument("--out", required=True, help="output root (extracted/bucket=*/, _checkpoint/)")
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--copies", type=int, default=1)

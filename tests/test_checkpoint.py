@@ -1,8 +1,19 @@
-"""Idempotent resume + lineage tests (FIXTURES.md §5, SURVEY.md §5.2.4)."""
+"""Idempotent resume + checkpoint metrics tests (FIXTURES.md §5,
+SURVEY.md §5.2.4), and the guard that keeps session-conf writes out of the
+package."""
+
+import ast
+import pathlib
 
 import pytest
 
 from tests.conftest import SF_DIR
+
+PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "usls_doc_spark"
+OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+# the only places that may call .conf.set( on a session
+CONF_SET_FILES = {"streaming/sink.py", "io/shard_source.py"}
+CONF_SET_FUNCTIONS = {("queries.py", "_register_views")}
 
 
 @pytest.fixture(scope="module")
@@ -25,17 +36,25 @@ def test_null_html_rows_become_error_rows(spark, tmp_path_factory):
         rows, schema="url string, warc_ts timestamp, html binary, text string, lang string"
     )
     out = str(tmp_path_factory.mktemp("nullhtml"))
+    # the two urls hash to buckets 2 and 1: a first run over bucket 0 alone
+    # writes no data file and still checkpoints that bucket, with zeros
+    r0 = run_extraction_job(spark, pages, out, run_id="n0", n_buckets=4, max_buckets=1)
+    assert r0["buckets"] == [0] and r0["docs"] == 0
     run_extraction_job(spark, pages, out, run_id="n1", n_buckets=4)
     got = {r["url"]: r for r in spark.read.parquet(f"{out}/extracted").collect()}
     assert set(got) == {"u-null", "u-ok"}  # null html NOT silently dropped
     assert got["u-null"]["error"] is not None
     assert got["u-ok"]["error"] is None
+    ckpt = {r["bucket"]: r for r in spark.read.parquet(f"{out}/_checkpoint").collect()}
+    assert sorted(ckpt) == [0, 1, 2, 3] and ckpt[0]["doc_count"] == 0
+    assert sum(r["error_count"] for r in ckpt.values()) == 1
 
 
 def test_corrupt_checkpoint_raises(spark, tmp_path_factory):
     """A checkpoint that exists but cannot be read fails the job instead of
     reading as 'no bucket done' (which would re-run every bucket and append
-    duplicate lineage); a fresh out dir still starts from nothing."""
+    a second checkpoint row per bucket); a fresh out dir still starts from
+    nothing."""
     import os
 
     from usls_doc_spark.pipeline.checkpoint import completed_buckets, run_extraction_job
@@ -52,7 +71,6 @@ def test_corrupt_checkpoint_raises(spark, tmp_path_factory):
     with pytest.raises(Exception, match="part-00000.parquet"):
         run_extraction_job(spark, pages, out, run_id="c1", n_buckets=4)
     assert not os.path.exists(f"{out}/extracted")
-    assert not os.path.exists(f"{out}/_lineage")
 
 
 def test_resume_from_partial_run(spark, pages, tmp_path_factory):
@@ -76,21 +94,21 @@ def test_resume_from_partial_run(spark, pages, tmp_path_factory):
     assert full.count() == n_input
     # keyed by url, exactly once (idempotency invariant)
     assert full.select("url").distinct().count() == n_input
+    assert r1["docs"] + r2["docs"] == n_input
 
     # run 3: nothing left -> no-op, output unchanged
     r3 = run_extraction_job(spark, pages, out, run_id="run3")
     assert r3["skipped"]
     assert spark.read.parquet(f"{out}/extracted").count() == n_input
 
-    # lineage doc_count sums equal input row count; byte counts match output
-    lineage = spark.read.parquet(f"{out}/_lineage")
-    assert lineage.agg(F.sum("doc_count")).collect()[0][0] == n_input
+    # checkpoint doc_count sums equal input row count; byte counts match output
+    ckpt = spark.read.parquet(f"{out}/_checkpoint")
+    assert ckpt.agg(F.sum("doc_count")).collect()[0][0] == n_input
     total_bytes = full.agg(F.sum("extracted_bytes")).collect()[0][0]
-    assert lineage.agg(F.sum("byte_count")).collect()[0][0] == total_bytes
-    assert lineage.filter("elapsed_ms >= 0").count() == lineage.count()
+    assert ckpt.agg(F.sum("byte_count")).collect()[0][0] == total_bytes
+    assert ckpt.filter("elapsed_ms >= 0").count() == ckpt.count()
 
     # checkpoint covers all 64 buckets exactly once
-    ckpt = spark.read.parquet(f"{out}/_checkpoint")
     assert ckpt.filter("status = 'done'").select("bucket").distinct().count() == 64
     assert ckpt.count() == 64  # no bucket re-marked
 
@@ -103,3 +121,80 @@ def test_resume_from_partial_run(spark, pages, tmp_path_factory):
     again = spark.read.parquet(f"{out}/extracted")
     assert again.count() == n_input
     assert again.select("url").distinct().count() == n_input
+
+
+def test_crash_before_checkpoint_append_reruns_without_double_count(
+    spark, pages, tmp_path_factory, monkeypatch
+):
+    """A run killed after the output write but before the checkpoint append
+    has committed nothing: the re-run redoes every bucket, and the output
+    and the checkpoint each count every url once. Neither run touches the
+    session's partitionOverwriteMode."""
+    from pyspark.sql import DataFrameWriter
+    from pyspark.sql import functions as F
+
+    from usls_doc_spark.pipeline.checkpoint import run_extraction_job
+
+    out = str(tmp_path_factory.mktemp("crash"))
+    n_input = pages.count()
+    # start from the session default, so a value an earlier run leaked cannot hide a leak
+    spark.conf.unset(OVERWRITE_MODE)
+    mode = spark.conf.get(OVERWRITE_MODE)
+
+    parquet = DataFrameWriter.parquet
+    crashes = []
+
+    def crash_once(self, path, *args, **kwargs):
+        if path.endswith("/_checkpoint") and not crashes:
+            crashes.append(path)
+            raise RuntimeError("killed before the checkpoint append")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_once)
+    with pytest.raises(RuntimeError, match="killed before the checkpoint append"):
+        run_extraction_job(spark, pages, out, run_id="crash1", n_buckets=8)
+    assert spark.conf.get(OVERWRITE_MODE) == mode
+
+    r = run_extraction_job(spark, pages, out, run_id="crash2", n_buckets=8)
+    assert len(crashes) == 1 and r["buckets"] == list(range(8))
+    assert spark.conf.get(OVERWRITE_MODE) == mode
+
+    full = spark.read.parquet(f"{out}/extracted")
+    assert full.count() == n_input
+    assert full.select("url").distinct().count() == n_input
+    ckpt = spark.read.parquet(f"{out}/_checkpoint")
+    assert sorted(row["bucket"] for row in ckpt.select("bucket").collect()) == list(range(8))
+    assert ckpt.agg(F.sum("doc_count")).collect()[0][0] == n_input == r["docs"]
+
+
+def _conf_set_functions(node, fn=None):
+    """Innermost enclosing function name (None at module level) of every
+    `.conf.set(` call under ``node``."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield from _conf_set_functions(child, child.name)
+            continue
+        if (
+            isinstance(child, ast.Call)
+            and isinstance(child.func, ast.Attribute)
+            and child.func.attr == "set"
+            and isinstance(child.func.value, ast.Attribute)
+            and child.func.value.attr == "conf"
+        ):
+            yield fn
+        yield from _conf_set_functions(child, fn)
+
+
+def test_conf_set_only_where_allowed():
+    """The package writes the caller's session conf only in the allowlisted
+    places; a job that needs a write setting passes it as a writer option."""
+    found = set()
+    for path in PACKAGE.rglob("*.py"):
+        rel = path.relative_to(PACKAGE).as_posix()
+        tree = ast.parse(path.read_text(), filename=str(path))
+        found |= {(rel, fn) for fn in _conf_set_functions(tree)}
+    assert ("queries.py", "_register_views") in found
+    bad = {
+        (f, fn) for f, fn in found if f not in CONF_SET_FILES and (f, fn) not in CONF_SET_FUNCTIONS
+    }
+    assert not bad, sorted(bad)

@@ -1,36 +1,10 @@
-"""Annotator SVG sink + artifact cache tests (SURVEY.md §2.1 S4/S5)."""
+"""Artifact cache tests (SURVEY.md §2.1 S4)."""
 
 import pathlib
 
 import pytest
 
-from usls_doc_spark.io.annotator import annotate_extractions, render_svg
 from usls_doc_spark.io.artifacts import fetch_artifact
-
-
-def test_render_svg_deterministic():
-    blocks = [
-        {"x": 48, "y": 48, "width": 64, "height": 16, "cls": "title", "conf": 0.95, "order": 0},
-        {"x": 48, "y": 72, "width": 344, "height": 32, "cls": "plain text", "conf": 0.7, "order": 1},
-    ]
-    svg1 = render_svg(blocks)
-    svg2 = render_svg(list(reversed(blocks)))  # order field, not list order
-    assert svg1 == svg2
-    assert svg1.count("<rect") == 3  # background + 2 boxes
-    assert "#d62728" in svg1 and "plain text" in svg1
-
-
-def test_annotate_extractions_writes_files(tmp_path):
-    rows = [
-        {"url": "https://example.org/doc/00000042", "blocks": [
-            {"x": 1, "y": 2, "width": 3, "height": 4, "cls": "table", "conf": 0.8, "order": 0}
-        ]},
-        {"url": "https://example.org/doc/00000043", "blocks": []},
-    ]
-    n = annotate_extractions(rows, str(tmp_path), saveout="dbg")
-    assert n == 2
-    files = sorted(p.name for p in (tmp_path / "dbg").iterdir())
-    assert files == ["00000042.svg", "00000043.svg"]
 
 
 def test_fetch_artifact_cache_and_retry(tmp_path):

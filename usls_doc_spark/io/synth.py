@@ -42,6 +42,10 @@ SKEW_MOD = 47  # doc_id % 47 == 0 -> oversized page
 TWOCOL_MOD = 3  # doc_id % 3 == 1 -> two-column layout
 TABLE_MOD = 4  # doc_id % 4 == 2 -> last chunk rendered as a <table>
 
+# the two page predicates above in DuckDB SQL, over doc_id
+SKEW_SQL = f"doc_id % {SKEW_MOD} = 0"
+TWOCOL_SQL = f"doc_id % {TWOCOL_MOD} = 1"
+
 
 def url_for(doc_id: int) -> str:
     return f"https://example.org/doc/{doc_id:08d}"
@@ -79,6 +83,16 @@ def table_row_count(doc_id: int, n_words: int) -> int:
     (round-2 VERDICT item 3 — variable structure, not a hardcoded 2),
     clamped so no row is empty."""
     return min(1 + (doc_id // TABLE_MOD) % 4, n_words)
+
+
+# renders_table and table_row_count in DuckDB SQL: RENDERS_TABLE_SQL over
+# doc_id and the chunk list `chunks` (CHUNKS_SQL); TABLE_ROW_COUNT_SQL over
+# doc_id and the last chunk's word list `lw` (LAST_WORDS_SQL)
+LAST_WORDS_SQL = "string_split(chunks[len(chunks)], ' ')"
+RENDERS_TABLE_SQL = (
+    f"(doc_id % {TABLE_MOD} = 2 AND len(chunks) >= 2 AND len({LAST_WORDS_SQL}) >= 2)"
+)
+TABLE_ROW_COUNT_SQL = f"least(1 + (doc_id // {TABLE_MOD}) % 4, len(lw))"
 
 
 def table_rows(doc_id: int, words: list[str]) -> list[list[str]]:

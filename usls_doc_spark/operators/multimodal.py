@@ -26,7 +26,14 @@ import math
 
 import numpy as np
 
-from ..io.synth import CHUNKS_SQL
+from ..io.synth import (
+    CHUNKS_SQL,
+    LAST_WORDS_SQL,
+    RENDERS_TABLE_SQL,
+    SKEW_SQL,
+    TABLE_ROW_COUNT_SQL,
+    TWOCOL_SQL,
+)
 from ..pipeline.crossing import map_rows
 
 N_FEATURES = 8
@@ -112,22 +119,20 @@ def _stratum(j: int) -> str:
 _PAGE_CODES_CTES = f"""
 WITH src AS (
   SELECT doc_id, text,
-         doc_id % 3 = 1 AS two_col,
-         doc_id % 47 = 0 AS skew,
+         {TWOCOL_SQL} AS two_col,
+         {SKEW_SQL} AS skew,
          {CHUNKS_SQL} AS chunks
   FROM documents
 ),
 tsrc AS (
   SELECT doc_id, text, two_col, skew, chunks,
-         (doc_id % 4 = 2 AND len(chunks) >= 2
-          AND len(string_split(chunks[len(chunks)], ' ')) >= 2) AS has_table,
-         string_split(chunks[len(chunks)], ' ') AS lw,
-         least(1 + (doc_id // 4) % 4,
-               len(string_split(chunks[len(chunks)], ' '))) AS nr
+         {RENDERS_TABLE_SQL} AS has_table,
+         {LAST_WORDS_SQL} AS lw
   FROM src
 ),
 tshape AS (
-  SELECT *, len(lw) // nr AS bs, len(lw) % nr AS ex FROM tsrc
+  SELECT *, len(lw) // nr AS bs, len(lw) % nr AS ex
+  FROM (SELECT *, {TABLE_ROW_COUNT_SQL} AS nr FROM tsrc)
 ),
 page AS (
   SELECT doc_id,

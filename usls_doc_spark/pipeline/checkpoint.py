@@ -1,5 +1,5 @@
-"""Idempotent, resumable extraction job: bucketing, skew split, checkpoint,
-per-partition lineage metrics.
+"""Idempotent, resumable extraction job: bucketing, skew split, and one
+checkpoint table that carries the per-bucket metrics.
 
 North-rule requirements (BASELINE.json north_rule / SURVEY.md §4):
   1. "skewed oversized-HTML keys are salted and repartitioned explicitly" —
@@ -7,20 +7,23 @@ North-rule requirements (BASELINE.json north_rule / SURVEY.md §4):
      url) and an oversized population (round-robin repartitioned so no task
      collects several giants); each runs through the same extraction UDF.
   2. "every partition emits lineage + doc-count/byte-count metrics to a
-     checkpoint table so failed runs resume idempotently" — output is
-     written parquet partitioned by a url-hash bucket with DYNAMIC partition
-     overwrite (a re-run of an incomplete bucket atomically replaces it, so
-     repeats never duplicate); completed buckets are recorded in a
-     checkpoint table and anti-joined away on resume; a lineage table
-     records (run_id, partition_id, doc_count, byte_count, elapsed_ms).
+     checkpoint table so failed runs resume idempotently" — the url-hash
+     bucket is the unit of everything. The output is repartitioned by
+     bucket, so each bucket is one write partition with one writer, and
+     written as parquet partitioned by bucket with DYNAMIC partition
+     overwrite (a re-run of an incomplete bucket replaces it, so repeats
+     never duplicate). One append to ``_checkpoint`` then records every
+     processed bucket with its metrics (run_id, bucket, status, doc_count,
+     byte_count, elapsed_ms, error_count, updated_at); that append is the
+     commit, and resume skips the buckets it names.
 
 Scale notes: one Spark job processes ALL remaining buckets (no per-bucket
 driver loop); the skew split scans the source twice but each row passes
 exactly one filter — at 100 TB both scans push `octet_length(html)`
-filtering to the scan and the giant population is a tiny fraction.
-Checkpoint/lineage aggregates are computed by reading BACK the written
-output (honest lineage of what is durably on disk), never by recomputing
-the extraction.
+filtering to the scan and the giant population is a tiny fraction. The
+metrics come from ONE read back of the written buckets (what is durably on
+disk), never from recomputing the extraction, and collect at most
+``n_buckets`` rows to the driver.
 """
 
 from __future__ import annotations
@@ -35,7 +38,11 @@ from pyspark.sql import functions as F
 from .extract import extract_pages
 
 DEFAULT_N_BUCKETS = 64
-DEFAULT_SKEW_BYTES = 64 * 1024  # pages >= this are "oversized"
+SKEW_BYTES = 64 * 1024  # pages >= this are "oversized"
+CHECKPOINT_SCHEMA = (
+    "run_id string, bucket int, status string, doc_count bigint, "
+    "byte_count bigint, elapsed_ms bigint, error_count bigint"
+)
 
 
 def _bucket(col, n_buckets: int):
@@ -43,12 +50,13 @@ def _bucket(col, n_buckets: int):
 
 
 def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
-    """Buckets an earlier run recorded as done. Only a missing checkpoint
-    table (a fresh out dir) means none; any other read failure, such as a
-    corrupt checkpoint file, is raised, because re-running every bucket
-    would append duplicate lineage. The schema is given so a checkpoint
-    dir holding no committed file yet (a run killed mid-append) reads as
-    empty instead of failing schema inference."""
+    """Buckets an earlier run recorded as done in ``_checkpoint``. Only a
+    missing checkpoint table (a fresh out dir) means none; any other read
+    failure, such as a corrupt checkpoint file, is raised, because treating
+    it as 'none done' would re-run every bucket and append a second
+    checkpoint row (with its metrics) for each. The schema is given so a
+    checkpoint dir holding no committed file yet (a run killed mid-append)
+    reads as empty instead of failing schema inference."""
     try:
         ck = spark.read.schema("bucket int, status string").parquet(
             f"{out_dir}/_checkpoint"
@@ -67,7 +75,6 @@ def run_extraction_job(
     out_dir: str,
     run_id: str | None = None,
     n_buckets: int = DEFAULT_N_BUCKETS,
-    skew_bytes: int = DEFAULT_SKEW_BYTES,
     max_buckets: int | None = None,
 ) -> dict:
     """Process all not-yet-checkpointed buckets of ``pages`` into
@@ -93,57 +100,46 @@ def run_extraction_job(
     # null html must still flow through (it becomes an error row, S3
     # semantics) — octet_length(NULL) is NULL and would fail BOTH filters
     size = F.coalesce(F.octet_length("html"), F.lit(0))
-    small = pages.filter(size < skew_bytes).repartition(nparts, "url")
+    small = pages.filter(size < SKEW_BYTES).repartition(nparts, "url")
     # oversized docs: round-robin spread so no task accumulates several giants
-    big = pages.filter(size >= skew_bytes).repartition(nparts)
+    big = pages.filter(size >= SKEW_BYTES).repartition(nparts)
 
     extracted = extract_pages(small).unionByName(extract_pages(big))
-    out = (
+    (
         extracted.withColumn("bucket", _bucket(F.col("url"), n_buckets))
-        .withColumn("partition_id", F.spark_partition_id())
         .withColumn("run_id", F.lit(run_id))
+        .repartition("bucket")
+        .write.option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .mode("overwrite")
+        .parquet(f"{out_dir}/extracted")
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    out.write.partitionBy("bucket").mode("overwrite").parquet(f"{out_dir}/extracted")
 
-    # lineage + checkpoint from what is durably on disk
-    written = spark.read.parquet(f"{out_dir}/extracted").filter(
-        F.col("bucket").isin(remaining)
+    # the schema is given so a run whose buckets were all empty (no data
+    # file written yet) reads as no rows instead of failing schema inference
+    written = (
+        spark.read.schema("extracted_bytes bigint, elapsed_us bigint, error string, bucket int")
+        .parquet(f"{out_dir}/extracted")
+        .filter(F.col("bucket").isin(remaining))
     )
-    lineage = written.groupBy("run_id", "partition_id").agg(
-        F.count("*").alias("doc_count"),
-        F.sum("extracted_bytes").alias("byte_count"),
-        (F.sum("elapsed_us") / F.lit(1000)).cast("bigint").alias("elapsed_ms"),
-        F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("error_count"),
-    ).withColumn("started_at", F.current_timestamp())
-    lineage.write.mode("append").parquet(f"{out_dir}/_lineage")
+    per_bucket = written.groupBy("bucket").agg(
+        F.count("*"),  # doc_count
+        F.sum("extracted_bytes"),  # byte_count
+        (F.sum("elapsed_us") / F.lit(1000)).cast("bigint"),  # elapsed_ms
+        F.count("error"),  # error_count
+    )
+    metrics = {r["bucket"]: r[1:] for r in per_bucket.collect()}
+    # every processed bucket is marked done — empty ones too, with zeros,
+    # so they are not reprocessed forever; one file per append
+    rows = [(run_id, b, "done", *metrics.get(b, (0, 0, 0, 0))) for b in remaining]
+    spark.createDataFrame(rows, CHECKPOINT_SCHEMA).coalesce(1).withColumn(
+        "updated_at", F.current_timestamp()
+    ).write.mode("append").parquet(f"{out_dir}/_checkpoint")
 
-    # every remaining bucket is marked done — including empty ones, which
-    # produce no output rows but must not be reprocessed forever
-    bucket_counts = written.groupBy("bucket").agg(
-        F.count("*").alias("doc_count"),
-        F.sum("extracted_bytes").alias("byte_count"),
-    )
-    all_buckets = spark.createDataFrame([(b,) for b in remaining], "bucket int")
-    ckpt = (
-        all_buckets.join(bucket_counts, "bucket", "left")
-        .na.fill({"doc_count": 0, "byte_count": 0})
-        .select(
-            F.lit(run_id).alias("run_id"),
-            "bucket",
-            F.lit("done").alias("status"),
-            "doc_count",
-            "byte_count",
-            F.current_timestamp().alias("updated_at"),
-        )
-    )
-    ckpt.write.mode("append").parquet(f"{out_dir}/_checkpoint")
-
-    n_docs = sum(r["doc_count"] for r in ckpt.select("doc_count").collect())
     return {
         "run_id": run_id,
         "buckets": remaining,
-        "docs": n_docs,
+        "docs": sum(doc_count for doc_count, *_ in metrics.values()),
         "elapsed_s": time.monotonic() - t_start,
         "skipped": False,
     }

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io.synth import SKEW_MOD, pages_from_documents
+from ..io.synth import SKEW_SQL, pages_from_documents
 from ..kernels.links import extract_links
 from .crossing import map_rows
 
@@ -62,7 +62,7 @@ WITH links AS (
          'section ' || CAST(k AS VARCHAR) || ' link' AS anchor
   FROM documents,
        unnest(generate_series(
-         0, CASE WHEN doc_id % {SKEW_MOD} = 0 THEN 1199 ELSE 11 END
+         0, CASE WHEN {SKEW_SQL} THEN 1199 ELSE 11 END
        )) AS t(k)
   UNION ALL
   SELECT doc_id, '/more', 'read more stories here' FROM documents

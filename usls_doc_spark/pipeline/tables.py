@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..io.synth import CHUNKS_SQL
+from ..io.synth import CHUNKS_SQL, LAST_WORDS_SQL, RENDERS_TABLE_SQL, TABLE_ROW_COUNT_SQL
 from ..kernels.boilerplate import classify_block, parse_blocks
 from ..kernels.table_structure import decode_table_structure
 from .crossing import map_rows
@@ -124,14 +124,12 @@ WITH d AS (
   FROM documents
 ),
 t AS (
-  SELECT doc_id, string_split(chunks[len(chunks)], ' ') AS lw
+  SELECT doc_id, {LAST_WORDS_SQL} AS lw
   FROM d
-  WHERE doc_id % 4 = 2 AND len(chunks) >= 2
-    AND len(string_split(chunks[len(chunks)], ' ')) >= 2
+  WHERE {RENDERS_TABLE_SQL}
 ),
 shape AS (
-  SELECT doc_id, len(lw) AS nw,
-         least(1 + (doc_id // 4) % 4, len(lw)) AS nr
+  SELECT doc_id, len(lw) AS nw, {TABLE_ROW_COUNT_SQL} AS nr
   FROM t
 ),
 cells AS (

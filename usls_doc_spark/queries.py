@@ -19,7 +19,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .io.synth import CHUNK_WORDS, CHUNKS_SQL, SKEW_MOD, TABLE_MOD, pages_from_documents
+from .io.synth import CHUNKS_SQL, RENDERS_TABLE_SQL, SKEW_SQL, pages_from_documents
 from .operators import relational
 from .operators.dialect import DUCK, SPARK, Dialect
 from .operators.multimodal import MULTIMODAL_ORACLE, multimodal_features
@@ -73,8 +73,8 @@ def extract_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 EXTRACT_METRICS_ORACLE = f"""
 SELECT 'https://example.org/doc/' || lpad(CAST(doc_id AS VARCHAR), 8, '0') AS url,
-       CAST(1 + ceil(len(string_split(text, ' ')) / {CHUNK_WORDS}.0)
-              + (CASE WHEN doc_id % {SKEW_MOD} = 0 THEN 1 ELSE 0 END) AS INT) AS n_blocks,
+       CAST(1 + len({CHUNKS_SQL})
+              + (CASE WHEN {SKEW_SQL} THEN 1 ELSE 0 END) AS INT) AS n_blocks,
        octet_length(encode('Doc ' || CAST(doc_id AS VARCHAR) || ' ' || text)) AS extracted_bytes
 FROM documents
 """
@@ -94,17 +94,12 @@ def ocr_spans_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 'plain text'), so the OCR path sees one fewer region on those pages
 OCR_SPANS_ORACLE = f"""
 SELECT 'https://example.org/doc/' || lpad(CAST(doc_id AS VARCHAR), 8, '0') AS url,
-       generate_subscripts(chunks, 1) - 1 AS region_id,
-       unnest(chunks) AS span_text
+       generate_subscripts(body, 1) - 1 AS region_id,
+       unnest(body) AS span_text
 FROM (
   SELECT doc_id,
-         CASE WHEN doc_id % {TABLE_MOD} = 2 AND len(chunks0) >= 2
-                   AND len(string_split(chunks0[len(chunks0)], ' ')) >= 2
-              THEN chunks0[1:len(chunks0) - 1] ELSE chunks0 END AS chunks
-  FROM (
-    SELECT doc_id, {CHUNKS_SQL} AS chunks0
-    FROM documents
-  )
+         CASE WHEN {RENDERS_TABLE_SQL} THEN chunks[1:len(chunks) - 1] ELSE chunks END AS body
+  FROM (SELECT doc_id, {CHUNKS_SQL} AS chunks FROM documents)
 )
 """
 
@@ -156,15 +151,11 @@ def extract_block_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 EXTRACT_BLOCK_HIST_ORACLE = f"""
 WITH d AS (
-  SELECT doc_id,
-         CAST(ceil(len(string_split(text, ' ')) / {CHUNK_WORDS}.0) AS INT) AS n_chunks,
-         len(string_split(text, ' '))
-           - {CHUNK_WORDS} * (CAST(ceil(len(string_split(text, ' ')) / {CHUNK_WORDS}.0) AS INT) - 1) AS nw_last
+  SELECT doc_id, {CHUNKS_SQL} AS chunks
   FROM documents
 ),
 g AS (
-  SELECT doc_id, n_chunks,
-         (doc_id % {TABLE_MOD} = 2 AND n_chunks >= 2 AND nw_last >= 2) AS has_table
+  SELECT doc_id, len(chunks) AS n_chunks, {RENDERS_TABLE_SQL} AS has_table
   FROM d
 )
 SELECT 'title' AS cls, count(*) AS n_blocks FROM g
@@ -177,7 +168,7 @@ UNION ALL
 -- kept-abandon blocks exist only on skew pages; emit no row when a dataset
 -- happens to contain none (the Spark side's groupBy produces no row either)
 SELECT 'abandon' AS cls, count(*) AS n_blocks FROM g
-WHERE doc_id % {SKEW_MOD} = 0 HAVING count(*) > 0
+WHERE {SKEW_SQL} HAVING count(*) > 0
 """
 
 
