@@ -140,22 +140,16 @@ def main() -> None:
         pinned = 0
     load_before = _loadavg()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("usls_doc_spark_bench")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    from usls_doc_spark.session import build_session
+
+    spark = build_session(
+        f"local[{CPUS}]",
+        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        ui=False,
+        log_level="ERROR",
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     from usls_doc_spark.io.synth import pages_from_documents
     from usls_doc_spark.pipeline.extract import extract_pages

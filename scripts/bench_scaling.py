@@ -31,13 +31,8 @@ COPIES = sys.argv[2] if len(sys.argv) > 2 else "10"
 PREP_SNIPPET = """
 import os, sys
 sys.path.insert(0, {repo!r})
-from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master("local[16]")
-         .config("spark.sql.shuffle.partitions", "16")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.driver.memory", "32g")
-         .config("spark.ui.enabled", "false").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
+from usls_doc_spark.session import build_session
+spark = build_session("local[16]", driver_memory="32g", ui=False, log_level="ERROR")
 from usls_doc_spark.io.synth import pages_from_documents
 # 512 files -> >=64 task waves per core at the largest level: skew pages
 # are ~80x median weight and carry most of the parse work, so coarse
@@ -53,16 +48,10 @@ spark.stop()
 BENCH_SNIPPET = """
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from usls_doc_spark.session import build_session
 cpus = int(os.environ["CPUS"])
-spark = (SparkSession.builder.master(f"local[{{cpus}}]")
-         .config("spark.sql.shuffle.partitions", str(cpus))
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.driver.memory", "48g")
-         .config("spark.ui.enabled", "false").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
+spark = build_session(f"local[{{cpus}}]", driver_memory="48g", ui=False, log_level="ERROR")
 from usls_doc_spark.pipeline.extract import extract_pages
 pages = spark.read.parquet(os.environ["PAGES_DIR"])
 s = pages.agg(F.count(F.lit(1)).alias("n"), F.sum(F.octet_length("html")).alias("b")).collect()[0]

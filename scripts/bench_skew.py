@@ -101,20 +101,9 @@ def main() -> None:
         pass
     import tempfile
 
-    from pyspark.sql import SparkSession
+    from usls_doc_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("usls_skew_bench")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session(f"local[{CPUS}]", driver_memory="48g", ui=False, log_level="ERROR")
 
     from usls_doc_spark.queries import build_registry
 

@@ -25,20 +25,9 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
+    from usls_doc_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("usls_gate_sim")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session(f"local[{cpus}]", driver_memory="16g", ui=False, log_level="ERROR")
 
     from usls_doc_spark.queries import build_registry
 

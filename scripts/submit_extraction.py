@@ -36,17 +36,9 @@ def main() -> None:
                     help="read an existing pages table instead of synthesizing")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from usls_doc_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.appName("usls_doc_spark_extraction")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = build_session()
 
     from usls_doc_spark.io.synth import pages_from_documents
     from usls_doc_spark.pipeline.checkpoint import run_extraction_job

@@ -11,22 +11,14 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from usls_doc_spark.session import build_session
 
-    warehouse = tempfile.mkdtemp(prefix="usls_test_warehouse_")
-    s = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.warehouse.dir", warehouse)
-        .appName("usls_doc_spark_tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    s = build_session(
+        "local[8]",
+        driver_memory="8g",
+        warehouse_dir=tempfile.mkdtemp(prefix="usls_test_warehouse_"),
+        ui=False,
     )
-    s.sparkContext.setLogLevel("WARN")
     yield s
     s.stop()
 

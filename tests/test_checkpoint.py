@@ -11,9 +11,9 @@ from tests.conftest import SF_DIR
 
 PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "usls_doc_spark"
 OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
-# the only places that may call .conf.set( on a session
-CONF_SET_FILES = {"streaming/sink.py", "io/shard_source.py"}
-CONF_SET_FUNCTIONS = {("queries.py", "_register_views")}
+# the only place that may call .conf.set( on a session: it restores the
+# old value when it is done
+CONF_SET_FUNCTIONS = {("streaming/sink.py", "_state_partitions")}
 
 
 @pytest.fixture(scope="module")
@@ -193,8 +193,5 @@ def test_conf_set_only_where_allowed():
         rel = path.relative_to(PACKAGE).as_posix()
         tree = ast.parse(path.read_text(), filename=str(path))
         found |= {(rel, fn) for fn in _conf_set_functions(tree)}
-    assert ("queries.py", "_register_views") in found
-    bad = {
-        (f, fn) for f, fn in found if f not in CONF_SET_FILES and (f, fn) not in CONF_SET_FUNCTIONS
-    }
-    assert not bad, sorted(bad)
+    assert ("streaming/sink.py", "_state_partitions") in found
+    assert found <= CONF_SET_FUNCTIONS, sorted(found - CONF_SET_FUNCTIONS)

@@ -24,6 +24,22 @@ def test_roundtrip_equals_split_and_pack_oracle(spark):
     assert ok, msg
 
 
+def test_roundtrip_leaves_filter_pushdown_conf_alone(spark):
+    """The source reads on a session with Python filter pushdown off, and
+    reading does not switch it on."""
+    key = "spark.sql.python.filterPushdown.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = export_roundtrip(spark, SF_DIR)
+        con = duck_con(SF_DIR)
+        ok, msg = compare(got, con.sql(export_roundtrip_oracle()))
+        assert ok, msg
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_manifest_drives_planning_one_partition_per_shard(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("shard_src") / "exp")
     summary = export_from_sf(spark, SF_DIR, out)
@@ -35,7 +51,13 @@ def test_manifest_drives_planning_one_partition_per_shard(spark, tmp_path_factor
         os.path.relpath(d, out)
         for d in glob.glob(f"{out}/split=*/shard=*")
     }
-    assert read_shards(spark, out).count() == summary["docs"]
+    df = read_shards(spark, out)
+    assert df.count() == summary["docs"]
+    # a split filter is applied after the scan and counts exactly the val
+    # shards' manifest lines
+    n_val = sum(p.lines for p in parts if p.split == "val")
+    assert 0 < n_val < summary["docs"]
+    assert df.filter("split = 'val'").count() == n_val
 
 
 def test_corrupted_shard_fails_integrity_check(spark, tmp_path_factory):
@@ -51,100 +73,3 @@ def test_corrupted_shard_fails_integrity_check(spark, tmp_path_factory):
     open(victim, "wb").write(data)
     with pytest.raises(Exception, match="integrity check failed"):
         read_shards(spark, out).count()
-
-
-def test_pushed_filters_prune_partitions_at_planning(spark, tmp_path_factory):
-    """EqualTo/In on split/shard must prune at the READER (manifest
-    planning), not post-scan: the reader materializes only matching
-    partitions, and the filtered read stays row-correct."""
-    from pyspark.sql.datasource import EqualTo, In
-
-    out = str(tmp_path_factory.mktemp("shard_prune") / "exp")
-    export_from_sf(spark, SF_DIR, out)
-    reader = ShardReader({"path": out})
-    all_parts = reader.partitions()
-    n_val = sum(1 for p in all_parts if p.split == "val")
-    assert 0 < n_val < len(all_parts)
-
-    reader2 = ShardReader({"path": out})
-    leftover = list(reader2.pushFilters([EqualTo(("split",), "val")]))
-    assert leftover == []  # fully consumed
-    pruned = reader2.partitions()
-    assert len(pruned) == n_val and all(p.split == "val" for p in pruned)
-
-    reader3 = ShardReader({"path": out})
-    leftover = list(reader3.pushFilters([In(("shard",), (0, 1))]))
-    assert leftover == []
-    assert {p.shard for p in reader3.partitions()} <= {0, 1}
-
-    # end-to-end: the filtered scan returns exactly the val rows
-    df = read_shards(spark, out)
-    val_rows = df.filter("split = 'val'").count()
-    assert val_rows == sum(p.lines for p in pruned)
-    # unsupported predicates are NOT consumed (Spark re-applies them)
-    reader4 = ShardReader({"path": out})
-    from pyspark.sql.datasource import GreaterThan
-
-    leftover = list(reader4.pushFilters([GreaterThan(("doc_id",), 10)]))
-    assert len(leftover) == 1
-    assert len(reader4.partitions()) == len(all_parts)
-
-
-def test_streaming_shard_ingest_two_waves(spark, tmp_path_factory):
-    """The streaming reader must pick up manifest growth across
-    micro-batches: wave 1 exposes half the shards, wave 2 the full
-    manifest — the drained sink equals the batch read exactly, with no
-    duplicates (offset = consumed shard keys)."""
-    import json as _json
-    import shutil
-
-    from usls_doc_spark.io.export import MANIFEST_NAME
-    from usls_doc_spark.io.shard_source import FORMAT_NAME, register_shard_source
-    from usls_doc_spark.streaming.sink import read_sink_or_empty
-    from usls_doc_spark.io.shard_source import SHARD_SCHEMA
-
-    src = str(tmp_path_factory.mktemp("shard_stream") / "exp")
-    export_from_sf(spark, SF_DIR, src)
-    manifest_path = f"{src}/{MANIFEST_NAME}"
-
-    def _replace_manifest(payload):
-        # Atomic, like the export writer (io/export.py): the stream's
-        # offset-poll thread reads the manifest concurrently, and an
-        # in-place truncate-and-write can expose a half-written file.
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(payload, f)
-        os.replace(tmp, manifest_path)
-
-    full = _json.load(open(manifest_path))
-    keys = sorted(full["shards"])
-    assert len(keys) >= 4
-    half = {k: full["shards"][k] for k in keys[: len(keys) // 2]}
-    _replace_manifest({**full, "shards": half})
-
-    register_shard_source(spark)
-    sink = str(tmp_path_factory.mktemp("shard_stream_sink") / "out")
-    ckpt = str(tmp_path_factory.mktemp("shard_stream_ckpt"))
-    stream = spark.readStream.format(FORMAT_NAME).option("path", src).load()
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(lambda df, _i: df.write.mode("append").parquet(sink))
-        .option("checkpointLocation", ckpt)
-        .queryName("shard_ingest_test")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        wave1 = spark.read.parquet(sink).count()
-        assert wave1 == sum(e["lines"] for e in half.values())
-        # wave 2: the full manifest lands
-        _replace_manifest(full)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = read_sink_or_empty(spark, sink, SHARD_SCHEMA)
-    batch = read_shards(spark, src)
-    assert got.count() == batch.count()  # all rows, exactly once
-    assert got.exceptAll(batch).count() == 0
-    assert batch.exceptAll(got).count() == 0
-    shutil.rmtree(ckpt, ignore_errors=True)

@@ -10,8 +10,9 @@ shard, so this is the natural parallelism), and every partition VERIFIES
 its shard's sha256 + line count against the manifest while reading — a
 corrupt or truncated shard fails loudly at scan time instead of
 poisoning training. This mirrors real table formats (Iceberg/Delta):
-manifest-driven planning, file-level integrity, partition pruning by
-construction (split/shard come from the manifest key, not file paths).
+manifest-driven planning and file-level integrity (split/shard come from
+the manifest key, not file paths). A filter on split or shard is applied
+by Spark after the scan; the reader does not prune partitions.
 
 Scale notes: partitions() runs driver-side on the manifest only (no
 filesystem listing); read() verifies each shard's sha256/line count UP
@@ -19,7 +20,7 @@ FRONT over the raw bytes (so even a LIMIT-terminated scan cannot return
 rows from a corrupt shard), then parses the whole shard in one
 pyarrow.json pass and yields Arrow RecordBatches — no per-row Python
 (round 8; the r7 per-line json.loads demonstration path is gone). The
-source is registered per-session via register_shard_source().
+source is registered with the session by read_shards().
 """
 
 from __future__ import annotations
@@ -29,12 +30,7 @@ import hashlib
 import json
 import os
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 SHARD_SCHEMA = (
     "split string, shard bigint, doc_id bigint, pack_id bigint, "
@@ -58,30 +54,6 @@ class ShardReader(DataSourceReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("usls_shards requires .option('path', <export dir>)")
-        # accepted pushed predicates: {column: allowed value set}
-        self._pruned: dict[str, set] = {}
-
-    def pushFilters(self, filters):
-        """PARTITION PRUNING at planning time (Spark 4.1 filter pushdown):
-        EqualTo/In predicates on the manifest-key columns (split, shard)
-        are consumed here — partitions() then never materializes pruned
-        shards, so a `split = 'val'` scan plans |val shards| partitions
-        out of millions at 100 TB. Every other filter is returned for
-        Spark to evaluate post-scan (pushing them would not prune a
-        partition anyway: shard files are the read granularity)."""
-        from pyspark.sql.datasource import EqualTo, In
-
-        remaining = []
-        for f in filters:
-            col = f.attribute[0] if isinstance(f, (EqualTo, In)) else None
-            if col in ("split", "shard") and len(f.attribute) == 1:
-                vals = {f.value} if isinstance(f, EqualTo) else set(f.value)
-                prev = self._pruned.get(col)
-                self._pruned[col] = vals if prev is None else prev & vals
-            else:
-                remaining.append(f)
-        return remaining
-
     def partitions(self):
         from .export import MANIFEST_NAME
 
@@ -92,10 +64,6 @@ class ShardReader(DataSourceReader):
             # key: 'split=<s>/shard=<k>'
             split = key.split("/")[0].split("=", 1)[1]
             shard = int(key.split("=")[-1])
-            if "split" in self._pruned and split not in self._pruned["split"]:
-                continue
-            if "shard" in self._pruned and shard not in self._pruned["shard"]:
-                continue
             parts.append(
                 ShardPartition(split, shard, os.path.join(self.path, key),
                                int(entry["lines"]), entry["sha256"])
@@ -167,76 +135,6 @@ def _verified_shard_table(shard_dir: str, lines: int, sha256: str,
     )
 
 
-def _read_shard_rows(path: str, key: str, entry: dict):
-    """One shard's rows + the up-front integrity check — the streaming
-    reader's row path (the simple-stream API pickles rows, so this
-    yields tuples from the verified Arrow table)."""
-    split = key.split("/")[0].split("=", 1)[1]
-    shard = int(key.split("=")[-1])
-    table = _verified_shard_table(
-        os.path.join(path, key), int(entry["lines"]), entry["sha256"],
-        split, shard,
-    )
-    cols = [table.column(c).to_pylist() for c in (
-        "split", "shard", "doc_id", "pack_id", "n_tokens", "text")]
-    yield from zip(*cols)
-
-
-class ShardStreamReader(SimpleDataSourceStreamReader):
-    """Streaming ingestion of the export: each micro-batch picks up the
-    manifest's shards not yet committed — the trainer-side 'consume
-    shards as the curation pipeline lands them' loop as a Structured
-    Streaming source. The offset is the sorted list of consumed shard
-    keys (JSON-serializable; a production variant would collapse it to a
-    per-split high-watermark once shard ids are monotone). Replay
-    between two offsets is deterministic — the shard set difference —
-    so exactly-once foreachBatch sinks recover cleanly, and every shard
-    is sha256-verified on (re)read."""
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("usls_shards requires .option('path', <export dir>)")
-
-    def _manifest(self) -> dict:
-        from .export import MANIFEST_NAME
-
-        try:
-            with open(os.path.join(self.path, MANIFEST_NAME)) as f:
-                return json.load(f)["shards"]
-        except FileNotFoundError:
-            return {}
-
-    def initialOffset(self) -> dict:
-        return {"done": []}
-
-    def read(self, start: dict):
-        shards = self._manifest()
-        done = set(start.get("done", []))
-        new = [k for k in sorted(shards) if k not in done]
-        # materialized, not a generator: the simple-stream API prefetches
-        # the batch driver-side and pickles it to executors (this is the
-        # documented low-throughput path — a cluster-scale variant would
-        # be a full DataSourceStreamReader with per-shard partitions,
-        # which the batch ShardReader already demonstrates)
-        rows = [
-            r for k in new for r in _read_shard_rows(self.path, k, shards[k])
-        ]
-        # a strict iterator over a materialized list: the harness calls
-        # next() on it (empty-batch validation) and pickles the cached
-        # entry — a lazy generator would fail the pickle
-        return iter(rows), {"done": sorted(done | set(new))}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        shards = self._manifest()
-        done = set(start.get("done", []))
-        for k in sorted(set(end.get("done", [])) - done):
-            yield from _read_shard_rows(self.path, k, shards[k])
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets are self-contained; nothing external to ack
-
-
 class ShardDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -248,23 +146,10 @@ class ShardDataSource(DataSource):
     def reader(self, schema) -> ShardReader:
         return ShardReader(self.options)
 
-    def simpleStreamReader(self, schema) -> ShardStreamReader:
-        return ShardStreamReader(self.options)
-
-
-def register_shard_source(spark) -> None:
-    """Idempotent per-session registration. Python-source filter pushdown
-    is opt-in (Spark 4.1) and required once a reader implements
-    pushFilters — enabled here, runtime-settable."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(ShardDataSource)
-
 
 def read_shards(spark, export_dir: str):
-    register_shard_source(spark)
-    return (
-        spark.read.format(FORMAT_NAME).option("path", export_dir).load()
-    )
+    spark.dataSource.register(ShardDataSource)  # idempotent per session
+    return spark.read.format(FORMAT_NAME).option("path", export_dir).load()
 
 
 def export_roundtrip(spark, sf_dir: str):

@@ -51,6 +51,10 @@ def url_for(doc_id: int) -> str:
     return f"https://example.org/doc/{doc_id:08d}"
 
 
+# url_for in DuckDB SQL, over doc_id
+URL_SQL = "'https://example.org/doc/' || lpad(CAST(doc_id AS VARCHAR), 8, '0')"
+
+
 def chunk_text(text: str) -> list[str]:
     words = text.split(" ")
     return [" ".join(words[i : i + CHUNK_WORDS]) for i in range(0, len(words), CHUNK_WORDS)]

@@ -33,6 +33,7 @@ from ..io.synth import (
     SKEW_SQL,
     TABLE_ROW_COUNT_SQL,
     TWOCOL_SQL,
+    URL_SQL,
 )
 from ..pipeline.crossing import map_rows
 
@@ -177,7 +178,7 @@ codes AS (
 )"""
 
 MULTIMODAL_ORACLE = f"""{_PAGE_CODES_CTES}
-SELECT 'https://example.org/doc/' || lpad(CAST(doc_id AS VARCHAR), 8, '0') AS url,
+SELECT {URL_SQL} AS url,
        n AS n_bytes,
        lower(hex(encode(substr(html, 1, 4)))) AS magic,
        CAST(list_sum(cs) AS DOUBLE) / n AS mean_byte,
@@ -246,7 +247,7 @@ frames AS (
            AS step
   FROM codes
 )
-SELECT 'https://example.org/doc/' || lpad(CAST(doc_id AS VARCHAR), 8, '0') AS url,
+SELECT {URL_SQL} AS url,
        CAST(fi AS INT) AS frame_id,
        fi * {FRAME_BYTES} AS frame_off,
        least(n - fi * {FRAME_BYTES}, {FRAME_BYTES}) AS frame_len,

@@ -17,7 +17,13 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..io.synth import CHUNKS_SQL, LAST_WORDS_SQL, RENDERS_TABLE_SQL, TABLE_ROW_COUNT_SQL
+from ..io.synth import (
+    CHUNKS_SQL,
+    LAST_WORDS_SQL,
+    RENDERS_TABLE_SQL,
+    TABLE_ROW_COUNT_SQL,
+    URL_SQL,
+)
 from ..kernels.boilerplate import classify_block, parse_blocks
 from ..kernels.table_structure import decode_table_structure
 from .crossing import map_rows
@@ -145,7 +151,7 @@ g AS (
                    ELSE (i - ex * (bs + 1)) % bs END AS INT) AS col_id
   FROM cells
 )
-SELECT 'https://example.org/doc/' || lpad(CAST(doc_id AS VARCHAR), 8, '0') AS url,
+SELECT {URL_SQL} AS url,
        cell_id, row_id, col_id,
        CAST(64 * col_id AS FLOAT) AS x1, CAST(64 * row_id AS FLOAT) AS y1,
        CAST(64 * (col_id + 1) AS FLOAT) AS x2, CAST(64 * row_id AS FLOAT) AS y2,

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..io.synth import URL_SQL
 from ..kernels.boilerplate import classify_block, parse_blocks
 from ..kernels.ocr import greedy_generate
 from ..kernels.sampler import sample_topp, xorshift64s
@@ -123,8 +124,8 @@ def trocr_transcripts(spark, sf_dir: str):
     return map_rows(pages.select("url", "html"), transcribe_page, TROCR_SCHEMA)
 
 
-TROCR_ORACLE = """
-SELECT 'https://example.org/doc/' || lpad(CAST(doc_id AS VARCHAR), 8, '0') AS url,
+TROCR_ORACLE = f"""
+SELECT {URL_SQL} AS url,
        array_to_string((string_split(text, ' '))[1:8], ' ') AS transcript,
        substr(array_to_string((string_split(text, ' '))[1:8], ' '), 1, 16) AS capped_transcript,
        array_to_string((string_split(text, ' '))[1:8], ' ') AS sampled_transcript

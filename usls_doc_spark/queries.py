@@ -19,7 +19,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .io.synth import CHUNKS_SQL, RENDERS_TABLE_SQL, SKEW_SQL, pages_from_documents
+from .io.synth import CHUNKS_SQL, RENDERS_TABLE_SQL, SKEW_SQL, URL_SQL, pages_from_documents
 from .operators import relational
 from .operators.dialect import DUCK, SPARK, Dialect
 from .operators.multimodal import MULTIMODAL_ORACLE, multimodal_features
@@ -34,10 +34,6 @@ TABLES = (
 
 
 def _register_views(spark: SparkSession, sf_dir: str) -> None:
-    # AQE coalesces the post-shuffle partitions the host session may have
-    # oversized (e.g. the 200 default) — harmless if already enabled
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     # The views come from relational._t's cached parquet handles but are
     # re-registered on every call, so a caller (tests) that overrode a view
     # with synthetic data gets it re-pointed at the parquet table, and
@@ -59,8 +55,8 @@ def extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_pages(pages, columns=["url", "extracted_text"])
 
 
-EXTRACT_TEXT_ORACLE = """
-SELECT 'https://example.org/doc/' || lpad(CAST(doc_id AS VARCHAR), 8, '0') AS url,
+EXTRACT_TEXT_ORACLE = f"""
+SELECT {URL_SQL} AS url,
        'Doc ' || CAST(doc_id AS VARCHAR) || ' ' || text AS extracted_text
 FROM documents
 """
@@ -72,7 +68,7 @@ def extract_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EXTRACT_METRICS_ORACLE = f"""
-SELECT 'https://example.org/doc/' || lpad(CAST(doc_id AS VARCHAR), 8, '0') AS url,
+SELECT {URL_SQL} AS url,
        CAST(1 + len({CHUNKS_SQL})
               + (CASE WHEN {SKEW_SQL} THEN 1 ELSE 0 END) AS INT) AS n_blocks,
        octet_length(encode('Doc ' || CAST(doc_id AS VARCHAR) || ' ' || text)) AS extracted_bytes
@@ -93,7 +89,7 @@ def ocr_spans_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 # table pages render their LAST chunk as a <table> block (cls 'table', not
 # 'plain text'), so the OCR path sees one fewer region on those pages
 OCR_SPANS_ORACLE = f"""
-SELECT 'https://example.org/doc/' || lpad(CAST(doc_id AS VARCHAR), 8, '0') AS url,
+SELECT {URL_SQL} AS url,
        generate_subscripts(body, 1) - 1 AS region_id,
        unnest(body) AS span_text
 FROM (
