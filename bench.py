@@ -232,7 +232,9 @@ def main() -> None:
     # VERDICT item 2: the 78-entry "queries" dict outgrew the capture and
     # BENCH_r06.json recorded parsed: null). The printed line keeps the
     # 10 most expensive queries plus per-family subtotals.
-    full_path = pathlib.Path(__file__).resolve().parent / "BENCH" / "bench_full_latest.json"
+    # The file lives in the ignored .bench_out/ beside perfbench's records,
+    # so a run leaves the working tree clean.
+    full_path = pathlib.Path(__file__).resolve().parent / ".bench_out" / "bench_full.json"
     full_path.parent.mkdir(exist_ok=True)
     full_path.write_text(json.dumps({**meta, "queries": timings}, indent=1) + "\n")
 

@@ -73,3 +73,21 @@ def test_corrupted_shard_fails_integrity_check(spark, tmp_path_factory):
     open(victim, "wb").write(data)
     with pytest.raises(Exception, match="integrity check failed"):
         read_shards(spark, out).count()
+
+
+def test_read_shards_registers_source_once_per_session(spark, tmp_path, monkeypatch):
+    """Back-to-back reads register the usls_shards source at most once:
+    each register() replaces the source and logs a warning."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    calls = []
+    register = DataSourceRegistration.register
+
+    def counting(self, source):
+        calls.append(source)
+        return register(self, source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counting)
+    read_shards(spark, str(tmp_path))
+    read_shards(spark, str(tmp_path))
+    assert len(calls) <= 1

@@ -178,7 +178,7 @@ def test_semantic_cells_exec_when_cell_cap_binds(spark, tmp_path):
         .selectExpr("vec_id", *_quant_exprs())
         .localCheckpoint()
     )
-    cents = _trained_centroids(spark, base)
+    cents = _trained_centroids(base)
     Q = np.array(
         [[r[q] for q in _QCOLS] for r in base.collect()], dtype=np.int64
     )

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from ..pipeline.crossing import map_rows
 
 MANIFEST_NAME = "_export_manifest.json"  # '_' prefix: invisible to readers
+PACKS_PER_SHARD = 4  # packs binned into one shard file
 
 
 # --- URI-generic small-file IO (manifest lives next to the shards, which
@@ -151,7 +152,7 @@ def export_jsonl_shards(
     packed: DataFrame,
     docs: DataFrame,
     out_dir: str,
-    packs_per_shard: int = 4,
+    packs_per_shard: int = PACKS_PER_SHARD,
     resume: bool = False,
 ) -> dict:
     """Write ``out_dir/split=<s>/shard=<k>/part-*.txt`` JSONL shards from a
@@ -245,8 +246,7 @@ def export_jsonl_shards(
     }
 
 
-def export_from_sf(spark: SparkSession, sf_dir: str, out_dir: str,
-                   packs_per_shard: int = 4) -> dict:
+def export_from_sf(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     """Convenience wrapper: run split_and_pack over ``sf_dir`` documents
     and export the shards."""
     from ..operators.text_queries import render_spark
@@ -255,4 +255,4 @@ def export_from_sf(spark: SparkSession, sf_dir: str, out_dir: str,
     _register_views(spark, sf_dir)
     packed = spark.sql(render_spark("split_and_pack"))
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return export_jsonl_shards(packed, docs, out_dir, packs_per_shard)
+    return export_jsonl_shards(packed, docs, out_dir)

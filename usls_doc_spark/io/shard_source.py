@@ -148,7 +148,11 @@ class ShardDataSource(DataSource):
 
 
 def read_shards(spark, export_dir: str):
-    spark.dataSource.register(ShardDataSource)  # idempotent per session
+    # register once per session: each register() replaces the source and
+    # logs a warning (same session-attribute pattern as relational._t)
+    if not getattr(spark, "_usls_shards_registered", False):
+        spark.dataSource.register(ShardDataSource)
+        spark._usls_shards_registered = True
     return spark.read.format(FORMAT_NAME).option("path", export_dir).load()
 
 
@@ -178,12 +182,13 @@ def export_roundtrip_oracle() -> str:
     binning arithmetic + the document text — no filesystem involved."""
     from ..operators.dialect import DUCK
     from ..operators.text_queries import TEXT_QUERIES
+    from .export import PACKS_PER_SHARD
 
     sp = TEXT_QUERIES["split_and_pack"](DUCK)
     return f"""
 WITH sp AS ({sp})
 SELECT sp.split,
-       CAST(sp.pack_id // 4 AS BIGINT) AS shard,
+       CAST(sp.pack_id // {PACKS_PER_SHARD} AS BIGINT) AS shard,
        sp.doc_id,
        sp.pack_id,
        sp.n_tokens,

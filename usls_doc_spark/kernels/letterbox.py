@@ -74,7 +74,7 @@ def boxes_to_original(boxes_xywh: np.ndarray, spec: LetterboxSpec) -> np.ndarray
     return b
 
 
-def letterbox_image(plane_u8: np.ndarray, spec: LetterboxSpec, pad_value: int = 114) -> np.ndarray:
+def letterbox_image(plane_u8: np.ndarray, spec: LetterboxSpec) -> np.ndarray:
     """P1-P3 RASTER path for one u8 plane (the pixel application of the
     coordinate math above): resize to (round(h0·r), round(w0·r)) with the
     exact-u8 bilinear kernel (ops.resize_luma8_u8), then pad the th×tw
@@ -87,7 +87,7 @@ def letterbox_image(plane_u8: np.ndarray, spec: LetterboxSpec, pad_value: int = 
     r = np.float32(spec.ratio)
     w = int(np.rint(np.float32(spec.w0) * r))
     h = int(np.rint(np.float32(spec.h0) * r))
-    canvas = np.full((spec.th, spec.tw), np.uint8(pad_value), dtype=np.uint8)
+    canvas = np.full((spec.th, spec.tw), np.uint8(114), dtype=np.uint8)
     resized = resize_luma8_u8(plane, h, w)
     canvas[spec.pad_top : spec.pad_top + h, spec.pad_left : spec.pad_left + w] = resized
     return canvas

@@ -31,11 +31,12 @@ def normalize(x: np.ndarray) -> np.ndarray:
     return (x - np.float32(lo)) / np.float32(hi - lo)
 
 
-def standardize(x: np.ndarray, mean, std, channel_axis: int = -1) -> np.ndarray:
-    """P5: per-channel (x - mean) / std (ops.rs:80-117)."""
+def standardize(x: np.ndarray, mean, std) -> np.ndarray:
+    """P5: per-channel (x - mean) / std over the last (channel) axis
+    (ops.rs:80-117)."""
     x = np.asarray(x, dtype=np.float32)
     shape = [1] * x.ndim
-    shape[channel_axis] = -1
+    shape[-1] = -1
     m = np.asarray(mean, dtype=np.float32).reshape(shape)
     s = np.asarray(std, dtype=np.float32).reshape(shape)
     return (x - m) / s
@@ -81,10 +82,10 @@ def sigmoid(x: np.ndarray) -> np.ndarray:
         return 1.0 / (1.0 + np.exp(-x))
 
 
-def l2_norm(x: np.ndarray, axis: int = -1) -> np.ndarray:
-    """P10: row-normalize along axis (ops.rs:176-190)."""
+def l2_norm(x: np.ndarray) -> np.ndarray:
+    """P10: row-normalize along the last axis (ops.rs:176-190)."""
     x = np.asarray(x, dtype=np.float32)
-    n = np.sqrt((x * x).sum(axis=axis, keepdims=True))
+    n = np.sqrt((x * x).sum(axis=-1, keepdims=True))
     return x / np.where(n == 0, 1.0, n)
 
 

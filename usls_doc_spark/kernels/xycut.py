@@ -22,9 +22,9 @@ import numpy as np
 
 
 def _segments_1d(
-    starts: np.ndarray, ends: np.ndarray, min_gap: float
+    starts: np.ndarray, ends: np.ndarray
 ) -> tuple[list[np.ndarray], list[float], float]:
-    """Split an interval set into groups separated by projection gaps > min_gap.
+    """Split an interval set into groups separated by projection gaps.
 
     Returns (index-array groups ordered by position, the gap width before
     each group except the first, widest gap — 0.0 if a single group).
@@ -36,7 +36,7 @@ def _segments_1d(
     reach = -np.inf
     max_gap = 0.0
     for i in order:
-        if current and starts[i] - reach > min_gap:
+        if current and starts[i] > reach:
             g = float(starts[i] - reach)
             max_gap = max(max_gap, g)
             gaps.append(g)
@@ -65,7 +65,7 @@ def _merge_below(
     return merged
 
 
-def xycut_order(boxes_xywh: np.ndarray, min_gap: float = 0.0) -> np.ndarray:
+def xycut_order(boxes_xywh: np.ndarray) -> np.ndarray:
     """Return a permutation of box indices in reading order."""
     boxes = np.asarray(boxes_xywh, dtype=np.float64)
     n = len(boxes)
@@ -81,8 +81,8 @@ def xycut_order(boxes_xywh: np.ndarray, min_gap: float = 0.0) -> np.ndarray:
         if len(idx) <= 1:
             out.extend(int(i) for i in idx)
             return
-        y_groups, y_gaps, y_gap = _segments_1d(y1[idx], y2[idx], min_gap)
-        x_groups, x_gaps, x_gap = _segments_1d(x1[idx], x2[idx], min_gap)
+        y_groups, y_gaps, y_gap = _segments_1d(y1[idx], y2[idx])
+        x_groups, x_gaps, x_gap = _segments_1d(x1[idx], x2[idx])
         if len(y_groups) == 1 and len(x_groups) == 1:
             # no whitespace band on either axis: stable leaf order (y, x, index)
             leaf = idx[np.lexsort((idx, x1[idx], y1[idx]))]

@@ -22,7 +22,7 @@ algorithm is min-id label propagation to convergence:
   O(V*E) and fine at oracle scale; the Spark loop is the scale path.
 
 Edges are the LSH candidate pairs verified at exact shingle-Jaccard >=
-0.5 over ALL documents (text_queries.build_verified_pairs — the same
+JACCARD_MIN over ALL documents (text_queries.build_verified_pairs — the same
 verify rule corpus_curation applies, but WITHOUT its quality pre-gate, so
 the two operators' edge sets differ on quality-failing docs by design).
 Output: every doc that participates in at least one verified pair, its
@@ -186,17 +186,13 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def components_oracle() -> str:
-    from .text_queries import _jaccard_exprs, _lsh_jaccard_ctes
+    from .text_queries import _lsh_candidates, _shingle_sets, _verified_pairs
 
-    inter, alen, blen = _jaccard_exprs(DUCK)
     return f"""
-WITH RECURSIVE {_lsh_jaccard_ctes(DUCK)},
+WITH RECURSIVE ds AS ({_shingle_sets(DUCK)}),
+{_lsh_candidates(DUCK, 'ds')},
 pairs_sel AS (
-  SELECT c.doc_a, c.doc_b
-  FROM cands c
-  JOIN ds a ON a.doc_id = c.doc_a
-  JOIN ds b ON b.doc_id = c.doc_b
-  WHERE CAST({inter} AS DOUBLE) / ({alen} + {blen} - {inter}) >= 0.5
+  {_verified_pairs(DUCK, 'ds')}
 ),
 edges AS (
   SELECT doc_a AS src, doc_b AS dst FROM pairs_sel

@@ -5,8 +5,8 @@ decode/feature-extract per row through the Arrow-batched crossing
 The reference decodes images via the `image` crate inside DataLoader
 (/root/reference/src/misc/dataloader.rs:388-416, RGB8 forced) and resizes
 via fast_image_resize (ops.rs:366-450). The image/audio libraries are not
-in this container, so the DECODE step is a clearly-marked stub
-(`decode_image`) with a deterministic fake feature extractor standing in —
+in this container, so the DECODE step is absent and a deterministic fake
+feature extractor (`_fake_features`) stands in —
 the Spark-side plumbing (binary column, schema, batch shape, partitioning)
 is real and tested. Swap `_fake_features` for a PIL/cv2 call in production.
 
@@ -43,14 +43,6 @@ MULTIMODAL_SCHEMA = (
     "url string, n_bytes bigint, magic string, mean_byte double, n_frames int, "
     + ", ".join(f"f{j} float" for j in range(N_FEATURES))
 )
-
-
-def decode_image(data: bytes):  # pragma: no cover - documented stub
-    """Real image decode (PIL/cv2) — unavailable in this environment."""
-    raise NotImplementedError(
-        "image decode requires PIL/cv2; use _fake_features for the "
-        "deterministic test path"
-    )
 
 
 def _fake_features(arr: np.ndarray) -> np.ndarray:

@@ -26,14 +26,14 @@ DIMS = 64
 N_PLANES = 6  # 2^6 = 64 buckets
 
 
-def _hadamard_dot(d: Dialect, emb: str, j: int, dims: int = DIMS) -> str:
+def _hadamard_dot(d: Dialect, emb: str, j: int) -> str:
     """Dot of ``emb`` with structured hyperplane j: sign +1 where bit j of
     (dim-1) is 0, else -1. Deterministic, RNG-free, identical in both
     dialects, balanced-tree association (see dialect.balanced_sum)."""
     from .dialect import balanced_sum
 
     terms = []
-    for k in range(1, dims + 1):
+    for k in range(1, DIMS + 1):
         sign = "-" if ((k - 1) >> j) & 1 else ""
         terms.append(f"({sign}CAST({d.element(emb, str(k))} AS DOUBLE))")
     return balanced_sum(terms)

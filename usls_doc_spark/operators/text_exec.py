@@ -40,6 +40,13 @@ from .text_queries import (
     SIMHASH_BAND_CAP,
     SIMHASH_BANDS,
     SIMHASH_HAM_MAX,
+    _curation_survivors,
+    _exact_pairs,
+    _lsh_candidates,
+    _ngram_jaccard_top,
+    _quality_gate,
+    _shingle_sets,
+    _verified_pairs,
     _words,
 )
 
@@ -264,98 +271,39 @@ WHERE {hamming} <= {SIMHASH_HAM_MAX}
 """)
 
 
-def _lsh_tail_sql(ds_view: str) -> str:
-    """sigs/bands/cands CTE text over a MATERIALIZED ds view — the
-    Spark rendering of _lsh_jaccard_ctes' candidate stage with `ds`
-    replaced by the view (4 single-minhash bands, capped buckets,
-    distinct candidate pairs)."""
-    from .text_queries import _capped_bands
-
-    d = SPARK
-    mh_cols = ", ".join(
-        d.array_min(d.array_transform("sh", "s", d.md5(f"'{j}:' || s")))
-        + f" AS mh{j}"
-        for j in range(4)
-    )
-    mh_array = "array(" + ", ".join(f"mh{j}" for j in range(4)) + ")"
-    bands = (
-        f"SELECT doc_id, band, band_key FROM sigs "
-        f"LATERAL VIEW posexplode({mh_array}) t AS band, band_key"
-    )
-    return f"""sigs AS (SELECT doc_id, {mh_cols} FROM {ds_view}),
-{_capped_bands(bands)},
-cands AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-)"""
-
-
-def _ds_mat(spark: SparkSession, view: str) -> None:
-    """Materialize the template's `ds` CTE (distinct word 3-shingles per
-    document, _lsh_jaccard_ctes' text) once and register it as ``view``."""
-    d = SPARK
-    sh = d.array_distinct(d.shingles("ws", 3))
-    materialize(spark.sql(
-        f"SELECT doc_id, {sh} AS sh "
-        f"FROM (SELECT doc_id, {_words(d)} AS ws FROM documents)"
-    ), view)
+def _ds_mat(spark: SparkSession, view: str) -> str:
+    """Materialize the templates' `ds` relation (distinct word 3-shingles
+    per document) once, register it as ``view`` and return its name."""
+    materialize(spark.sql(_shingle_sets(SPARK)), view)
+    return view
 
 
 def dedup_ngram_jaccard_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_ngram_jaccard with the distinct-shingle table materialized
     ONCE (the template's ds CTE is referenced by sigs and both verify
     sides — 8 parquet scans via inlining,
-    plans/r08/dedup_ngram_jaccard_before.txt)."""
+    plans/r08/dedup_ngram_jaccard_before.txt); the rest is the template's
+    text over the view."""
     from ..queries import _register_views
-    from .text_queries import _jaccard_exprs
 
     _register_views(spark, sf_dir)
-    d = SPARK
-    _ds_mat(spark, "_lsh_ds_mat")
-    inter, alen, blen = _jaccard_exprs(d)
-    return spark.sql(f"""
-WITH {_lsh_tail_sql("_lsh_ds_mat")},
-verified AS (
-  SELECT c.doc_a, c.doc_b,
-         {inter} AS shared,
-         {alen} AS na,
-         {blen} AS nb
-  FROM cands c
-  JOIN _lsh_ds_mat a ON a.doc_id = c.doc_a
-  JOIN _lsh_ds_mat b ON b.doc_id = c.doc_b
-)
-SELECT doc_a, doc_b, shared,
-       CAST(shared AS DOUBLE) / (na + nb - shared) AS jaccard
-FROM verified
-ORDER BY CAST(shared AS DOUBLE) / (na + nb - shared) DESC, doc_a, doc_b
-LIMIT 20
-""")
+    ds = _ds_mat(spark, "_lsh_ds_mat")
+    return spark.sql(f"WITH {_ngram_jaccard_top(SPARK, ds)}")
 
 
-def verified_pairs_mat(spark: SparkSession, threshold: float = 0.5) -> DataFrame:
+def verified_pairs_mat(spark: SparkSession) -> DataFrame:
     """build_verified_pairs (the near-dup edge list) with ds materialized
     once and the result materialized — the Spark-side execution
     dedup_components feeds its label-propagation loop. The template
     inlines ds into sigs and both verify-join sides (the
     dedup_ngram_jaccard 8-scan shape), and the CC loop's undirected
     union then evaluates the whole chain once PER UNION BRANCH before
-    the cache materializes. Value expressions are the template's text
-    verbatim (same Jaccard filter, same threshold formatting), so the
-    edge set is identical row-for-row."""
-    from .text_queries import _jaccard_exprs
-
-    d = SPARK
-    _ds_mat(spark, "_vp_ds_mat")
-    inter, alen, blen = _jaccard_exprs(d)
-    return materialize(spark.sql(f"""
-WITH {_lsh_tail_sql("_vp_ds_mat")}
-SELECT c.doc_a, c.doc_b
-FROM cands c
-JOIN _vp_ds_mat a ON a.doc_id = c.doc_a
-JOIN _vp_ds_mat b ON b.doc_id = c.doc_b
-WHERE CAST({inter} AS DOUBLE) / ({alen} + {blen} - {inter}) >= {threshold}
-"""))
+    the cache materializes. The rest is the template's text over the
+    view, so the edge set is identical row-for-row."""
+    ds = _ds_mat(spark, "_vp_ds_mat")
+    return materialize(spark.sql(
+        f"WITH {_lsh_candidates(SPARK, ds)}\n{_verified_pairs(SPARK, ds)}"
+    ))
 
 
 def lsh_recall_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -366,34 +314,22 @@ def lsh_recall_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands runs the sigs/bands chain — CTE inlining re-ran everything per
     reference: 52 parquet scans in the executed plan
     (plans/r08/lsh_recall_before.txt), 12 s isolated at sf0.1 for a
-    one-row answer. The exec materializes each stage once; every value
-    expression (the Jaccard filter, the counts, the single recall
-    division) is the template's text verbatim, so the one output row is
-    identical. The inv self-join stays by design — it is the EXHAUSTIVE
-    exact side that makes this the measurement harness (docstring of the
-    template); materialization removes only the re-execution."""
+    one-row answer. The exec materializes each stage once; the candidate
+    and exact stages are the template's own renderers over the view and
+    the counts and the single recall division are the template's text
+    verbatim, so the one output row is identical. The inv self-join stays by design — it is the
+    EXHAUSTIVE exact side that makes this the measurement harness
+    (docstring of the template); materialization removes only the
+    re-execution."""
     from ..queries import _register_views
-    from .text_queries import _jaccard_exprs
 
     _register_views(spark, sf_dir)
-    d = SPARK
-    _ds_mat(spark, "_lshr_ds_mat")
+    ds = _ds_mat(spark, "_lshr_ds_mat")
     materialize(spark.sql(
-        f"WITH {_lsh_tail_sql('_lshr_ds_mat')} SELECT doc_a, doc_b FROM cands"
+        f"WITH {_lsh_candidates(SPARK, ds)} SELECT doc_a, doc_b FROM cands"
     ), "_lshr_cands_mat")
-    inter, alen, blen = _jaccard_exprs(d)
-    materialize(spark.sql(f"""
-WITH inv AS (SELECT doc_id, s FROM _lshr_ds_mat LATERAL VIEW explode(sh) t AS s),
-xpairs AS (
-  SELECT DISTINCT i.doc_id AS doc_a, j.doc_id AS doc_b
-  FROM inv i JOIN inv j ON i.s = j.s AND i.doc_id < j.doc_id
-)
-SELECT p.doc_a, p.doc_b
-FROM xpairs p
-JOIN _lshr_ds_mat a ON a.doc_id = p.doc_a
-JOIN _lshr_ds_mat b ON b.doc_id = p.doc_b
-WHERE CAST({inter} AS DOUBLE) / ({alen} + {blen} - {inter}) >= 0.5
-"""), "_lshr_exact_mat")
+    exact_ctes, exact = _exact_pairs(SPARK, ds)
+    materialize(spark.sql(f"WITH {exact_ctes}\n{exact}"), "_lshr_exact_mat")
     return spark.sql("""
 WITH hits AS (
   SELECT count(*) AS n_hits
@@ -413,35 +349,18 @@ def corpus_curation_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """corpus_curation with the quality-gated shingle table materialized
     ONCE (the template's ds is referenced by sigs, both verify sides AND
     the final survivor select — 10 parquet scans via inlining,
-    plans/r08/corpus_curation_before.txt)."""
+    plans/r08/corpus_curation_before.txt); the rest is the template's
+    text over the view."""
     from ..queries import _register_views
-    from .text_queries import STOPWORDS, _jaccard_exprs, _words
 
     _register_views(spark, sf_dir)
     d = SPARK
-    w = _words(d)
-    sh = d.array_distinct(d.shingles("ws", 3))
-    en = ", ".join(f"'{t}'" for t in STOPWORDS["en"])
     materialize(spark.sql(f"""
-SELECT doc_id, lang, n_chars, {sh} AS sh FROM (
+SELECT doc_id, lang, n_chars, {d.array_distinct(d.shingles("ws", 3))} AS sh FROM (
   SELECT doc_id, lang, n_chars, ws FROM (
-    SELECT doc_id, lang, n_chars, {w} AS ws FROM documents
+    SELECT doc_id, lang, n_chars, {_words(d)} AS ws FROM documents
   ) base
-  WHERE {d.array_len("ws")} >= 20
-    AND CAST({d.array_filter_count("ws", "x", f"x IN ({en})")} AS DOUBLE)
-        / {d.array_len("ws")} >= 0.02
+  WHERE {_quality_gate(d)}
 ) quality
 """), "_cc_ds_mat")
-    inter, alen, blen = _jaccard_exprs(d)
-    return spark.sql(f"""
-WITH {_lsh_tail_sql("_cc_ds_mat")},
-dups AS (
-  SELECT c.doc_b AS drop_id
-  FROM cands c
-  JOIN _cc_ds_mat a ON a.doc_id = c.doc_a
-  JOIN _cc_ds_mat b ON b.doc_id = c.doc_b
-  WHERE CAST({inter} AS DOUBLE) / ({alen} + {blen} - {inter}) >= 0.5
-)
-SELECT doc_id, lang, n_chars FROM _cc_ds_mat ds
-WHERE NOT EXISTS (SELECT 1 FROM dups WHERE dups.drop_id = ds.doc_id)
-""")
+    return spark.sql(f"WITH {_curation_survivors(d, '_cc_ds_mat')}")

@@ -81,6 +81,15 @@ FROM (SELECT doc_id, lang, {inner} FROM (SELECT doc_id, lang, {w} AS ws FROM doc
 """
 
 
+def _quality_gate(d: Dialect) -> str:
+    """The curation quality gate over the word array `ws`: at least 20
+    words, English stop-word share at least 0.02."""
+    en = ", ".join(f"'{t}'" for t in STOPWORDS["en"])
+    return f"""{d.array_len("ws")} >= 20
+    AND CAST({d.array_filter_count("ws", "x", f"x IN ({en})")} AS DOUBLE)
+        / {d.array_len("ws")} >= 0.02"""
+
+
 def q_quality_score(d: Dialect) -> str:
     """Arc90-flavored quality scoring columns (all exact-order doubles)."""
     w = _words(d)
@@ -90,8 +99,7 @@ SELECT doc_id,
        CAST({d.array_filter_count("ws", "x", f"x IN ({en})")} AS DOUBLE) / {d.array_len("ws")} AS stopword_ratio,
        CAST({d.array_filter_count("ws", "x", "length(x) > 7")} AS DOUBLE) / {d.array_len("ws")} AS long_word_ratio,
        CAST(length(replace(text, ' ', '')) AS DOUBLE) / {d.array_len("ws")} AS mean_word_len,
-       CASE WHEN {d.array_len("ws")} >= 20
-             AND CAST({d.array_filter_count("ws", "x", f"x IN ({en})")} AS DOUBLE) / {d.array_len("ws")} >= 0.02
+       CASE WHEN {_quality_gate(d)}
             THEN 1 ELSE 0 END AS quality_keep
 FROM (SELECT doc_id, text, {w} AS ws FROM documents)
 """
@@ -233,39 +241,105 @@ SELECT doc_id, lang, dup_key FROM survivors WHERE _rk = 1
 """
 
 
+LSH_BANDS = 8  # single-minhash bands of dedup_minhash_lsh and its stream
+JACCARD_BANDS = 4  # single-minhash bands of the verified-Jaccard family
+JACCARD_MIN = 0.5  # near-dup rule: exact shingle Jaccard >= 0.5
 BAND_CAP = 64  # max docs per (band, band_key) bucket entering the self-join
 
+# the bucket self-join that turns shared band keys into candidate pairs
+_BAND_PAIRS = """FROM bands a JOIN bands b
+  ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id"""
 
-def _capped_bands(bands: str, cap: int = BAND_CAP) -> str:
-    """Band CTEs with a per-bucket membership cap (round-1 VERDICT item 8).
+
+def _shingle_sets(d: Dialect) -> str:
+    """The `ds` relation: (doc_id, sh) with sh the distinct 3-shingles."""
+    return (
+        f"SELECT doc_id, {d.array_distinct(d.shingles('ws', 3))} AS sh "
+        f"FROM (SELECT doc_id, {_words(d)} AS ws FROM documents)"
+    )
+
+
+def _minhashes(d: Dialect, n_bands: int) -> list[str]:
+    """The md5 MinHash signature of the shingle array `sh`: minhash j is
+    the least md5('j:' || shingle), one per single-minhash band."""
+    return [
+        d.array_min(d.array_transform("sh", "s", d.md5(f"'{j}:' || s")))
+        for j in range(n_bands)
+    ]
+
+
+def _lsh_bands(d: Dialect, ds: str, n_bands: int) -> str:
+    """sigs / bands_raw / bands CTEs over the shingle sets in ``ds``: one
+    row per (doc, band) keyed by that band's minhash, each (band,
+    band_key) bucket capped at BAND_CAP members (round-1 VERDICT item 8).
 
     Without a cap, a degenerate hot band key (boilerplate text shared by k
     documents) produces k² candidate pairs in the self-join — the one way
-    an LSH plan can still blow up at 100 TB. The cap keeps the ``cap``
+    an LSH plan can still blow up at 100 TB. The cap keeps the BAND_CAP
     smallest doc_ids per (band, band_key): pair output per bucket is
     bounded by cap²/2, and the choice is deterministic (ordered by doc_id)
     and identical in both dialects so the oracle stays exact.
 
-    Recall tradeoff: members of a >cap bucket beyond the first ``cap``
+    Recall tradeoff: members of a >cap bucket beyond the first BAND_CAP
     lose the pairs that bucket would have contributed; for dedup this
-    under-merges clusters larger than ``cap`` (they remain candidates via
+    under-merges clusters larger than the cap (they remain candidates via
     their other, less-degenerate bands).
 
     MEASURED (q_lsh_recall, exhaustive inverted-index ground truth at
-    Jaccard >= 0.5): recall = 1.0 at sf0.001 (28/28 true pairs), sf0.01
-    (25/25) AND sf0.1 (256/256, 42167 candidates — round-3 VERDICT item
-    5; BENCH/BASELINE.md) — the caps cost nothing on this corpus because
-    no true near-dup cluster exceeds BAND_CAP members. Floor asserted >=
-    0.95 by the slow-marked tests/test_lsh_band_cap.py::test_recall_sf01.
+    Jaccard >= JACCARD_MIN): recall = 1.0 at sf0.001 (28/28 true pairs),
+    sf0.01 (25/25) AND sf0.1 (256/256, 42167 candidates — round-3 VERDICT
+    item 5; BENCH/BASELINE.md) — the caps cost nothing on this corpus
+    because no true near-dup cluster exceeds BAND_CAP members. Floor
+    asserted >= 0.95 by the slow-marked
+    tests/test_lsh_band_cap.py::test_recall_sf01.
     """
-    return f"""bands_raw AS ({bands}),
+    mh_cols = ", ".join(f"{m} AS mh{j}" for j, m in enumerate(_minhashes(d, n_bands)))
+    if d.name == "spark":
+        # posexplode of the signature array: sigs evaluated ONCE per doc
+        # (a UNION ALL of n selects would inline the CTE and recompute the
+        # md5 minhashes n times — Catalyst does not materialize CTEs)
+        mh_array = "array(" + ", ".join(f"mh{j}" for j in range(n_bands)) + ")"
+        bands = (
+            f"SELECT doc_id, band, band_key FROM sigs "
+            f"LATERAL VIEW posexplode({mh_array}) t AS band, band_key"
+        )
+    else:
+        bands = "\nUNION ALL\n".join(
+            f"SELECT doc_id, {j} AS band, mh{j} AS band_key FROM sigs"
+            for j in range(n_bands)
+        )
+    return f"""sigs AS (SELECT doc_id, {mh_cols} FROM {ds}),
+bands_raw AS ({bands}),
 bands AS (
   SELECT doc_id, band, band_key FROM (
     SELECT doc_id, band, band_key,
            row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS _rnk
     FROM bands_raw
-  ) capped WHERE _rnk <= {cap}
+  ) capped WHERE _rnk <= {BAND_CAP}
 )"""
+
+
+def _lsh_candidates(d: Dialect, ds: str) -> str:
+    """The verified-Jaccard family's candidate stage over ``ds``: capped
+    JACCARD_BANDS bands, then the distinct candidate pairs `cands`."""
+    return f"""{_lsh_bands(d, ds, JACCARD_BANDS)},
+cands AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  {_BAND_PAIRS}
+)"""
+
+
+def _jaccard_exprs(d: Dialect) -> tuple[str, str, str]:
+    if d.name == "spark":
+        return "size(array_intersect(a.sh, b.sh))", "size(a.sh)", "size(b.sh)"
+    return "len(list_intersect(a.sh, b.sh))", "len(a.sh)", "len(b.sh)"
+
+
+def _near_dup(d: Dialect) -> str:
+    """The verify rule for a pair joined to its shingle sets as `a`, `b`:
+    exact shingle Jaccard >= JACCARD_MIN."""
+    inter, alen, blen = _jaccard_exprs(d)
+    return f"CAST({inter} AS DOUBLE) / ({alen} + {blen} - {inter}) >= {JACCARD_MIN}"
 
 
 def build_minhash_lsh_pairs(d: Dialect) -> str:
@@ -277,35 +351,35 @@ def build_minhash_lsh_pairs(d: Dialect) -> str:
     -> pair aggregate. This is the LSH shape that scales: the corpus is
     never cross-joined, and no bucket exceeds BAND_CAP members.
     """
-    w = _words(d)
-    sh = d.shingles("ws", 3)
-    mh_cols = ", ".join(
-        d.array_min(d.array_transform("sh", "s", d.md5(f"'{j}:' || s"))) + f" AS mh{j}"
-        for j in range(8)
+    shingles = (
+        f"(SELECT doc_id, {d.shingles('ws', 3)} AS sh "
+        f"FROM (SELECT doc_id, {_words(d)} AS ws FROM documents))"
     )
-    mh_array = "array(" + ", ".join(f"mh{j}" for j in range(8)) + ")"
-    if d.name == "spark":
-        # posexplode of the signature array: sigs evaluated ONCE per doc
-        # (a UNION ALL of 8 selects would inline the CTE and recompute the
-        # md5 minhashes 8x — Catalyst does not materialize CTEs)
-        bands = (
-            f"SELECT doc_id, band, band_key FROM sigs "
-            f"LATERAL VIEW posexplode({mh_array}) t AS band, band_key"
-        )
-    else:
-        bands = "\nUNION ALL\n".join(
-            f"SELECT doc_id, {j} AS band, mh{j} AS band_key FROM sigs" for j in range(8)
-        )
     return f"""
-WITH sigs AS (
-  SELECT doc_id, {mh_cols}
-  FROM (SELECT doc_id, {sh} AS sh FROM (SELECT doc_id, {w} AS ws FROM documents))
-),
-{_capped_bands(bands)}
+WITH {_lsh_bands(d, shingles, LSH_BANDS)}
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared_bands
-FROM bands a JOIN bands b
-  ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
+{_BAND_PAIRS}
 GROUP BY a.doc_id, b.doc_id
+"""
+
+
+def _ngram_jaccard_top(d: Dialect, ds: str) -> str:
+    inter, alen, blen = _jaccard_exprs(d)
+    return f"""{_lsh_candidates(d, ds)},
+verified AS (
+  SELECT c.doc_a, c.doc_b,
+         {inter} AS shared,
+         {alen} AS na,
+         {blen} AS nb
+  FROM cands c
+  JOIN {ds} a ON a.doc_id = c.doc_a
+  JOIN {ds} b ON b.doc_id = c.doc_b
+)
+SELECT doc_a, doc_b, shared,
+       CAST(shared AS DOUBLE) / (na + nb - shared) AS jaccard
+FROM verified
+ORDER BY CAST(shared AS DOUBLE) / (na + nb - shared) DESC, doc_a, doc_b
+LIMIT 20
 """
 
 
@@ -317,28 +391,11 @@ def q_ngram_jaccard_top(d: Dialect) -> str:
     A raw inverted-index shingle self-join is quadratic in per-shingle
     document frequency (avg df ~20 at sf0.1 -> ~10M pair rows); LSH bounds
     the verify stage to actual near-duplicate candidates. The candidate
-    stage is the SHARED _lsh_jaccard_ctes block (also used by lsh_recall,
-    build_verified_pairs, dedup_components), so recall measurements and
-    the component graph provably exercise the same plan.
+    stage is the SHARED _lsh_candidates block (also used by lsh_recall,
+    build_verified_pairs, corpus_curation, dedup_components), so recall
+    measurements and the component graph provably exercise the same plan.
     """
-    inter, alen, blen = _jaccard_exprs(d)
-    return f"""
-WITH {_lsh_jaccard_ctes(d)},
-verified AS (
-  SELECT c.doc_a, c.doc_b,
-         {inter} AS shared,
-         {alen} AS na,
-         {blen} AS nb
-  FROM cands c
-  JOIN ds a ON a.doc_id = c.doc_a
-  JOIN ds b ON b.doc_id = c.doc_b
-)
-SELECT doc_a, doc_b, shared,
-       CAST(shared AS DOUBLE) / (na + nb - shared) AS jaccard
-FROM verified
-ORDER BY CAST(shared AS DOUBLE) / (na + nb - shared) DESC, doc_a, doc_b
-LIMIT 20
-"""
+    return f"\nWITH ds AS ({_shingle_sets(d)}),\n{_ngram_jaccard_top(d, 'ds')}"
 
 
 SIMHASH_BANDS = 4  # 16 bits each -> 64-bit fingerprint
@@ -375,7 +432,7 @@ def q_dedup_simhash(d: Dialect) -> str:
     (round-4 VERDICT discipline), and pair fan-out is bounded by cap^2/2
     per bucket. Verification joins the capped pair set back to sigs on
     doc_id equi-keys. Same recall tradeoff as the MinHash BAND_CAP,
-    documented there (_capped_bands): members beyond the cap lose that
+    documented there (_lsh_bands): members beyond the cap lose that
     bucket's pairs but remain candidates via their other 3 bands."""
     w = _words(d)
     wmd = d.array_transform("ws", "x", d.md5("x"))
@@ -457,59 +514,43 @@ WHERE {hamming} <= {SIMHASH_HAM_MAX}
 """
 
 
-def _lsh_jaccard_ctes(d: Dialect, n_bands: int = 4) -> str:
-    """Shared CTE block: distinct 3-word shingles per doc (ds), minhash
-    signatures (sigs), capped band rows (bands), and the distinct LSH
-    candidate pairs (cands) — the exact candidate-generation stage that
-    dedup_ngram_jaccard / corpus_curation / dedup_components run."""
-    w = _words(d)
-    sh = d.array_distinct(d.shingles("ws", 3))
-    mh_cols = ", ".join(
-        d.array_min(d.array_transform("sh", "s", d.md5(f"'{j}:' || s"))) + f" AS mh{j}"
-        for j in range(n_bands)
-    )
-    mh_array = "array(" + ", ".join(f"mh{j}" for j in range(n_bands)) + ")"
-    if d.name == "spark":
-        bands = (
-            f"SELECT doc_id, band, band_key FROM sigs "
-            f"LATERAL VIEW posexplode({mh_array}) t AS band, band_key"
-        )
-    else:
-        bands = "\nUNION ALL\n".join(
-            f"SELECT doc_id, {j} AS band, mh{j} AS band_key FROM sigs"
-            for j in range(n_bands)
-        )
-    return f"""ds AS (
-  SELECT doc_id, {sh} AS sh FROM (SELECT doc_id, {w} AS ws FROM documents)
-),
-sigs AS (SELECT doc_id, {mh_cols} FROM ds),
-{_capped_bands(bands)},
-cands AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-)"""
-
-
-def _jaccard_exprs(d: Dialect) -> tuple[str, str, str]:
-    if d.name == "spark":
-        return "size(array_intersect(a.sh, b.sh))", "size(a.sh)", "size(b.sh)"
-    return "len(list_intersect(a.sh, b.sh))", "len(a.sh)", "len(b.sh)"
-
-
-def build_verified_pairs(d: Dialect, threshold: float = 0.5) -> str:
-    """All LSH-candidate pairs verified at exact shingle-Jaccard >=
-    threshold — the edge set of the near-duplicate graph (used by
-    dedup_components; corpus_curation inlines the same logic)."""
-    inter, alen, blen = _jaccard_exprs(d)
-    return f"""
-WITH {_lsh_jaccard_ctes(d)}
-SELECT c.doc_a, c.doc_b
+def _verified_pairs(d: Dialect, ds: str) -> str:
+    """The near-dup edge list: `cands` verified against ``ds``."""
+    return f"""SELECT c.doc_a, c.doc_b
 FROM cands c
-JOIN ds a ON a.doc_id = c.doc_a
-JOIN ds b ON b.doc_id = c.doc_b
-WHERE CAST({inter} AS DOUBLE) / ({alen} + {blen} - {inter}) >= {threshold}
+JOIN {ds} a ON a.doc_id = c.doc_a
+JOIN {ds} b ON b.doc_id = c.doc_b
+WHERE {_near_dup(d)}"""
+
+
+def build_verified_pairs(d: Dialect) -> str:
+    """All LSH-candidate pairs verified at exact shingle-Jaccard >=
+    JACCARD_MIN — the edge set of the near-duplicate graph (used by
+    dedup_components)."""
+    return f"""
+WITH ds AS ({_shingle_sets(d)}),
+{_lsh_candidates(d, 'ds')}
+{_verified_pairs(d, 'ds')}
 """
+
+
+def _exact_pairs(d: Dialect, ds: str) -> tuple[str, str]:
+    """lsh_recall's exhaustive exact side over ``ds``: the inv / xpairs
+    CTEs (every pair sharing a shingle) and the SELECT verifying them."""
+    if d.name == "spark":
+        inv = f"SELECT doc_id, s FROM {ds} LATERAL VIEW explode(sh) t AS s"
+    else:
+        inv = f"SELECT doc_id, unnest(sh) AS s FROM {ds}"
+    ctes = f"""inv AS ({inv}),
+xpairs AS (
+  SELECT DISTINCT i.doc_id AS doc_a, j.doc_id AS doc_b
+  FROM inv i JOIN inv j ON i.s = j.s AND i.doc_id < j.doc_id
+)"""
+    return ctes, f"""SELECT p.doc_a, p.doc_b
+  FROM xpairs p
+  JOIN {ds} a ON a.doc_id = p.doc_a
+  JOIN {ds} b ON b.doc_id = p.doc_b
+  WHERE {_near_dup(d)}"""
 
 
 def q_lsh_recall(d: Dialect) -> str:
@@ -518,31 +559,20 @@ def q_lsh_recall(d: Dialect) -> str:
     |exact pairs|, in one row.
 
     The exact side is a shingle inverted-index self-join — any pair with
-    Jaccard >= 0.5 shares at least one shingle, so the inverted index is
-    EXHAUSTIVE (no candidate generation bias). That self-join is quadratic
-    in per-shingle document frequency, which is why it is the measurement
-    harness at small sf and NOT the production path: the capped-LSH plan is,
-    and this query states how much recall the caps actually cost (measured
-    1.0 at sf0.001/sf0.01 — see BAND_CAP docstring).
+    Jaccard >= JACCARD_MIN shares at least one shingle, so the inverted
+    index is EXHAUSTIVE (no candidate generation bias). That self-join is
+    quadratic in per-shingle document frequency, which is why it is the
+    measurement harness at small sf and NOT the production path: the
+    capped-LSH plan is, and this query states how much recall the caps
+    actually cost (measured 1.0 at sf0.001/sf0.01 — see _lsh_bands).
     """
-    inter, alen, blen = _jaccard_exprs(d)
-    if d.name == "spark":
-        inv = "SELECT doc_id, s FROM ds LATERAL VIEW explode(sh) t AS s"
-    else:
-        inv = "SELECT doc_id, unnest(sh) AS s FROM ds"
+    exact_ctes, exact = _exact_pairs(d, "ds")
     return f"""
-WITH {_lsh_jaccard_ctes(d)},
-inv AS ({inv}),
-xpairs AS (
-  SELECT DISTINCT i.doc_id AS doc_a, j.doc_id AS doc_b
-  FROM inv i JOIN inv j ON i.s = j.s AND i.doc_id < j.doc_id
-),
+WITH ds AS ({_shingle_sets(d)}),
+{_lsh_candidates(d, 'ds')},
+{exact_ctes},
 exact AS (
-  SELECT p.doc_a, p.doc_b
-  FROM xpairs p
-  JOIN ds a ON a.doc_id = p.doc_a
-  JOIN ds b ON b.doc_id = p.doc_b
-  WHERE CAST({inter} AS DOUBLE) / ({alen} + {blen} - {inter}) >= 0.5
+  {exact}
 ),
 hits AS (
   SELECT count(*) AS n_hits
@@ -763,9 +793,25 @@ LEFT JOIN hits h ON d0.doc_id = h.doc_id
 """
 
 
+def _curation_survivors(d: Dialect, ds: str) -> str:
+    """corpus_curation's candidate, verify and duplicate-drop stages over
+    the quality-gated shingle sets in ``ds``."""
+    return f"""{_lsh_candidates(d, ds)},
+dups AS (
+  SELECT c.doc_b AS drop_id
+  FROM cands c
+  JOIN {ds} a ON a.doc_id = c.doc_a
+  JOIN {ds} b ON b.doc_id = c.doc_b
+  WHERE {_near_dup(d)}
+)
+SELECT doc_id, lang, n_chars FROM {ds}
+WHERE NOT EXISTS (SELECT 1 FROM dups WHERE dups.drop_id = {ds}.doc_id)
+"""
+
+
 def q_corpus_curation(d: Dialect) -> str:
     """The composed training-data curation pipeline in one plan: quality
-    gate -> LSH near-dup candidates -> exact-Jaccard verify (>= 0.5) ->
+    gate -> LSH near-dup candidates -> exact-Jaccard verify (>= JACCARD_MIN) ->
     drop non-canonical duplicates (keep the lowest doc_id of each verified
     pair). Output: the surviving corpus with per-doc metadata.
 
@@ -781,57 +827,16 @@ def q_corpus_curation(d: Dialect) -> str:
     (same shape as dedup_incremental). Plan-asserted in
     tests/test_plan_quality.py.
     """
-    w = _words(d)
-    sh = d.array_distinct(d.shingles("ws", 3))
-    en = ", ".join(f"'{t}'" for t in STOPWORDS["en"])
-    mh_cols = ", ".join(
-        d.array_min(d.array_transform("sh", "s", d.md5(f"'{j}:' || s"))) + f" AS mh{j}"
-        for j in range(4)
-    )
-    mh_array = "array(" + ", ".join(f"mh{j}" for j in range(4)) + ")"
-    if d.name == "spark":
-        bands = (
-            "SELECT doc_id, band, band_key FROM sigs "
-            f"LATERAL VIEW posexplode({mh_array}) t AS band, band_key"
-        )
-        inter = "size(array_intersect(a.sh, b.sh))"
-        alen = "size(a.sh)"
-        blen = "size(b.sh)"
-    else:
-        bands = "\nUNION ALL\n".join(
-            f"SELECT doc_id, {j} AS band, mh{j} AS band_key FROM sigs" for j in range(4)
-        )
-        inter = "len(list_intersect(a.sh, b.sh))"
-        alen = "len(a.sh)"
-        blen = "len(b.sh)"
     return f"""
 WITH base AS (
-  SELECT doc_id, lang, n_chars, {w} AS ws FROM documents
+  SELECT doc_id, lang, n_chars, {_words(d)} AS ws FROM documents
 ),
 quality AS (
   SELECT doc_id, lang, n_chars, ws FROM base
-  WHERE {d.array_len("ws")} >= 20
-    AND CAST({d.array_filter_count("ws", "x", f"x IN ({en})")} AS DOUBLE)
-        / {d.array_len("ws")} >= 0.02
+  WHERE {_quality_gate(d)}
 ),
-ds AS (SELECT doc_id, lang, n_chars, {sh} AS sh FROM quality),
-sigs AS (SELECT doc_id, {mh_cols} FROM ds),
-{_capped_bands(bands)},
-cands AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-),
-dups AS (
-  SELECT c.doc_b AS drop_id
-  FROM cands c
-  JOIN ds a ON a.doc_id = c.doc_a
-  JOIN ds b ON b.doc_id = c.doc_b
-  WHERE CAST({inter} AS DOUBLE) / ({alen} + {blen} - {inter}) >= 0.5
-)
-SELECT doc_id, lang, n_chars FROM ds
-WHERE NOT EXISTS (SELECT 1 FROM dups WHERE dups.drop_id = ds.doc_id)
-"""
+ds AS (SELECT doc_id, lang, n_chars, {d.array_distinct(d.shingles("ws", 3))} AS sh FROM quality),
+{_curation_survivors(d, 'ds')}"""
 
 
 def q_rolling_hash(d: Dialect) -> str:

@@ -139,7 +139,7 @@ def _assign_fn(cents: dict[int, list[int]], pass_cols: list[str]):
     return fn
 
 
-def _trained_centroids(spark: SparkSession, base: DataFrame):
+def _trained_centroids(base: DataFrame):
     """Run the {KMEANS_ITERS} exact Lloyd iterations over the
     materialized base table; returns the final centroid dict (exact ints
     on the template's 1e6 grid), or {} when there are no seed rows."""
@@ -187,7 +187,7 @@ def kmeans_ivf_build_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = materialize(emb.selectExpr("vec_id", *_quant_exprs()))
-    cents = _trained_centroids(spark, base)
+    cents = _trained_centroids(base)
     if not cents:
         return spark.createDataFrame(
             [], "qid bigint, nid bigint, cell bigint, qdist bigint"
@@ -240,7 +240,7 @@ def dedup_semantic_cells_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = materialize(emb.selectExpr("vec_id", *_quant_exprs(), *_e_exprs()))
-    cents = _trained_centroids(spark, base)
+    cents = _trained_centroids(base)
     if not cents:
         return spark.createDataFrame([], "vec_id bigint, cell bigint")
     a_schema = "vec_id bigint, cell bigint, " + ", ".join(

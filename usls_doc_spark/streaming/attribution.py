@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .events import EVENTS_SCHEMA
-from .sentinel import stage_events, write_events_file
+from .sentinel import DATA_MTIME, stage_events, write_events_file
 from .sink import drain, file_stream, read_sink_or_empty, start_sink
 
 ATTRIBUTION_OUT_SCHEMA = (
@@ -120,12 +120,11 @@ def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 SENTINEL_USER = -1  # never a real user_id (synth user ids are >= 0)
 
 
-def write_watermark_sentinels(events_dir: str, max_ts, waves=(7, 11),
-                              mtime_base: int = 2_000_000_000) -> None:
+def write_watermark_sentinels(events_dir: str, max_ts) -> None:
     """Write one tiny parquet file per sentinel wave into ``events_dir``:
-    a matching view+purchase pair for SENTINEL_USER at max_ts + <wave>
-    hours, with pinned ascending mtimes so the file source triggers them
-    AFTER the real data.
+    a matching view+purchase pair for SENTINEL_USER at max_ts + 7 h and
+    max_ts + 11 h, with pinned ascending mtimes so the file source
+    triggers them AFTER the real data.
 
     Why two waves: Structured Streaming applies the watermark computed at
     the END of batch N during batch N+1 — wave 1 advances the watermark
@@ -136,14 +135,14 @@ def write_watermark_sentinels(events_dir: str, max_ts, waves=(7, 11),
     optional no-data micro-batch racing the drain's end."""
     # driver-side pyarrow writes (round 8): a Spark write job per 2-row
     # wave measured ~5 s of pure overhead — see streaming/sentinel.py
-    for i, hours in enumerate(waves):
+    for i, hours in enumerate((7, 11)):
         ts = max_ts + timedelta(hours=hours)
         rows = [
             (-(2 * i + 1), ts, SENTINEL_USER, "view", 0.0, ""),
             (-(2 * i + 2), ts, SENTINEL_USER, "purchase", 0.0, ""),
         ]
         write_events_file(
-            f"{events_dir}/sentinel{i}.parquet", rows, mtime_base + i + 1
+            f"{events_dir}/sentinel{i}.parquet", rows, DATA_MTIME + i + 1
         )
 
 

@@ -11,7 +11,7 @@ against the stream as they arrive, FineWeb/CCNet-style).
 
 Why this converges EXACTLY to the batch answer: the batch plan caps each
 (band, band_key) bucket at the BAND_CAP smallest doc_ids (text_queries.
-_capped_bands — the skew bound that keeps a hot boilerplate bucket from
+_lsh_bands — the skew bound that keeps a hot boilerplate bucket from
 exploding into k² pairs). "Keep the k smallest ids of everything seen"
 is an order-insensitive, merge-associative FOLD: an id evicted early can
 never re-enter (the k smaller ids that evicted it are still present), so
@@ -44,11 +44,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.dialect import SPARK
-from ..operators.text_queries import BAND_CAP
+from ..operators.text_queries import BAND_CAP, LSH_BANDS, _minhashes
 from .dedup import DOCS_SCHEMA
 from .sink import drain, file_stream, read_sink_or_empty, start_sink
-
-N_BANDS = 8  # must match build_minhash_lsh_pairs (8 md5 minhashes)
 
 OUTPUT_SCHEMA = "band int, band_key string, members string, n_seen bigint"
 STATE_SCHEMA = "members string, n_seen bigint"
@@ -56,18 +54,14 @@ STATE_SCHEMA = "members string, n_seen bigint"
 _QUERY_NAME = "usls_stream_dedup_minhash"
 
 
-def _signature_array_expr() -> str:
-    """The Spark-dialect rendering of the batch sigs CTE's signature array:
-    array(mh0..mh7) where mh_j = array_min(transform(shingles, s ->
-    md5('j:' || s))) — rendered by the SAME Dialect methods the batch/
-    oracle template uses, so the streaming twin cannot drift."""
+def _signature_array_expr() -> tuple[str, str, str]:
+    """The Spark-dialect rendering of the batch sigs CTE's signature array
+    array(mh0..mh7), with the word and shingle expressions it reads —
+    rendered by the SAME renderers the batch/oracle template uses, so the
+    streaming twin cannot drift."""
     ws = SPARK.split("text")
     sh = SPARK.shingles("ws", 3)
-    mh = ", ".join(
-        SPARK.array_min(SPARK.array_transform("sh", "s", SPARK.md5(f"'{j}:' || s")))
-        for j in range(N_BANDS)
-    )
-    return f"array({mh})", ws, sh
+    return "array(" + ", ".join(_minhashes(SPARK, LSH_BANDS)) + ")", ws, sh
 
 
 def _bucket_fold(key, pdfs, state: GroupState):

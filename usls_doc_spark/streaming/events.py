@@ -52,7 +52,7 @@ from datetime import timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sentinel import stage_events, write_events_file
+from .sentinel import DATA_MTIME, stage_events, write_events_file
 from .sink import drain, file_stream, read_sink_or_empty, start_sink
 
 EVENTS_SCHEMA = (
@@ -81,8 +81,8 @@ def state_rows_removed(q) -> int:
     )
 
 
-def write_window_sentinels(events_dir: str, max_ts, waves=(8, 12),
-                           mtime_base: int = 2_000_000_000) -> None:
+def write_window_sentinels(events_dir: str, max_ts,
+                           mtime_base: int = DATA_MTIME) -> None:
     """Write one tiny parquet file per sentinel wave into ``events_dir``:
     a single ``__wm__`` event at max_ts + <wave> hours, with pinned
     ascending mtimes so the file source triggers them AFTER the real
@@ -92,7 +92,7 @@ def write_window_sentinels(events_dir: str, max_ts, waves=(8, 12),
     the batch that applies it (see module docstring). Files are written
     driver-side via pyarrow (round 8 — a Spark write job per 1-row wave
     measured ~5 s of pure overhead; see streaming/sentinel.py)."""
-    for i, hours in enumerate(waves):
+    for i, hours in enumerate((8, 12)):
         ts = max_ts + timedelta(hours=hours)
         write_events_file(
             f"{events_dir}/sentinel{i}.parquet",

@@ -31,6 +31,9 @@ import pyarrow.parquet as pq
 
 from .sink import temp_dir
 
+DATA_MTIME = 2_000_000_000  # pinned mtime of the staged data file; sentinel
+#                             waves follow it at DATA_MTIME + 1, + 2, ...
+
 _EVENTS_ARROW_SCHEMA = pa.schema(
     [
         ("event_id", pa.int64()),
@@ -63,7 +66,7 @@ def stage_events(sf_dir: str, write_sentinels) -> str:
     src = f"{sf_dir}/events.parquet"
     events_dir = temp_dir("usls_stream_events_")
     shutil.copy(src, f"{events_dir}/batch0.parquet")
-    os.utime(f"{events_dir}/batch0.parquet", (2_000_000_000, 2_000_000_000))
+    os.utime(f"{events_dir}/batch0.parquet", (DATA_MTIME, DATA_MTIME))
     max_ts = pc.max(pq.read_table(src, columns=["ts"]).column("ts")).as_py()
     write_sentinels(events_dir, max_ts)
     return events_dir
