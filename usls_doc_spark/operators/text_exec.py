@@ -317,10 +317,10 @@ def lsh_recall_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row answer. The exec materializes each stage once; the candidate
     and exact stages are the template's own renderers over the view and
     the counts and the single recall division are the template's text
-    verbatim, so the one output row is identical. The inv self-join stays by design — it is the
-    EXHAUSTIVE exact side that makes this the measurement harness
-    (docstring of the template); materialization removes only the
-    re-execution."""
+    verbatim, so the one output row is identical. The inv self-join
+    stays by design — it is the EXHAUSTIVE exact side that makes this
+    the measurement harness (docstring of the template); materialization
+    removes only the re-execution."""
     from ..queries import _register_views
 
     _register_views(spark, sf_dir)
@@ -355,8 +355,9 @@ def corpus_curation_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _register_views(spark, sf_dir)
     d = SPARK
+    sh = d.array_distinct(d.shingles("ws", 3))
     materialize(spark.sql(f"""
-SELECT doc_id, lang, n_chars, {d.array_distinct(d.shingles("ws", 3))} AS sh FROM (
+SELECT doc_id, lang, n_chars, {sh} AS sh FROM (
   SELECT doc_id, lang, n_chars, ws FROM (
     SELECT doc_id, lang, n_chars, {_words(d)} AS ws FROM documents
   ) base

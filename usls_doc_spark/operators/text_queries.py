@@ -811,9 +811,10 @@ WHERE NOT EXISTS (SELECT 1 FROM dups WHERE dups.drop_id = {ds}.doc_id)
 
 def q_corpus_curation(d: Dialect) -> str:
     """The composed training-data curation pipeline in one plan: quality
-    gate -> LSH near-dup candidates -> exact-Jaccard verify (>= JACCARD_MIN) ->
-    drop non-canonical duplicates (keep the lowest doc_id of each verified
-    pair). Output: the surviving corpus with per-doc metadata.
+    gate -> LSH near-dup candidates -> exact-Jaccard verify (>=
+    JACCARD_MIN) -> drop non-canonical duplicates (keep the lowest doc_id
+    of each verified pair). Output: the surviving corpus with per-doc
+    metadata.
 
     This is the operators' intended composition (what a 100 TB curation run
     executes); each stage is individually oracled elsewhere, this checks
@@ -827,6 +828,7 @@ def q_corpus_curation(d: Dialect) -> str:
     (same shape as dedup_incremental). Plan-asserted in
     tests/test_plan_quality.py.
     """
+    sh = d.array_distinct(d.shingles("ws", 3))
     return f"""
 WITH base AS (
   SELECT doc_id, lang, n_chars, {_words(d)} AS ws FROM documents
@@ -835,7 +837,7 @@ quality AS (
   SELECT doc_id, lang, n_chars, ws FROM base
   WHERE {_quality_gate(d)}
 ),
-ds AS (SELECT doc_id, lang, n_chars, {d.array_distinct(d.shingles("ws", 3))} AS sh FROM quality),
+ds AS (SELECT doc_id, lang, n_chars, {sh} AS sh FROM quality),
 {_curation_survivors(d, 'ds')}"""
 
 
